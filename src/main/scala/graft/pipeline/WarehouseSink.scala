@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** The stage-4 seam (round-15 verdict #5 / "what's missing #1"): the
   * reference's importer is a WAREHOUSE LOAD — clean CSV + explicit JSON
@@ -19,13 +20,30 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *     schema-before-data ordering hazard of SURVEY §3 stays the
   *     caller's responsibility), truncate-replaces the destination, and
   *     returns the rows loaded BY THIS JOB (`output_rows` parity,
-  *     main.py:41-43);
+  *     main.py:41-43) — counted on the write itself, never by a second
+  *     scan of the destination;
   *   - [[read]] returns the destination relation for downstream stages
-  *     and verification.
+  *     and verification, under the same explicit schema where the
+  *     destination is a path, so obtaining it runs no Spark job.
   */
 trait WarehouseSink {
   def load(spark: SparkSession, layout: Pipeline.Layout, table: String): Long
   def read(spark: SparkSession, layout: Pipeline.Layout, table: String): DataFrame
+}
+
+object WarehouseSink {
+  /** Truncate-write `table`'s clean CSV through `save` and return the rows
+    * written, observed on the write job itself (one Spark job in all).
+    * `Observation.get` returns only once the write has succeeded; a
+    * failed write throws before any count is read.
+    */
+  private[pipeline] def observedLoad(spark: SparkSession, layout: Pipeline.Layout, table: String)(
+      save: DataFrameWriter[Row] => Unit): Long = {
+    val rows = Observation()
+    save(Pipeline.readClean(spark, layout, table).observe(rows, count(lit(1)).as("rows"))
+      .write.mode(SaveMode.Overwrite))
+    rows.get("rows").asInstanceOf[Long]
+  }
 }
 
 /** The local parquet stand-in — the default destination this sandbox can
@@ -33,13 +51,10 @@ trait WarehouseSink {
   * truncate-overwrite per run.
   */
 object ParquetWarehouseSink extends WarehouseSink {
-  override def load(spark: SparkSession, layout: Pipeline.Layout, table: String): Long = {
-    Pipeline.readClean(spark, layout, table)
-      .write.mode(SaveMode.Overwrite).parquet(layout.warehouse(table))
-    read(spark, layout, table).count()
-  }
+  override def load(spark: SparkSession, layout: Pipeline.Layout, table: String): Long =
+    WarehouseSink.observedLoad(spark, layout, table)(_.parquet(layout.warehouse(table)))
   override def read(spark: SparkSession, layout: Pipeline.Layout, table: String): DataFrame =
-    spark.read.parquet(layout.warehouse(table))
+    spark.read.schema(Pipeline.declaredSchema(spark, layout, table)).parquet(layout.warehouse(table))
 }
 
 /** Catalog-table destination (`WRITE_TRUNCATE` ≡
@@ -47,11 +62,8 @@ object ParquetWarehouseSink extends WarehouseSink {
   * stand-in.
   */
 object CatalogWarehouseSink extends WarehouseSink {
-  override def load(spark: SparkSession, layout: Pipeline.Layout, table: String): Long = {
-    Pipeline.readClean(spark, layout, table)
-      .write.mode(SaveMode.Overwrite).saveAsTable(table)
-    spark.table(table).count()
-  }
+  override def load(spark: SparkSession, layout: Pipeline.Layout, table: String): Long =
+    WarehouseSink.observedLoad(spark, layout, table)(_.saveAsTable(table))
   override def read(spark: SparkSession, layout: Pipeline.Layout, table: String): DataFrame =
     spark.table(table)
 }

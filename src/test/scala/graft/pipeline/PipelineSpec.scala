@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
@@ -31,6 +31,13 @@ class PipelineSpec extends SparkSpec {
     SchemaColumn("name", "varchar(25)"),
     SchemaColumn("amount", "double"),
     SchemaColumn("created_at", "datetime"))
+
+  /** Stages 1-3 for the users rows: the clean CSV and JSON schema a load reads. */
+  private def stageClean(layout: Pipeline.Layout, table: String): Unit = {
+    Pipeline.exportStage(spark, usersDf, usersTypes, layout, table)
+    Pipeline.cleanSchemaStage(spark, layout, table)
+    Pipeline.cleanDataStage(spark, layout, table)
+  }
 
   test("schema stage emits reference-shaped BQ JSON (golden)") {
     val layout = freshLayout()
@@ -69,14 +76,74 @@ class PipelineSpec extends SparkSpec {
 
   test("loadToTable: WRITE_TRUNCATE semantics via saveAsTable overwrite") {
     val layout = freshLayout()
-    Pipeline.exportStage(spark, usersDf, usersTypes, layout, "users_tbl")
-    Pipeline.cleanSchemaStage(spark, layout, "users_tbl")
-    Pipeline.cleanDataStage(spark, layout, "users_tbl")
+    stageClean(layout, "users_tbl")
     val n1 = Pipeline.loadToTable(spark, layout, "users_tbl")
     val n2 = Pipeline.loadToTable(spark, layout, "users_tbl") // truncate, not append
     assert(n1 == 3 && n2 == 3)
     assert(spark.table("users_tbl").count() == 3)
     spark.sql("DROP TABLE users_tbl")
+  }
+
+  /** Run `body` in a fresh job group; returns its result and the
+    * properties of every Spark job it started (session SQL confs are
+    * propagated into them, so they show the conf each job ran under).
+    */
+  private def jobsOf[T](body: => T): (T, Seq[java.util.Properties]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val props = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group).foreach(props.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val out =
+      try {
+        sc.setJobGroup(group, "PipelineSpec job count")
+        try body
+        finally sc.clearJobGroup()
+      } finally {
+        org.apache.spark.sql.GraftShim.drainListenerBus(spark)
+        sc.removeSparkListener(listener)
+      }
+    (out, props.toArray(Array.empty[java.util.Properties]).toSeq)
+  }
+
+  test("loadStage with the default sink is one Spark job; the relation keeps the declared schema") {
+    val layout = freshLayout()
+    stageClean(layout, "users")
+    val (out, jobs) = jobsOf(Pipeline.loadStage(spark, layout, "users"))
+    assert(jobs.size == 1, s"loadStage ran ${jobs.size} Spark jobs")
+    assert(out.schema == Pipeline.readClean(spark, layout, "users").schema)
+  }
+
+  test("zero-row source: runTable reports 0 loaded and leaves an empty table with the declared schema") {
+    val layout = freshLayout()
+    var loaded = -1L
+    val recording = new WarehouseSink {
+      def load(spark: SparkSession, layout: Pipeline.Layout, table: String): Long = {
+        loaded = ParquetWarehouseSink.load(spark, layout, table)
+        loaded
+      }
+      def read(spark: SparkSession, layout: Pipeline.Layout, table: String): DataFrame =
+        ParquetWarehouseSink.read(spark, layout, table)
+    }
+    val out = Pipeline.runTable(spark, usersDf.limit(0), usersTypes, layout, "users_empty", sink = recording)
+    assert(loaded == 0L)
+    assert(out.schema == Pipeline.readClean(spark, layout, "users_empty").schema)
+    assert(out.count() == 0L)
+    // readable without the declared schema too: the empty write left a footer
+    val bare = spark.read.parquet(layout.warehouse("users_empty"))
+    assert(bare.schema == out.schema && bare.count() == 0L)
+  }
+
+  test("the sink's observed row count equals a direct count of the clean CSV lines (incl. NULL row)") {
+    val layout = freshLayout()
+    stageClean(layout, "users")
+    val lines = spark.read.text(layout.cleanCsv("users")).count()
+    assert(lines == 3L)
+    assert(ParquetWarehouseSink.load(spark, layout, "users") == lines)
   }
 
   test("retention sweep deletes only dated dirs older than cutoff") {
@@ -97,14 +164,20 @@ class PipelineSpec extends SparkSpec {
     val wh = java.nio.file.Files.createTempDirectory("whpart").toString + "/users"
     def loadDate(date: String): Unit = {
       val l = Pipeline.Layout(java.nio.file.Files.createTempDirectory("pd").toString, date)
-      Pipeline.exportStage(spark, usersDf, usersTypes, l, "users")
-      Pipeline.cleanSchemaStage(spark, l, "users")
-      Pipeline.cleanDataStage(spark, l, "users")
+      stageClean(l, "users")
       Pipeline.loadPartitioned(spark, l, "users", wh)
     }
+    val mode = "spark.sql.sources.partitionOverwriteMode"
+    val confBefore = spark.conf.getOption(mode)
     loadDate("2024-01-01")
-    loadDate("2024-01-02")
+    val (_, jobs) = jobsOf(loadDate("2024-01-02"))
     loadDate("2024-01-02") // idempotent re-run of ONE date
+    // dynamic mode is a per-write option: the shared session conf, which
+    // concurrent loads on other threads read, is never touched — not even
+    // while the write runs (jobs carry the session's explicitly set confs)
+    assert(spark.conf.getOption(mode) == confBefore)
+    val jobModes = jobs.map(p => Option(p.getProperty(mode)))
+    assert(jobModes.nonEmpty && !jobModes.exists(_.exists(_.equalsIgnoreCase("dynamic"))), jobModes)
     val all = spark.read.parquet(wh)
     assert(all.count() == 6) // 3 rows x 2 dates, re-run did not duplicate
     // partition pruning reaches the scan
