@@ -2,217 +2,48 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-/** Benchmark main: times the headline queries on SPARK_GRAFT_SF_DIR and
-  * emits ONE clean JSON line on stdout (plus a detail file on disk —
-  * BENCH_OFFICIAL.json by default, GRAFT_BENCH_DETAIL overrides; see the
-  * EMISSION note). Each query is forced end-to-end through the
-  * `noop` sink — unlike count(), that materializes every column without
-  * collecting to the driver. Failures are reported per-query under
-  * "errors", never as fake timings.
+import scala.collection.mutable
+
+/** Benchmark main: times the registered queries on SPARK_GRAFT_SF_DIR and
+  * emits ONE compact JSON line on stdout plus a detail file on disk
+  * (BENCH_OFFICIAL.json by default, GRAFT_BENCH_DETAIL overrides; the
+  * committed snapshot is refreshed with GRAFT_BENCH_DETAIL=BENCH_LOCAL.json).
+  * Each query is forced end-to-end through the `noop` sink, which
+  * materializes every column without collecting to the driver.
   *
-  * Sampling protocol (v3, "interleaved passes"): the WHOLE suite is run
-  * SAMPLES times and the per-query MIN across passes is reported (total =
-  * sum of mins). Round 3 recorded a 31× phantom on the heaviest query from
-  * transient box load; round 4's min-of-3 CONSECUTIVE samples still
-  * recorded 70× on the last two queries because a multi-minute load spike
-  * covered all three back-to-back samples. Interleaving spreads a query's
-  * samples across the full bench window, so a spike must cover the entire
-  * window to poison a min. Two fixed-work noise probes run before each
-  * pass and are reported verbatim ("probe1_sec" single-thread,
-  * "probe32_sec" across 32 threads): on a quiet box each pass's probes are
-  * flat; inflated probes in pass k say "the box, not the code" for any
-  * query whose pass-k sample is the slow one. "queries_all" carries every
-  * sample so a reader can audit which passes were contaminated.
+  * Protocol `interleaved-passes-v9` (frozen: the tier sets, the build-cost
+  * keys and the sampling scheme change only with a major version bump
+  * shipped alongside a dual-protocol bridge run). Tiers run in this order,
+  * each through `runTier`:
+  *  - main: the 22 headline queries, `Samples` interleaved passes on the
+  *    1-file fixture, then up to `MaxHotRetryPasses` extra passes while
+  *    the box reads hot or drifted, then up to `MaxRescuePasses` rescue
+  *    passes over the `RescueTop` slowest queries (early stop below a 5%
+  *    gain, wall cap `RescueWallCapSec`);
+  *  - split: the same queries over a `SplitFiles`-file copy of every
+  *    table ("queries_split", "mrows_per_sec_split" = primary-input Mrows/s);
+  *  - the cold index builds ("pq_train_sec", "pq_encode_sec",
+  *    "pq_wide_sec", "sparse_index_sec"), timed with
+  *    `graft.artifacts.persist=false` so they measure the build, not a load;
+  *  - ext (`ExtTargets`) and graph (`GraphTargets`) on the 1-file layout.
+  * Every per-query number is the MIN over that query's samples; totals are
+  * sums of mins and compare only within one protocol string.
   *
-  * JSON contract note: "queries" and "errors" are NOT disjoint. A query
-  * that succeeds on an early pass and errors on a later one appears in
-  * BOTH — its min over the valid samples under "queries" (dropping them
-  * would shrink "total" and read as a phantom speedup across rounds) and
-  * its failure under "errors". Readers must not treat presence in
-  * "errors" as "no timing exists".
+  * Before every pass four noise probes run (probe1 single-thread CPU,
+  * probe32 one thread per session core, probe_io fixture read, probe_mem
+  * 128 MB touch). [[BenchGate]] marks each pass quiet or not: "box_hot" =
+  * no quiet pass, "box_drift"/"drift_*" = some tier min came from a
+  * non-quiet pass; split/ext/graph retry up to `MaxTierRetryPasses`
+  * passes while drifted. "total_probe_norm" rescales each sample by
+  * (best probe1 / probe32 of its pass) as a contention-corrected estimate.
   *
-  * Rescue passes (v4): after the interleaved passes, the top-5 queries by
-  * current min — the ones that dominate "total" AND whose long runtimes
-  * make every sample likely to overlap a load spike — get up to 2 extra
-  * timed runs each (probes recorded before each rescue pass, early-stop
-  * when a pass improves their summed mins by <5%, hard wall-clock cap so
-  * a contended box can't stretch the bench unboundedly). Rescue samples
-  * append to "queries_all", so per-query sample counts may exceed
-  * "samples"; "rescue_passes" records how many ran.
-  *
-  * Split-layout tier (v5): the driver fixture stores each table as ONE
-  * parquet row group, so every main-tier scan is a single task and the
-  * timings are fixed-floor dominated — measured ~13× below the same
-  * plan's throughput on a splittable layout (PLANS.md). The bench
-  * therefore rewrites every table as a 32-file layout (identical rows)
-  * and re-times the headliners over it: "queries_split" (min of 2
-  * interleaved passes), "total_split", and "mrows_per_sec_split" =
-  * primary-input Mrows/s per headline — the number comparable to a
-  * multi-split deployment. Probes continue to interleave, appending to
-  * the same probe arrays.
-  *
-  * PROTOCOL VERSIONING: "protocol" names the sampling scheme
-  * ("interleaved-passes-v8"); totals are comparable ONLY within the same
-  * protocol string — v4 added rescue passes (which lower exactly the mins
-  * that dominate "total"), v5 re-defined q_dedup_minhash as its
-  * recall-gate form, v6 swapped that headliner for the bare serving
-  * path q_dedup_minhash_pairs (so bench totals track the engine, not the
-  * correctness gate's exact truth side), and v7 added
-  * q_late_interaction_pq to the EXT tier (headline 22-query set
-  * unchanged — "queries"/"total" remain comparable with v6 in practice;
-  * "total_ext" does not), and v8 moved that query's codebook training
-  * OUT of its timed passes (train-once registry, round-14 verdict #2;
-  * the cold training is reported separately as "pq_train_sec"), so its
-  * ext series measures SERVING cost from v8 on. v9 does the same for
-  * q_sparse_cosine: the signature/champion index comes from the
-  * sparse-index registry (cold build reported as "sparse_index_sec"),
-  * so its ext series is candidate+score+top-k serving cost. Cross-
-  * version deltas partially reflect protocol, not engine, changes.
-  *
-  * v9 IS FROZEN (round 16, closing round-15 verdict #8: v7→v9 landed
-  * mid-series and made round-over-round totals non-comparable, forcing
-  * the round-15 verdict onto quiet-box snapshots). The headline set,
-  * the ext set, the separately-reported build costs, and the sampling
-  * scheme above do not change again without a MAJOR version bump — and
-  * any future v10 must ship with one dual-protocol BRIDGE bench (the
-  * same box, same commit, both protocols, both JSON lines committed)
-  * so the longitudinal series stays continuous across the break.
-  * One ADDITIVE bridge within v9 (round 17, closing the round-16
-  * verdict #3): round 16 folded the wide-ADC layout build into
-  * "pq_encode_sec" (0.507 → 1.09 without an encode change); it now
-  * reports as its own key "pq_wide_sec", so the encode series is
-  * continuous with its ≤r15 history and r16's reading bridges as
-  * encode + wide.
-  *
-  * EMISSION (v6): round 7's single line outgrew the driver's tail-capture
-  * window (BENCH_r07 parsed: null). stdout now carries ONLY a compact
-  * final line — totals, protocol, probe arrays, per-query mins, split
-  * summary, errors — while the full detail (queries_all, per-query split
-  * timings and samples) goes to a disk file referenced by "detail_file".
-  *
-  * SELF-ADJUDICATION (round 9, additive to v6): the round-8 official run
-  * landed on a contended box and the judge had to adjudicate via a
-  * committed snapshot. The primary line now carries what that
-  * adjudication needed in-band:
-  *  - "queries_median" / "total_median" — medians alongside mins: on a
-  *    quiet box median ≈ min; a wide median/min spread marks exactly the
-  *    queries whose passes were contaminated;
-  *  - "total_probe_norm" / "total_split_probe_norm" — each sample is
-  *    scaled by (min probe1 of the run / probe32 of its pass) before the
-  *    per-query min is taken. probe32/probe1 ≈ 1 on a quiet 32-core box,
-  *    so the normalized total ≈ the raw total there, while uniform
-  *    contention (elevated probe32 across passes) is divided back out —
-  *    an ESTIMATE for cross-round comparison under contention, not a
-  *    replacement for the raw totals.
-  * The detail file also moved: the official/driver run writes
-  * BENCH_OFFICIAL.json (gitignored — the round-8 driver run clobbered
-  * the builder's committed BENCH_LOCAL.json in the working tree);
-  * builders refreshing the committed snapshot set
-  * GRAFT_BENCH_DETAIL=BENCH_LOCAL.json explicitly.
-  *
-  * EXTENDED TIER (round 13): "queries_ext"/"total_ext" time the
-  * retrieval + trainer headliners (q_bm25, q_sparse_cosine,
-  * q_kmeans_fused, q_gd_train — BOTH in-engine trainers) as a separate
-  * 2-pass section on the main layout; the 22-query "queries"/"total"
-  * series is untouched, so cross-round comparability of the primary
-  * totals is preserved. Round 13 is the ext tier's first recorded round,
-  * so its 4-query membership is the series baseline.
-  *
-  * GRAPH TIER (round 19, additive within v9 — closing the round-18
-  * verdict #3): "queries_graph"/"total_graph" time the iterative
-  * graph family (q_cc_converged, q_cc_star, q_kcore, q_label_prop) as
-  * their own 2-pass section on the main layout — a NEW key set, so
-  * every frozen v9 series (core, ext, split, build costs) is
-  * untouched. Round 19 is the graph tier's first recorded round; its
-  * 4-query membership is the series baseline.
-  *
-  * DATA-PATH PROBES (round 19, additive within v9): a late-session
-  * rerun read 1.5× slower at IDENTICAL probe1/probe32 readings — the
-  * CPU probes are blind to read-path/memory-side degradation. Each
-  * pass now also records "probe_io_sec" (read+fold every byte of the
-  * fixture's lineitem files — the actual scan input) and
-  * "probe_mem_sec" (allocate+touch 128 MB); min/max land in-band so a
-  * drifted total adjudicates itself against the data path too.
-  *
-  * HOT-BOX GATE (round 18, additive within v9 — closing the round-17
-  * verdict #3): the committed round-17 official artifact was a hot-box
-  * run (probe32_max 0.522, total 1.77× the prior round) rescued only by
-  * side-channel quiet reruns — the committed line must adjudicate
-  * itself. The bench now compares its own parallel-capacity probe
-  * against its single-thread floor: the box reads HOT when probe32_min
-  * > probe_ceiling = 1.6 × probe1_min (on a quiet 32-core box the two
-  * probes are ≈ equal by construction). A hot read triggers up to 2
-  * EXTRA full interleaved passes ("hot_retry_passes"), each re-probed,
-  * stopping as soon as some pass's probes read quiet — so a transient
-  * spike ends with quiet-pass samples in every per-query min. If the
-  * run STAYS hot, "box_hot":true is the in-band verdict: readers (and
-  * the round-over-round series) must treat the totals as
-  * box-contaminated and fall back to total_probe_norm. On a quiet box
-  * zero extra passes run and the emitted numbers are bit-comparable to
-  * v9 history; on a hot box v9 totals were never comparable anyway —
-  * the extra passes only improve the odds the mins reflect the engine.
-  *
-  * GATE EXTENSION (round 20, closing the round-19 verdict #1 weak
-  * mark): BENCH_r19 shipped a 2.13× contended official run stamped
-  * `box_hot:false` — the CPU-only criterion was blind to a memory-side
-  * burst its OWN probe_mem recorded at a 555× spread in the same line.
-  * The criterion now reads ALL the probes ([[BenchGate]], pure and
-  * unit-tested): a pass is QUIET when probe32/probe_io/probe_mem each
-  * sit under their ceiling (CPU: 1.6 × probe1_min; io/mem: 8 × the
-  * run's floored min, mem also absolutely capped at 1 s);
-  * "box_hot" = no pass was quiet, and the new "box_drift" = some
-  * per-query MIN was sampled in a non-quiet pass (the exact r19
-  * failure: quiet-mem passes existed, but the committed numbers came
-  * from the loud ones). Retries fire on either verdict; the io probe's
-  * page cache is warmed before pass 1 so a legitimate cold first read
-  * doesn't adjudicate as contention. Timing semantics are unchanged
-  * (same per-query mins over interleaved passes), so v9 totals stay
-  * comparable — only WHEN retries fire and what the verdict keys say
-  * changed; "pass_quiet" in the detail file audits per-pass state.
-  *
-  * PER-QUERY PROBE NORMALIZATION (round 21, detail-file only —
-  * additive within frozen v9): queries_probe_norm /
-  * queries_ext_probe_norm / queries_graph_probe_norm /
-  * queries_split_probe_norm decompose the probe-normalized totals per
-  * query (same scaling as total_probe_norm), closing the round-20
-  * adjudication gap: a contended official run can now be CORRECTED
-  * per query from its own detail file, not just flagged.
-  *
-  * SERIES ANCHOR (round 20): the driver regenerated the testdata
-  * between r18 and r19, so the raw r≤18 series is not comparable to
-  * r19+ readings. The committed BENCH_ANCHOR_r19fixture.json carries
-  * the quiet-box per-query anchor, the graph-tier quiet band, and the
-  * r18↔r19 same-fixture bridge A/B — diff new officials against THAT,
-  * not the pre-regeneration BENCH_rN files.
-  *
-  * EMISSION (round 11): the round-9 self-adjudication additions grew the
-  * stdout line past the driver's tail-capture window AGAIN (BENCH_r09 and
-  * BENCH_r10 both carry parsed: null — the captured tail starts mid-line,
-  * so the line's FRONT, including "metric"/"value", was cut). The stdout
-  * line now carries only what the driver contract needs plus scalar
-  * adjudication summaries (total_median, probe-normalized totals, probe
-  * min/max); the per-query medians, the mrows map, and the full probe
-  * arrays live in the detail file. Sampling protocol is unchanged
-  * (totals stay comparable within "interleaved-passes-v6").
+  * "queries" and "errors" may overlap: a query that times and later
+  * errors keeps its valid min under "queries" and its failure under
+  * "errors". A query that errored is skipped for the rest of its tier.
   */
 object Bench {
   private val Samples = 3
   private val MaxHotRetryPasses = 2
-
-  /** Per-tier drift retries (round 22, closing the round-21 verdict #1:
-    * `drift_graph:true` was the round's only uncertifiable tier and the
-    * ONLY retry mechanism — the hot-box gate — re-runs just the main
-    * 22-query set, so a contended ext/graph/split pass could never
-    * self-heal). After each tier's interleaved passes, if that tier's
-    * per-query MINS include a sample from a non-quiet pass, up to this
-    * many extra passes of THAT TIER run (probes recorded as always).
-    * Additive within frozen v9 by the same argument as the round-18
-    * hot-box gate: on a quiet run zero extra passes fire and the
-    * numbers are bit-comparable; on a drifted run the old numbers were
-    * box-contaminated anyway and extra samples only improve the odds
-    * the committed min reflects the engine. Counts land in-band as
-    * `ext_retry_passes`/`graph_retry_passes`/`split_retry_passes`.
-    */
   private val MaxTierRetryPasses = 2
   private val RescueTop = 5
   private val MaxRescuePasses = 2
@@ -220,45 +51,18 @@ object Bench {
   private val SplitPasses = 2
   private val SplitFiles = 32
   private val ExtPasses = 2
+  private val GraphPasses = 2
 
-  /** Extended tier (round-12 verdict #6): the retrieval + fused-trainer
-    * headliners, timed as a SEPARATE section ("queries_ext"/"total_ext")
-    * so the 22-query cross-round "queries"/"total" series stays
-    * untouched and comparable. Same interleaved-pass + per-query-min
-    * protocol, main (1-file) layout. Round 13 (the tier's first recorded
-    * round) also seeds the late-interaction PAIR — full-scan maxsim vs
-    * its index-fed served form — so the served-vs-baseline gap is itself
-    * a tracked trajectory. The served GATE queries (q_mmr_rerank_ivf,
-    * q_hard_negatives_ivf, q_pq_adc_ivf) are deliberately NOT benched:
-    * their cost is dominated by the in-plan exact truth sides and
-    * codebook training, which would track oracle cost, not serving cost.
-    * Round 14 adds q_late_interaction_pq — its cost IS dominated by the
-    * PQ trainer + compressed scan, which is exactly the trajectory the
-    * fused multi-subspace trainer is supposed to bend (PLANS.md round-14
-    * deltas; the recall-gate truth side is a small fraction of it at
-    * sf0.1). Protocol string bumped v6 → v7: the ext keyset changed, so
-    * total_ext compares only within v7. Round 15 (v8) takes the trainer
-    * back out of the timed passes: codebooks come from the train-once
-    * registry (warmed by the separately-reported "pq_train_sec" cold
-    * run), so the pq entry now tracks encode + compressed scan + re-rank
-    * + the recall gate's truth side — the serving trajectory.
+  /** Retrieval and trainer headliners, timed serving-side: codebooks and
+    * the sparse index come from the shared registries warmed by the
+    * separately reported cold builds.
     */
   private val ExtTargets = Seq(
     "q_bm25", "q_sparse_cosine", "q_kmeans_fused", "q_gd_train",
     "q_late_interaction_mv", "q_late_interaction_served", "q_late_interaction_pq")
 
-  private val GraphPasses = 2
-
-  /** Graph/iterative tier (round-18 verdict #3): the CC/peeling family
-    * is the most iteration-heavy code in the repo and had no BENCH_rN
-    * drift tracking — regressions surfaced only in ad-hoc Stress JSON.
-    * Timed as its own section ("queries_graph"/"total_graph", the
-    * total_ext pattern) so the frozen v9 core and ext series stay
-    * bit-comparable; same interleaved-pass + per-query-min protocol.
-    * The set is the four REGISTERED iterative rows whose cost is the
-    * loop itself (q_cc_incremental is excluded: its registered plan
-    * pays the in-plan cold gate, so its wall time tracks oracle cost,
-    * not the warm repair — round-18 verdict minor #3).
+  /** The registered iterative rows whose cost is the loop itself
+    * (q_cc_incremental pays an in-plan cold gate, so it is left out).
     */
   private val GraphTargets = Seq(
     "q_cc_converged", "q_cc_star", "q_kcore", "q_label_prop")
@@ -279,6 +83,36 @@ object Bench {
     "q_line_dedup" -> "documents", "q_unigram_score" -> "documents",
     "q_sim_bruteforce" -> "embeddings", "q_quantize_embed" -> "embeddings",
     "q_topk_perkey" -> "customer")
+
+  /** Per-query samples of one tier: (seconds, pass index into the probe
+    * arrays). The pass tag feeds the probe-normalized numbers and the
+    * drift verdicts.
+    */
+  private[graft] type Tier = mutable.LinkedHashMap[String, List[(Double, Int)]]
+
+  /** Everything one run measured — the input of the pure [[render]]. */
+  private[graft] final case class Run(
+      sfDir: String,
+      detailFile: String,
+      main: Tier,
+      split: Tier,
+      ext: Tier,
+      graph: Tier,
+      splitRows: collection.Map[String, Long],
+      errors: collection.Map[String, String],
+      p1: Seq[Double],
+      p32: Seq[Double],
+      pIo: Seq[Double],
+      pMem: Seq[Double],
+      rescuePasses: Int,
+      hotRetryPasses: Int,
+      splitRetryPasses: Int,
+      extRetryPasses: Int,
+      graphRetryPasses: Int,
+      pqTrainSec: Option[Double],
+      pqEncodeSec: Option[Double],
+      pqWideSec: Option[Double],
+      sparseIndexSec: Option[Double])
 
   /** Fixed-work mixing loop (SplitMix64 finalizer flavour): ~100ms of
     * pure register arithmetic on a quiet core, no allocation, no memory
@@ -307,13 +141,15 @@ object Bench {
     dt
   }
 
-  /** Seconds for 32 threads each running the same fixed-work unit —
-    * measures effective parallel capacity (the thing the heavy queries
-    * depend on): quiet 32-core box ≈ probe1; contended box ≫ probe1.
+  /** Seconds for one thread per session core (`Sessions.cpus`) each
+    * running the same fixed-work unit — the effective parallel capacity
+    * the queries get: ≈ probe1 on a quiet box, ≫ probe1 on a contended
+    * one. Keyed "probe32_*" for v9 continuity (32 cores on the reference
+    * box); more threads than cores would read every pass as hot.
     */
   private def probe32(): Double = {
     val t0 = System.nanoTime()
-    val threads = (0 until 32).map { i =>
+    val threads = (0 until Sessions.cpus.toInt).map { i =>
       new Thread(() => { if (mixWork(ProbeIters, i.toLong) == 0L) println() })
     }
     threads.foreach(_.start())
@@ -323,12 +159,8 @@ object Bench {
 
   /** Seconds to read + fold every byte of the fixture's lineitem files
     * (the bench's actual scan input) — the I/O/page-cache-side noise
-    * probe the CPU-bound pair above cannot see. Round-19 lesson: a
-    * late-session rerun read 1.5× slower at IDENTICAL probe1/probe32
-    * readings — the box's bulk throughput had drifted on the read/
-    * memory side. On a healthy box this is single-digit ms (page
-    * cache); an elevated reading says "the box's data path, not the
-    * code" for that pass. Additive key within frozen v9.
+    * probe the CPU-bound pair above cannot see. Single-digit ms on a
+    * healthy box (page cache).
     */
   private def probeIo(sfDir: String): Double = {
     val dir = new java.io.File(s"$sfDir/lineitem.parquet")
@@ -336,10 +168,8 @@ object Bench {
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
     val t0 = System.nanoTime()
     var h = 0L
-    // stream over a fixed 8 MB buffer (round-19 ADVICE): readAllBytes
-    // materialized whole files on the driver heap — it hard-fails past
-    // 2 GB and the probe itself could OOM/distort the bench at bigger
-    // fixtures. Same stride-997 byte touch, bounded memory at any size.
+    // stream over a fixed 8 MB buffer: bounded driver memory at any
+    // fixture size, same stride-997 byte touch across buffer boundaries
     val buf = new Array[Byte](8 << 20)
     files.foreach { f =>
       val in = new java.io.FileInputStream(f)
@@ -379,6 +209,9 @@ object Bench {
     dt
   }
 
+  private def errMsg(e: Throwable): String =
+    Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.build("graft-bench")
@@ -390,21 +223,13 @@ object Bench {
     // Best-effort: a missing dir must still produce the JSON error report.
     try spark.read.parquet(s"$sfDir/region.parquet").count()
     catch { case _: Throwable => () }
-    // Warm the io probe's page cache too (round 20): the first cold read
-    // of the fixture is legitimately 10×+ a cached one on a perfectly
-    // quiet box — without this, the io spread criterion would read the
-    // cache warmup itself as contention.
+    // Warm the io probe's page cache too: a cold first read is 10×+ a
+    // cached one on a quiet box and would read as contention.
     try probeIo(sfDir) catch { case _: Throwable => () }
 
-    // each sample is (seconds, pass index into the probe arrays) — the
-    // pass tag feeds both the probe-normalized totals and the per-query
-    // drift adjudication (BenchGate)
-    val samples = scala.collection.mutable.LinkedHashMap.empty[String, List[(Double, Int)]]
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val p1 = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val p32 = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val pIo = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val pMem = scala.collection.mutable.ArrayBuffer.empty[Double]
+    val samples, splitSamples, extSamples, graphSamples: Tier = mutable.LinkedHashMap.empty
+    val errors = mutable.LinkedHashMap.empty[String, String]
+    val p1, p32, pIo, pMem = mutable.ArrayBuffer.empty[Double]
     var curPass = -1
     def runProbes(): Unit = {
       p1 += probe1()
@@ -415,79 +240,58 @@ object Bench {
     }
     def quietNow: Seq[Boolean] =
       BenchGate.quietFlags(p1.toSeq, p32.toSeq, pIo.toSeq, pMem.toSeq)
-    def minPasses(m: scala.collection.mutable.LinkedHashMap[String, List[(Double, Int)]])
-        : Iterable[Int] = m.values.map(_.minBy(_._1)._2)
-    // ONE timing body for all three tiers (main passes, rescue passes,
-    // split tier) so the protocol cannot drift between them.
-    def timeOne(
-        q: Q,
-        dir: String,
-        into: scala.collection.mutable.LinkedHashMap[String, List[(Double, Int)]],
-        errKey: String): Unit = {
+    def drifted(t: Tier): Boolean = BenchGate.drift(minPasses(t), quietNow)
+    // ONE timing body for every tier and the rescue passes, so the
+    // protocol cannot drift between them.
+    def timeOne(q: Q, dir: String, into: Tier, errKey: String): Unit = {
       val t0 = System.nanoTime()
       try {
         q.run(spark, dir).write.format("noop").mode("overwrite").save()
         into(q.name) = into.getOrElse(q.name, Nil) :+ ((System.nanoTime() - t0) / 1e9, curPass)
-      } catch {
-        case e: Throwable =>
-          errors(errKey) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-      }
+      } catch { case e: Throwable => errors(errKey) = errMsg(e) }
     }
-    var pass = 0
-    while (pass < Samples) {
-      runProbes()
-      targets.foreach { q =>
-        // A query that errored once is skipped for the rest of the run but
-        // KEEPS any valid earlier timings — silently dropping them would
-        // shrink "total" and read as a speedup across rounds.
-        if (!errors.contains(q.name)) timeOne(q, sfDir, samples, q.name)
+    /** `passes` probed passes of `qs`, then up to `maxRetry` more while
+      * `retryWhile` holds; returns the retries run. A query is skipped
+      * once `errors` holds its name or its tier key, keeping any valid
+      * earlier samples (dropping them would read as a speedup).
+      */
+    def runTier(qs: Seq[Q], dir: String, into: Tier, key: Q => String, passes: Int,
+        maxRetry: Int)(retryWhile: => Boolean): Int = {
+      def pass(): Unit = {
+        runProbes()
+        qs.foreach { q =>
+          if (!errors.contains(q.name) && !errors.contains(key(q))) timeOne(q, dir, into, key(q))
+        }
       }
-      pass += 1
+      (0 until passes).foreach(_ => pass())
+      var retries = 0
+      while (retries < maxRetry && retryWhile) { pass(); retries += 1 }
+      retries
     }
 
-    // ---- hot-box gate (round 18; extended to the data-path probes in
-    // round 20 — BenchGate has the criterion story). Retry while the
-    // run has seen NO quiet pass (box_hot) OR some per-query min was
-    // sampled in a non-quiet pass (box_drift): a retry landing on a
-    // calm box clears both — the quiet pass normally wins the min too.
-    def probeCeiling: Double = BenchGate.cpuCeiling(if (p1.nonEmpty) p1.min else 1.0)
-    def boxHotNow: Boolean = BenchGate.boxHot(quietNow)
-    def boxDriftNow: Boolean = BenchGate.drift(minPasses(samples), quietNow)
-    var hotRetryPasses = 0
-    while ((boxHotNow || boxDriftNow) && hotRetryPasses < MaxHotRetryPasses) {
-      runProbes()
-      targets.foreach { q =>
-        if (!errors.contains(q.name)) timeOne(q, sfDir, samples, q.name)
-      }
-      hotRetryPasses += 1
-    }
+    val hotRetryPasses = runTier(targets, sfDir, samples, _.name, Samples, MaxHotRetryPasses)(
+      BenchGate.boxHot(quietNow) || drifted(samples))
 
     val runStart = System.nanoTime()
-    def elapsedSinceMainSec: Double = (System.nanoTime() - runStart) / 1e9
     var rescuePasses = 0
     var improved = true
-    while (rescuePasses < MaxRescuePasses && improved && elapsedSinceMainSec < RescueWallCapSec) {
-      val mins = samples.map { case (k, v) => k -> v.map(_._1).min }
+    while (rescuePasses < MaxRescuePasses && improved &&
+      (System.nanoTime() - runStart) / 1e9 < RescueWallCapSec) {
+      val mins = minTimes(samples)
       val suspects = mins.toSeq.sortBy(-_._2).take(RescueTop).map(_._1)
         .filterNot(errors.contains)
       if (suspects.isEmpty) improved = false
       else {
         val before = suspects.map(mins).sum
         runProbes()
-        suspects.foreach { name =>
-          timeOne(targets.find(_.name == name).get, sfDir, samples, name)
-        }
+        suspects.foreach(name => timeOne(targets.find(_.name == name).get, sfDir, samples, name))
         val after = suspects.map(n => samples(n).map(_._1).min).sum
         improved = after < before * 0.95
         rescuePasses += 1
       }
     }
 
-    val times = samples.map { case (k, v) => k -> v.map(_._1).min }
-
-    // ---- split-layout tier (v5) ----
-    val splitSamples = scala.collection.mutable.LinkedHashMap.empty[String, List[(Double, Int)]]
-    val splitRows = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    val splitRows = mutable.LinkedHashMap.empty[String, Long]
     val splitSetup: Option[String] =
       try {
         val dir = graft.core.Tmp.dir("graft_bench_split")
@@ -500,49 +304,16 @@ object Bench {
           splitRows(t) = spark.read.parquet(s"$dir/$t.parquet").count()
         }
         Some(dir)
-      } catch {
-        case e: Throwable =>
-          errors("__split_setup__") =
-            Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-          None
-      }
-    var splitRetryPasses = 0
-    splitSetup.foreach { dir =>
-      var sp = 0
-      while (sp < SplitPasses) {
-        runProbes()
-        targets.foreach { q =>
-          // deterministic failures from the main tier are not re-burned
-          // here; split-tier-specific failures key as split:<name>
-          if (!errors.contains(q.name) && !errors.contains(s"split:${q.name}"))
-            timeOne(q, dir, splitSamples, s"split:${q.name}")
-        }
-        sp += 1
-      }
-      // tier drift retry (round 22 — see MaxTierRetryPasses)
-      while (BenchGate.drift(minPasses(splitSamples), quietNow) &&
-        splitRetryPasses < MaxTierRetryPasses) {
-        runProbes()
-        targets.foreach { q =>
-          if (!errors.contains(q.name) && !errors.contains(s"split:${q.name}"))
-            timeOne(q, dir, splitSamples, s"split:${q.name}")
-        }
-        splitRetryPasses += 1
-      }
+      } catch { case e: Throwable => errors("__split_setup__") = errMsg(e); None }
+    val splitRetryPasses = splitSetup.fold(0) { dir =>
+      runTier(targets, dir, splitSamples, q => s"split:${q.name}", SplitPasses,
+        MaxTierRetryPasses)(drifted(splitSamples))
     }
-    // ---- extended tier (round-12 verdict #6) ----
-    // Index-build measurement (round-14 verdict #2): the compressed-LI
-    // codebooks AND the encoded codes table are stored artifacts in
-    // production (ColBERTv2 trains/encodes at ingest); time both
-    // SEPARATELY ("pq_train_sec" / "pq_encode_sec"), then let every ext
-    // pass of q_late_interaction_pq serve from the shared registries —
-    // so its bench series tracks SERVING cost, and index build has its
-    // own numbers. clearShared() first so this measures a cold build
-    // even if an earlier tier warmed the caches.
-    // graft.artifacts.persist=false for the cold-build timings: since
-    // round 16 the registries carry a disk tier (ArtifactStore), so a
-    // warm box would otherwise "build" by loading the persisted artifact
-    // — these numbers must keep measuring the BUILD.
+
+    // Cold index builds, each timed once; the ext passes then serve from
+    // the shared registries. The disk tier is off so a warm box cannot
+    // "build" by loading a persisted artifact; the operator's own setting
+    // is restored exactly afterwards.
     val priorPersist = spark.conf.getOption("graft.artifacts.persist")
     val (pqTrainSec, pqEncodeSec, pqWideSec): (Option[Double], Option[Double], Option[Double]) =
       try {
@@ -553,207 +324,142 @@ object Bench {
         val t1 = System.nanoTime()
         graft.ext.SearchQueries.pqTokenCodes(spark, sfDir)
         val t2 = System.nanoTime()
-        // the wide ADC layout (codes pivot + stored recon norms, round
-        // 16) is ALSO index-build cost, but its own series key: round 16
-        // folded it into pq_encode_sec, silently doubling a frozen-v9
-        // key (0.507 → 1.09) — round 17 splits it out as "pq_wide_sec"
-        // so the encode series stays continuous with its v9 history
-        // (bridge note in PLANS.md; r16's 1.09 ≈ encode + wide)
+        // the wide ADC layout is its own key so the encode series stays
+        // continuous with its v9 history
         graft.ext.SearchQueries.pqTokenCodesWide(spark, sfDir)
         val t3 = System.nanoTime()
         (Some((t1 - t0) / 1e9), Some((t2 - t1) / 1e9), Some((t3 - t2) / 1e9))
-      } catch {
-        case e: Throwable =>
-          errors("__pq_train__") = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-          (None, None, None)
-      }
-    // Same lifecycle for the sparse retrieval index (v9): signatures +
-    // champion lists are written at ingest in production; time the cold
-    // build once ("sparse_index_sec") and let the ext passes of
-    // q_sparse_cosine serve from the registry.
+      } catch { case e: Throwable => errors("__pq_train__") = errMsg(e); (None, None, None) }
     val sparseIndexSec: Option[Double] =
       try {
         graft.ext.SearchQueries.clearSparseShared()
         val t0 = System.nanoTime()
         graft.ext.SearchQueries.sparseIndexShared(spark, sfDir)
         Some((System.nanoTime() - t0) / 1e9)
-      } catch {
-        case e: Throwable =>
-          errors("__sparse_index__") = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-          None
-      } finally priorPersist match {
-        // restore EXACTLY the pre-bench setting (ADVICE round 16): an
-        // unconditional "true" clobbered an operator's explicit
-        // persist=false session setting for the rest of the run
+      } catch { case e: Throwable => errors("__sparse_index__") = errMsg(e); None }
+      finally priorPersist match {
         case Some(v) => spark.conf.set("graft.artifacts.persist", v)
         case None => spark.conf.unset("graft.artifacts.persist")
       }
-    val extSamples = scala.collection.mutable.LinkedHashMap.empty[String, List[(Double, Int)]]
-    val extQs = ExtTargets.flatMap(Registry.byName.get)
-    var ep = 0
-    while (ep < ExtPasses) {
-      runProbes()
-      extQs.foreach { q =>
-        if (!errors.contains(s"ext:${q.name}")) timeOne(q, sfDir, extSamples, s"ext:${q.name}")
-      }
-      ep += 1
-    }
-    // tier drift retry (round 22 — see MaxTierRetryPasses)
-    var extRetryPasses = 0
-    while (BenchGate.drift(minPasses(extSamples), quietNow) &&
-      extRetryPasses < MaxTierRetryPasses) {
-      runProbes()
-      extQs.foreach { q =>
-        if (!errors.contains(s"ext:${q.name}")) timeOne(q, sfDir, extSamples, s"ext:${q.name}")
-      }
-      extRetryPasses += 1
-    }
-    val extTimes = extSamples.map { case (k, v) => k -> v.map(_._1).min }
 
-    // ---- graph/iterative tier (round-18 verdict #3) ----
-    val graphSamples = scala.collection.mutable.LinkedHashMap.empty[String, List[(Double, Int)]]
-    val graphQs = GraphTargets.flatMap(Registry.byName.get)
-    var gp = 0
-    while (gp < GraphPasses) {
-      runProbes()
-      graphQs.foreach { q =>
-        if (!errors.contains(s"graph:${q.name}")) timeOne(q, sfDir, graphSamples, s"graph:${q.name}")
-      }
-      gp += 1
-    }
-    // tier drift retry (round 22 — see MaxTierRetryPasses): the graph
-    // tier was the r21 verdict's only uncertifiable official reading
-    var graphRetryPasses = 0
-    while (BenchGate.drift(minPasses(graphSamples), quietNow) &&
-      graphRetryPasses < MaxTierRetryPasses) {
-      runProbes()
-      graphQs.foreach { q =>
-        if (!errors.contains(s"graph:${q.name}")) timeOne(q, sfDir, graphSamples, s"graph:${q.name}")
-      }
-      graphRetryPasses += 1
-    }
-    val graphTimes = graphSamples.map { case (k, v) => k -> v.map(_._1).min }
+    val extRetryPasses = runTier(ExtTargets.flatMap(Registry.byName.get), sfDir, extSamples,
+      q => s"ext:${q.name}", ExtPasses, MaxTierRetryPasses)(drifted(extSamples))
+    val graphRetryPasses = runTier(GraphTargets.flatMap(Registry.byName.get), sfDir, graphSamples,
+      q => s"graph:${q.name}", GraphPasses, MaxTierRetryPasses)(drifted(graphSamples))
 
-    val splitTimes = splitSamples.map { case (k, v) => k -> v.map(_._1).min }
-    val splitMrows = splitTimes.flatMap { case (k, t) =>
-      primaryTable.get(k).flatMap(splitRows.get).map(rows => k -> rows / 1e6 / t)
-    }
+    val detailFile = sys.env.getOrElse("GRAFT_BENCH_DETAIL", "BENCH_OFFICIAL.json")
+    val (head, detail) = render(Run(
+      sfDir, detailFile,
+      samples, splitSamples, extSamples, graphSamples, splitRows, errors,
+      p1.toSeq, p32.toSeq, pIo.toSeq, pMem.toSeq,
+      rescuePasses, hotRetryPasses, splitRetryPasses, extRetryPasses, graphRetryPasses,
+      pqTrainSec, pqEncodeSec, pqWideSec, sparseIndexSec))
+    Files.writeString(Paths.get(detailFile), detail + "\n")
+    println(head)
+    spark.stop()
+  }
 
-    // ---- medians + probe-normalized totals (round-9 self-adjudication) ----
+  private def minTimes(t: Tier): mutable.LinkedHashMap[String, Double] =
+    t.map { case (k, v) => k -> v.map(_._1).min }
+
+  private def minPasses(t: Tier): Iterable[Int] = t.values.map(_.minBy(_._1)._2)
+
+  private def jstr(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
+    } + "\""
+
+  // Locale.ROOT (via Timing): comma-decimal locales would emit invalid JSON.
+  private def num(v: Double): String = Timing.fmt3(v)
+
+  /** A JSON object from already-rendered values, in iteration order. */
+  private def obj(kvs: Iterable[(String, String)]): String =
+    kvs.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
+
+  /** The stdout line and the detail-file line of a run. The stdout line
+    * carries the contract keys (metric/value/unit/queries/sf) plus scalar
+    * adjudication summaries only, so a reader that keeps just the tail of
+    * stdout still gets the whole line; the detail line is the stdout line
+    * with the per-sample arrays, medians, probe arrays and split-tier maps
+    * appended.
+    */
+  private[graft] def render(r: Run): (String, String) = {
+    def mn(xs: Seq[Double]): Double = if (xs.nonEmpty) xs.min else 0.0
+    def mx(xs: Seq[Double]): Double = if (xs.nonEmpty) xs.max else 0.0
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       val n = s.size
       if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
     }
-    val timesMedian = samples.map { case (k, v) => k -> median(v.map(_._1)) }
-    // the run's best single-thread probe is the quietest capacity estimate
-    // this box showed; scaling each sample by bestP1/probe32-of-its-pass
-    // divides uniform oversubscription back out (≈ no-op on a quiet box)
-    val bestP1 = if (p1.nonEmpty) p1.min else 1.0
+    // scaling each sample by bestP1 / probe32-of-its-pass divides uniform
+    // oversubscription back out (≈ no-op on a quiet box)
+    val bestP1 = if (r.p1.nonEmpty) r.p1.min else 1.0
     def normOne(v: List[(Double, Int)]): Double =
       v.map { case (t, pi) =>
-        val p = if (pi >= 0 && pi < p32.length) p32(pi) else bestP1
+        val p = if (pi >= 0 && pi < r.p32.length) r.p32(pi) else bestP1
         t * (bestP1 / math.max(p, 1e-9))
       }.min
-    def normTotal(m: scala.collection.mutable.LinkedHashMap[String, List[(Double, Int)]]): Double =
-      m.values.map(normOne).sum
-    // per-query probe-normalized mins (round 21, detail-file only —
-    // additive within frozen v9): the round-20 verdict's adjudication
-    // gap was that a contended official run could only be FLAGGED, not
-    // corrected — the normalized total existed but not its per-query
-    // decomposition, so a reader couldn't tell which committed numbers
-    // the contention owned. Same normalization as total_probe_norm.
-    def normMap(m: scala.collection.mutable.LinkedHashMap[String, List[(Double, Int)]])
-        : scala.collection.immutable.Seq[(String, Double)] =
-      m.map { case (k, v) => k -> normOne(v) }.toList
-
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
-    // Locale.ROOT (via Timing): comma-decimal locales would emit invalid JSON.
-    def num(v: Double): String = Timing.fmt3(v)
+    def nums(m: Iterable[(String, Double)]): String = obj(m.map { case (k, v) => k -> num(v) })
     def arr(vs: Seq[Double]): String = vs.map(num).mkString("[", ",", "]")
-    val qs = times.map { case (k, v) => s"${jstr(k)}:${num(v)}" }.mkString("{", ",", "}")
-    val qsMed = timesMedian.map { case (k, v) => s"${jstr(k)}:${num(v)}" }.mkString("{", ",", "}")
-    val qsAll = samples.map { case (k, v) => s"${jstr(k)}:${arr(v.map(_._1))}" }.mkString("{", ",", "}")
-    val errs = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
-    val total = times.values.sum
-    val totalMedian = timesMedian.values.sum
-    val eq = extTimes.map { case (k, v) => s"${jstr(k)}:${num(v)}" }.mkString("{", ",", "}")
-    val eqAll = extSamples.map { case (k, v) => s"${jstr(k)}:${arr(v.map(_._1))}" }.mkString("{", ",", "}")
-    val extTotal = extTimes.values.sum
-    val gq = graphTimes.map { case (k, v) => s"${jstr(k)}:${num(v)}" }.mkString("{", ",", "}")
-    val gqAll = graphSamples.map { case (k, v) => s"${jstr(k)}:${arr(v.map(_._1))}" }.mkString("{", ",", "}")
-    val graphTotal = graphTimes.values.sum
-    val sq = splitTimes.map { case (k, v) => s"${jstr(k)}:${num(v)}" }.mkString("{", ",", "}")
-    val sqAll = splitSamples.map { case (k, v) => s"${jstr(k)}:${arr(v.map(_._1))}" }.mkString("{", ",", "}")
-    val sMrows = splitMrows.map { case (k, v) => s"${jstr(k)}:${num(v)}" }.mkString("{", ",", "}")
-    val splitTotal = splitTimes.values.sum
-    val detailFile = sys.env.getOrElse("GRAFT_BENCH_DETAIL", "BENCH_OFFICIAL.json")
-    // Final adjudication over EVERY pass of the run (main + retries +
-    // rescue + split + ext + graph — ceilings tighten as later passes
-    // lower the probe floors): box_hot = no quiet pass anywhere;
-    // box_drift / drift_* = that tier committed a min sampled in a
-    // non-quiet pass (see the GATE EXTENSION scaladoc / BenchGate).
-    val quietFinal = quietNow
-    val boxHot = BenchGate.boxHot(quietFinal)
-    val boxDrift = BenchGate.drift(minPasses(samples), quietFinal)
-    val driftExt = BenchGate.drift(minPasses(extSamples), quietFinal)
-    val driftGraph = BenchGate.drift(minPasses(graphSamples), quietFinal)
-    val driftSplit = BenchGate.drift(minPasses(splitSamples), quietFinal)
+    def all(t: Tier): String = obj(t.map { case (k, v) => k -> arr(v.map(_._1)) })
+    def norms(t: Tier): String = nums(t.map { case (k, v) => k -> normOne(v) })
+    def normTotal(t: Tier): Double = t.values.map(normOne).sum
+    def opt(v: Option[Double]): String = v.map(num).getOrElse("null")
 
-    // stdout line: driver contract (metric/value/unit/queries/sf) plus
-    // SCALAR adjudication summaries only — every per-query map beyond the
-    // mins, and the raw probe arrays, would push the line past the
-    // driver's tail-capture window (the round-9/10 parsed:null failure).
-    val head =
-      s"""{"metric":"total","value":${num(total)},"unit":"sec","samples":$Samples,"rescue_passes":$rescuePasses,""" +
-        s""""protocol":"interleaved-passes-v9",""" +
-        s""""box_hot":$boxHot,"box_drift":$boxDrift,"drift_ext":$driftExt,"drift_graph":$driftGraph,""" +
-        s""""drift_split":$driftSplit,"hot_retry_passes":$hotRetryPasses,""" +
-        s""""ext_retry_passes":$extRetryPasses,"graph_retry_passes":$graphRetryPasses,""" +
-        s""""split_retry_passes":$splitRetryPasses,"probe_ceiling":${num(probeCeiling)},""" +
-        s""""io_ceiling":${num(if (pIo.nonEmpty) BenchGate.ioCeiling(pIo.min) else 0.0)},""" +
-        s""""mem_ceiling":${num(if (pMem.nonEmpty) BenchGate.memCeiling(pMem.min) else 0.0)},""" +
-        s""""probe1_min":${num(if (p1.nonEmpty) p1.min else 0.0)},""" +
-        s""""probe32_min":${num(if (p32.nonEmpty) p32.min else 0.0)},"probe32_max":${num(if (p32.nonEmpty) p32.max else 0.0)},""" +
-        s""""probe_io_min":${num(if (pIo.nonEmpty) pIo.min else 0.0)},"probe_io_max":${num(if (pIo.nonEmpty) pIo.max else 0.0)},""" +
-        s""""probe_mem_min":${num(if (pMem.nonEmpty) pMem.min else 0.0)},"probe_mem_max":${num(if (pMem.nonEmpty) pMem.max else 0.0)},""" +
-        s""""queries":$qs,"total_median":${num(totalMedian)},""" +
-        s""""total_probe_norm":${num(normTotal(samples))},""" +
-        s""""queries_ext":$eq,"total_ext":${num(extTotal)},"ext_passes":$ExtPasses,""" +
-        s""""queries_graph":$gq,"total_graph":${num(graphTotal)},"graph_passes":$GraphPasses,""" +
-        s""""pq_train_sec":${pqTrainSec.map(num).getOrElse("null")},""" +
-        s""""pq_encode_sec":${pqEncodeSec.map(num).getOrElse("null")},""" +
-        s""""pq_wide_sec":${pqWideSec.map(num).getOrElse("null")},""" +
-        s""""sparse_index_sec":${sparseIndexSec.map(num).getOrElse("null")},""" +
-        s""""split_files":$SplitFiles,"split_passes":$SplitPasses,"total_split":${num(splitTotal)},""" +
-        s""""total_split_probe_norm":${num(normTotal(splitSamples))},""" +
-        s""""detail_file":${jstr(detailFile)},""" +
-        s""""errors":$errs,"sf":${jstr(sfDir)}}"""
-    // Full detail goes to disk ONLY: per-sample arrays, per-query medians,
-    // the split-tier per-query timings/Mrows, and the probe arrays. Default
-    // target is BENCH_OFFICIAL.json (gitignored) so a driver run never
-    // dirties the committed BENCH_LOCAL.json snapshot; builders refresh
-    // that snapshot with GRAFT_BENCH_DETAIL=BENCH_LOCAL.json.
-    def normJson(m: scala.collection.mutable.LinkedHashMap[String, List[(Double, Int)]]): String =
-      normMap(m).map { case (k, v) => s"${jstr(k)}:${num(v)}" }.mkString("{", ",", "}")
-    val detail = head.dropRight(1) +
-      s""","note":"queries/errors keysets may overlap (timed-then-errored); totals comparable only within one protocol string",""" +
-      s""""probe1_sec":${arr(p1.toSeq)},"probe32_sec":${arr(p32.toSeq)},""" +
-      s""""pass_quiet":${quietFinal.map(_.toString).mkString("[", ",", "]")},""" +
-      s""""probe_io_sec":${arr(pIo.toSeq)},"probe_mem_sec":${arr(pMem.toSeq)},""" +
-      s""""queries_median":$qsMed,"mrows_per_sec_split":$sMrows,""" +
-      s""""queries_probe_norm":${normJson(samples)},""" +
-      s""""queries_ext_probe_norm":${normJson(extSamples)},""" +
-      s""""queries_graph_probe_norm":${normJson(graphSamples)},""" +
-      s""""queries_split_probe_norm":${normJson(splitSamples)},""" +
-      s""""queries_all":$qsAll,"queries_split":$sq,"queries_split_all":$sqAll,""" +
-      s""""queries_ext_all":$eqAll,"queries_graph_all":$gqAll}"""
-    Files.writeString(Paths.get(detailFile), detail + "\n")
-    println(head)
-    spark.stop()
+    val (times, splitTimes) = (minTimes(r.main), minTimes(r.split))
+    val (extTimes, graphTimes) = (minTimes(r.ext), minTimes(r.graph))
+    val timesMedian = r.main.map { case (k, v) => k -> median(v.map(_._1)) }
+    val splitMrows = splitTimes.flatMap { case (k, t) =>
+      primaryTable.get(k).flatMap(r.splitRows.get).map(rows => k -> rows / 1e6 / t)
+    }
+    // final adjudication over EVERY pass of the run
+    val quiet = BenchGate.quietFlags(r.p1, r.p32, r.pIo, r.pMem)
+    def drift(t: Tier): String = BenchGate.drift(minPasses(t), quiet).toString
+
+    val head = Seq(
+      "metric" -> jstr("total"), "value" -> num(times.values.sum), "unit" -> jstr("sec"),
+      "samples" -> Samples.toString, "rescue_passes" -> r.rescuePasses.toString,
+      "protocol" -> jstr("interleaved-passes-v9"),
+      "box_hot" -> BenchGate.boxHot(quiet).toString, "box_drift" -> drift(r.main),
+      "drift_ext" -> drift(r.ext), "drift_graph" -> drift(r.graph),
+      "drift_split" -> drift(r.split), "hot_retry_passes" -> r.hotRetryPasses.toString,
+      "ext_retry_passes" -> r.extRetryPasses.toString,
+      "graph_retry_passes" -> r.graphRetryPasses.toString,
+      "split_retry_passes" -> r.splitRetryPasses.toString,
+      "probe_ceiling" -> num(BenchGate.cpuCeiling(bestP1)),
+      "io_ceiling" -> num(if (r.pIo.nonEmpty) BenchGate.ioCeiling(r.pIo.min) else 0.0),
+      "mem_ceiling" -> num(if (r.pMem.nonEmpty) BenchGate.memCeiling(r.pMem.min) else 0.0),
+      "probe1_min" -> num(mn(r.p1)),
+      "probe32_min" -> num(mn(r.p32)), "probe32_max" -> num(mx(r.p32)),
+      "probe_io_min" -> num(mn(r.pIo)), "probe_io_max" -> num(mx(r.pIo)),
+      "probe_mem_min" -> num(mn(r.pMem)), "probe_mem_max" -> num(mx(r.pMem)),
+      "queries" -> nums(times), "total_median" -> num(timesMedian.values.sum),
+      "total_probe_norm" -> num(normTotal(r.main)),
+      "queries_ext" -> nums(extTimes), "total_ext" -> num(extTimes.values.sum),
+      "ext_passes" -> ExtPasses.toString,
+      "queries_graph" -> nums(graphTimes), "total_graph" -> num(graphTimes.values.sum),
+      "graph_passes" -> GraphPasses.toString,
+      "pq_train_sec" -> opt(r.pqTrainSec), "pq_encode_sec" -> opt(r.pqEncodeSec),
+      "pq_wide_sec" -> opt(r.pqWideSec), "sparse_index_sec" -> opt(r.sparseIndexSec),
+      "split_files" -> SplitFiles.toString, "split_passes" -> SplitPasses.toString,
+      "total_split" -> num(splitTimes.values.sum),
+      "total_split_probe_norm" -> num(normTotal(r.split)),
+      "detail_file" -> jstr(r.detailFile),
+      "errors" -> obj(r.errors.map { case (k, v) => k -> jstr(v) }), "sf" -> jstr(r.sfDir))
+    val detail = head ++ Seq(
+      "note" -> jstr("queries/errors keysets may overlap (timed-then-errored); " +
+        "totals comparable only within one protocol string"),
+      "probe1_sec" -> arr(r.p1), "probe32_sec" -> arr(r.p32),
+      "pass_quiet" -> quiet.mkString("[", ",", "]"),
+      "probe_io_sec" -> arr(r.pIo), "probe_mem_sec" -> arr(r.pMem),
+      "queries_median" -> nums(timesMedian), "mrows_per_sec_split" -> nums(splitMrows),
+      "queries_probe_norm" -> norms(r.main), "queries_ext_probe_norm" -> norms(r.ext),
+      "queries_graph_probe_norm" -> norms(r.graph),
+      "queries_split_probe_norm" -> norms(r.split),
+      "queries_all" -> all(r.main), "queries_split" -> nums(splitTimes),
+      "queries_split_all" -> all(r.split),
+      "queries_ext_all" -> all(r.ext), "queries_graph_all" -> all(r.graph))
+    (obj(head), obj(detail))
   }
 }

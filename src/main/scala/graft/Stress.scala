@@ -21,6 +21,12 @@ import org.apache.spark.sql.functions._
   *    the numbers PLANS.md's 100 TB claims extrapolate from: if Mrows/s
   *    holds within 2× from 9.6M to 100M rows, per-row cost is flat and
   *    the remaining scale risk is shuffle fan-in, not the operators.
+  *  - tiers "gindex", "simfamily", "retrieval", "li", "streaming",
+  *    "trainer", "prefix", "media", "sketch", "restart", "graph",
+  *    "powerlaw": one scale probe each, documented on its `run*` method.
+  *
+  * The export → clean → load pipeline is timed by `perfbench/run.py`
+  * (workloads `etl_many_small`, `etl_large`), not here.
   *
   * Emits one JSON line: rows, seconds and Mrows/s per (layout, query).
   */
@@ -150,7 +156,6 @@ object Stress {
     else if (tier == "trainer") runTrainer(spark, sfDir, mult)
     else if (tier == "prefix") runPrefix(spark, sfDir, mult)
     else if (tier == "media") runMedia(spark, sfDir, mult)
-    else if (tier == "pipeline") runPipelineTier(spark, sfDir, mult)
     else if (tier == "sketch") runSketch(spark, sfDir, mult)
     else if (tier == "restart") runRestart(spark, sfDir)
     else if (tier == "graph") runGraph(spark, sfDir, mult)
@@ -1286,110 +1291,6 @@ object Stress {
         s""""join_sec":${num(j)},"join_mrows_s":${num(rate(nRows, j))},""" +
         s""""topk_custom_hot_sec":${num(tkC)},"topk_custom_hot_mrows_s":${num(rate(nRows, tkC))},""" +
         s""""topk_window_hot_sec":${num(tkW)},"topk_window_hot_mrows_s":${num(rate(nRows, tkW))}}""")
-  }
-
-  /** End-to-end 4-stage PIPELINE tier (round-15 verdict #3): the
-    * reference's actual job is discover → export → clean → load over a
-    * SET of tables (SURVEY §3 EP1, the 72-minute daily envelope), and
-    * until now the repo only timed stages inside specs. This runs the
-    * full chained job — dirty wire-format CSV export + .schema, schema
-    * clean to BQ JSON, distributed `"N` repair, truncate-load through
-    * the WarehouseSink seam — over the six base tables at `sfDir`, then
-    * again at `mult`× the TABLE COUNT (the reference's scale axis: its
-    * batching/continuation machinery exists because table count grows,
-    * not table size). Tables run 8-way concurrent, like the reference's
-    * per-table event fan-out (and like any real Spark driver would
-    * submit them); per-stage seconds are summed across tables for
-    * attribution, wall is end-to-end. The judge-facing claim: per-table
-    * cost flat-to-improving from 6 to 6·mult tables.
-    */
-  private def runPipelineTier(spark: SparkSession, sfDir: String, mult: Int): Unit = {
-    import graft.core.SchemaColumn
-    import graft.pipeline.Pipeline
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft-stress-pipeline"
-    def rmrf(p: java.nio.file.Path): Unit =
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      }
-    rmrf(java.nio.file.Paths.get(out))
-    // declared MySQL column types per table — the .schema side of the
-    // export, exactly as the reference's INFORMATION_SCHEMA projection
-    // would emit them
-    def typesOf(df: DataFrame): Seq[SchemaColumn] =
-      df.schema.fields.toSeq.map { f =>
-        SchemaColumn(f.name, f.dataType match {
-          case org.apache.spark.sql.types.LongType => "bigint"
-          case org.apache.spark.sql.types.IntegerType => "int"
-          case org.apache.spark.sql.types.DoubleType => "double"
-          case org.apache.spark.sql.types.TimestampType |
-              org.apache.spark.sql.types.TimestampNTZType => "datetime"
-          case org.apache.spark.sql.types.DateType => "date"
-          case _ => "varchar(64)"
-        })
-      }
-    val baseTables = Seq("region", "nation", "supplier", "customer", "part", "orders")
-    val specs = baseTables.map { t =>
-      val df = spark.read.parquet(s"$sfDir/$t.parquet")
-      (t, df, typesOf(df), df.count())
-    }
-    val num = (v: Double) => Timing.fmt3(v)
-
-    /** Run the chained job over `nSets` copies of the table set; returns
-      * (per-stage summed secs, end-to-end wall secs, rows loaded).
-      */
-    def runSets(nSets: Int, root: String): (Map[String, Double], Double, Long) = {
-      val layout = Pipeline.Layout(root, "2026-01-01")
-      val stageSec = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.DoubleAdder]()
-      def acc(stage: String, sec: Double): Unit =
-        stageSec.computeIfAbsent(stage, _ => new java.util.concurrent.atomic.DoubleAdder())
-          .add(sec)
-      val loaded = new java.util.concurrent.atomic.AtomicLong(0L)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val tasks = for {
-        set <- 0 until nSets
-        (name, df, types, _) <- specs
-      } yield (s"${name}_s$set", df, types)
-      val wall = time {
-        val fs = tasks.map { case (table, df, types) =>
-          scala.concurrent.Future {
-            acc("export", time(Pipeline.exportStage(spark, df, types, layout, table)))
-            acc("schema", time(Pipeline.cleanSchemaStage(spark, layout, table)))
-            acc("clean", time(Pipeline.cleanDataStage(spark, layout, table)))
-            var n = 0L
-            acc("load", time { n = Pipeline.loadStage(spark, layout, table).count() })
-            loaded.addAndGet(n)
-            ()
-          }
-        }
-        fs.foreach(f =>
-          scala.concurrent.Await.result(f, scala.concurrent.duration.Duration(1800, "s")))
-      }
-      pool.shutdown()
-      import scala.jdk.CollectionConverters._
-      (stageSec.asScala.map { case (k, v) => k -> v.sum() }.toMap, wall, loaded.get())
-    }
-
-    val setRows = specs.map(_._4).sum
-    val (s1, wall1, n1) = runSets(1, s"$out/one")
-    val (sm, wallM, nM) = runSets(mult, s"$out/many")
-    val nT1 = specs.size
-    val nTM = specs.size * mult
-    def stageJson(tag: String, st: Map[String, Double], wall: Double, rows: Long, nTables: Int) =
-      Seq("export", "schema", "clean", "load").map { k =>
-        val sec = st.getOrElse(k, 0.0)
-        s""""${tag}_${k}_sec":${num(sec)},"${tag}_${k}_krows_s":${num(rows / 1000.0 / math.max(sec, 1e-9))}"""
-      }.mkString(",") +
-        s""","${tag}_wall_sec":${num(wall)},"${tag}_tables":$nTables,""" +
-        s""""${tag}_per_table_ms":${num(wall * 1000.0 / nTables)},"${tag}_rows":$rows"""
-    require(n1 == setRows && nM == setRows * mult,
-      s"pipeline lost rows: $n1/$setRows (one), $nM/${setRows * mult} (many)")
-    println(
-      s"""{"tier":"pipeline","mult":$mult,"set_rows":$setRows,""" +
-        stageJson("one", s1, wall1, n1, nT1) + "," +
-        stageJson("many", sm, wallM, nM, nTM) + "}")
   }
 
   /** Sketch tier (round 16): Count-Min throughput on a replicated token

@@ -31,7 +31,7 @@ object DedupQueries {
     * blowing the 10×n_docs anti-degeneracy ceiling the rows gate; the
     * truth recall the rows ALSO gate never moved (1.000 at every
     * threshold measured). Re-measured sweep on the r20 fixture
-    * (MeasureGates2, both tiers): 0.3 → 77.0/doc sf0.1, 7.9/doc sf0.01;
+    * (PLANS.md round 20, both tiers): 0.3 → 77.0/doc sf0.1, 7.9/doc sf0.01;
     * 0.4 → 33.1/0.49... the calibration: **0.5 → 4.46/doc sf0.1,
     * 0.49/doc sf0.01, truth recall 1.000 at both** — the standard
     * near-dup operating point, comfortably inside the ceiling with the

@@ -297,7 +297,7 @@ object SearchQueries {
     * that needs no order; the join form is one hash-agg + one shuffle
     * join on the same key (AQE broadcasts the vocab-sized df relation
     * when it fits). Same integers out — measured 2.05 → 1.37 s for the
-    * signature materialization at sf0.1 (SparseProbe, round 15).
+    * signature materialization at sf0.1 (PLANS.md, round 15).
     * Terms outside the frozen vocabulary drop at the inner join — the
     * documented stale-index semantics between refreshes (impossible
     * for the index's own corpus, where the vocab is by construction

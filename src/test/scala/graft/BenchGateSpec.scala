@@ -75,4 +75,63 @@ class BenchGateSpec extends AnyFunSuite with org.scalactic.Tolerance {
     assert(BenchGate.drift(Seq(5), Seq(true, true)))
     assert(BenchGate.drift(Seq(-1), Seq(true)))
   }
+
+  // the frozen v9 stdout line and the detail-only keys after it, in order
+  private val V9Keys = Seq(
+    "metric", "value", "unit", "samples", "rescue_passes", "protocol",
+    "box_hot", "box_drift", "drift_ext", "drift_graph", "drift_split",
+    "hot_retry_passes", "ext_retry_passes", "graph_retry_passes", "split_retry_passes",
+    "probe_ceiling", "io_ceiling", "mem_ceiling", "probe1_min",
+    "probe32_min", "probe32_max", "probe_io_min", "probe_io_max",
+    "probe_mem_min", "probe_mem_max", "queries", "total_median", "total_probe_norm",
+    "queries_ext", "total_ext", "ext_passes", "queries_graph", "total_graph", "graph_passes",
+    "pq_train_sec", "pq_encode_sec", "pq_wide_sec", "sparse_index_sec",
+    "split_files", "split_passes", "total_split", "total_split_probe_norm",
+    "detail_file", "errors", "sf")
+  private val DetailKeys = Seq(
+    "note", "probe1_sec", "probe32_sec", "pass_quiet", "probe_io_sec", "probe_mem_sec",
+    "queries_median", "mrows_per_sec_split", "queries_probe_norm", "queries_ext_probe_norm",
+    "queries_graph_probe_norm", "queries_split_probe_norm", "queries_all", "queries_split",
+    "queries_split_all", "queries_ext_all", "queries_graph_all")
+
+  test("render: v9 stdout keys in order, detail = stdout + detail keys, missing build cost is null") {
+    import scala.collection.mutable
+    import scala.jdk.CollectionConverters._
+    def tier(kvs: (String, List[(Double, Int)])*): Bench.Tier = mutable.LinkedHashMap(kvs: _*)
+    val msg = "bad \"quote\"\nsecond line"
+    val run = Bench.Run(
+      sfDir = "/data/sf0.01", detailFile = "detail.json",
+      main = tier("q_agg_pricing" -> List((0.5, 0), (0.4, 1), (0.45, 2)), "q_topk" -> List((1.0, 0))),
+      split = tier("q_agg_pricing" -> List((0.2, 4)), "q_topk" -> List((0.3, 3), (0.25, 4))),
+      ext = tier("q_bm25" -> List((0.6, 5)), "q_gd_train" -> List((0.7, 5))),
+      graph = tier("q_kcore" -> List((0.8, 6)), "q_cc_star" -> List((0.9, 6))),
+      splitRows = Map("lineitem" -> 400000L, "orders" -> 100000L),
+      errors = mutable.LinkedHashMap("ext:q_sparse_cosine" -> msg),
+      p1 = Seq(0.10, 0.10, 0.11, 0.10, 0.12, 0.10, 0.11),
+      p32 = Seq(0.11, 0.12, 0.11, 0.30, 0.11, 0.12, 0.11),
+      pIo = Seq.fill(7)(0.005), pMem = Seq.fill(7)(0.03),
+      rescuePasses = 1, hotRetryPasses = 0, splitRetryPasses = 1,
+      extRetryPasses = 0, graphRetryPasses = 0,
+      pqTrainSec = None, pqEncodeSec = Some(0.25), pqWideSec = Some(0.125),
+      sparseIndexSec = Some(1.5))
+    val (head, detail) = Bench.render(run)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    def keys(line: String): Seq[String] =
+      json.readTree(line).properties().iterator().asScala.map(_.getKey).toList
+
+    assert(!head.contains("\n") && !detail.contains("\n"), "each is ONE line")
+    assert(keys(head) == V9Keys)
+    assert(detail.startsWith(head.dropRight(1) + ",\"note\":"))
+    assert(keys(detail) == V9Keys ++ DetailKeys)
+    assert(head.contains("\"pq_train_sec\":null,\"pq_encode_sec\":0.250,"))
+    val h = json.readTree(head)
+    assert(h.get("pq_train_sec").isNull)
+    assert(h.get("errors").get("ext:q_sparse_cosine").asText == msg)
+    assert(h.get("protocol").asText == "interleaved-passes-v9")
+    assert(head.contains("\"value\":1.400,")) // sum of per-query mins: 0.4 + 1.0
+    assert(!h.get("drift_split").asBoolean, "pass 3's probe32 0.30 is hot, but every split min is from pass 4")
+    val d = json.readTree(detail)
+    assert(d.get("pass_quiet").toString == "[true,true,true,false,true,true,true]")
+    assert(d.get("mrows_per_sec_split").get("q_agg_pricing").asDouble == 2.0) // 0.4M rows / 0.2 s
+  }
 }
