@@ -3,6 +3,11 @@ package graft
 /** In-JVM A/B of a boolean session conf over named queries: interleaves
   * A/B runs (shared [[Timing]] harness) so JIT/GC drift hits both arms
   * equally. Usage: runMain graft.AB <sfDir> <confKey> <reps> <name...>
+  *
+  * The scan-spread, minhash-spread, interval-bucketize and
+  * triangles-edge-centric keys are gone: each query always runs the form
+  * that was their default, and the A/B numbers that chose those defaults
+  * are in PLANS.md.
   */
 object AB {
   def main(args: Array[String]): Unit = {

@@ -1,14 +1,13 @@
 package graft
 
-/** Second-process half of the artifact-store restart gate (the Stress
-  * "restart" tier): against an EXISTING artifact store (root passed via
-  * GRAFT_ARTIFACTS_DIR by the parent), serve every artifact-backed
-  * registry and print the number of builds THIS process ran. The
-  * train-once/serve-many restart contract (round-15 verdict #2, made
-  * CI-shape by round-16 verdict #8) demands exactly zero: a restarted
-  * driver loads slots, it never re-trains. The served set is
-  * single-sourced in [[ArtifactDrive.serveAll]] so the warm phase and
-  * this probe cannot drift apart.
+/** One process of the artifact-store restart contract
+  * (`RestartContractSpec` forks it twice): against the artifact store
+  * named by GRAFT_ARTIFACTS_DIR, serve every artifact-backed registry
+  * and print the number of builds THIS process ran. On a fresh store
+  * that count is the full build; on a store an earlier process filled it
+  * must be exactly zero — a restarted driver loads slots, it never
+  * re-trains. The served set is single-sourced in
+  * [[ArtifactDrive.serveAll]].
   */
 object RestartProbe {
   def main(args: Array[String]): Unit = {

@@ -12,27 +12,6 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Hash-spread key per table — the natural downstream join/agg key, so
-    * the spread partitioning is often REUSED by the next exchange instead
-    * of adding one. Tiny broadcast dims (region/nation) are never spread.
-    */
-  private val spreadKey: Map[String, String] = Map(
-    "customer" -> "c_custkey", "supplier" -> "s_suppkey", "part" -> "p_partkey",
-    "orders" -> "o_orderkey", "lineitem" -> "l_orderkey", "events" -> "user_id",
-    "documents" -> "doc_id", "embeddings" -> "vec_id")
-
-  /** Note on local parallelism: the driver-generated test parquet has ONE
-    * row group per file, so the scan stage runs as a single task (parquet
-    * cannot split below row-group granularity) and everything pipelined
-    * onto it — filters, projections, partial aggregates — runs one-core.
-    * `graft.scan.spread=true` remedies that with a hash repartition on the
-    * table's natural key straight after the scan (predicate pushdown and
-    * column pruning still reach the scan — Catalyst pushes filters through
-    * RepartitionByExpression). This is the same remediation you'd apply on
-    * a real cluster to unsplittable inputs (gzip files, oversized row
-    * groups); data with sane splits parallelizes natively and should leave
-    * the knob off.
-    */
   /** Cheap content fingerprint of a table's parquet — the cache-key
     * component that lets trained-artifact registries
     * ([[graft.ext.Ivf.trainShared]], [[graft.ext.Pq.shared]]) survive
@@ -56,13 +35,6 @@ object Tables {
     java.util.Base64.getUrlEncoder.withoutPadding.encodeToString(md.digest())
   }
 
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
-    val spread = spark.conf.get("graft.scan.spread", "false").toBoolean
-    spreadKey.get(name) match {
-      case Some(k) if spread =>
-        df.repartition(spark.sparkContext.defaultParallelism, org.apache.spark.sql.functions.col(k))
-      case _ => df
-    }
-  }
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    spark.read.parquet(s"$sfDir/$name.parquet")
 }

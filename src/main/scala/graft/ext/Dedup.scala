@@ -52,11 +52,8 @@ object Dedup {
     // ~free and unlocks full-cluster parallelism for the heavy part.
     // Explicit partition count keeps AQE from coalescing the tiny
     // pre-compute exchange back to one partition.
-    val nonNull = df.filter(col(textCol).isNotNull)
-    val spread =
-      if (df.sparkSession.conf.get("graft.minhash.spread", "true").toBoolean)
-        nonNull.repartition(df.sparkSession.sparkContext.defaultParallelism, col(idCol))
-      else nonNull
+    val spread = df.filter(col(textCol).isNotNull)
+      .repartition(df.sparkSession.sparkContext.defaultParallelism, col(idCol))
     if (df.sparkSession.conf.get("graft.minhash.expr", "true").toBoolean)
       spread.select(
         col(idCol).as("id"),
@@ -426,21 +423,6 @@ object Dedup {
     * plen = sz − ⌈τ·sz⌉ + 1 in exact integer arithmetic; scalars = one
     * broadcastable row (n_docs, cap, rmax).
     */
-  /** The rank-encoded sets relation alone — the dictionary build + the
-    * gram→rid mapping join, without either candidate path. Public so the
-    * Stress prefix tier can time the DICT STAGE separately from the
-    * join: this stage is where the round-13 verdict's scale-killer
-    * (global row_number + dictionary broadcast) used to live.
-    */
-  def prefixEncodedSets(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      k: Int,
-      tauNum: Int,
-      tauDen: Int): DataFrame =
-    rankEncode(docs, idCol, textCol, k, tauNum, tauDen)._1
-
   private[ext] def rankEncode(
       docs: DataFrame,
       idCol: String,

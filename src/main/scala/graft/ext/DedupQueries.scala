@@ -50,16 +50,16 @@ object DedupQueries {
     truthPairsOf(Tables(s, d, "documents"))
 
   /** Blocked exact-Jaccard pair set over an arbitrary (doc_id, text)
-    * frame — exposed for [[graft.Stress]]'s duplicated-corpus worst-case
-    * measurement. SCALE HAZARD (same class as the LSH bucket blowup
-    * measured in round 6): identical duplicated texts share identical
-    * prefix blocks, so per-bucket pair work grows quadratically in the
+    * frame. SCALE HAZARD (same class as the LSH bucket blowup measured
+    * in round 6): identical duplicated texts share identical prefix
+    * blocks, so per-bucket pair work grows quadratically in the
     * duplication factor. The pipeline-ordering remediation is the same —
     * exact-dedup (hash groupBy, keep one representative) BEFORE any
-    * near-dup truth/candidate stage; measured in Stress as
-    * truth_big_dedupfirst_sec.
+    * near-dup truth/candidate stage: 16× identical texts took the pair
+    * stage 0.38 → 3.47 s, and dedup-first brought it back to 0.64 s
+    * (PLANS.md, "Truth-set gram build").
     */
-  private[graft] def truthPairsOf(docsIn: DataFrame): DataFrame =
+  private def truthPairsOf(docsIn: DataFrame): DataFrame =
     Dedup
       .blockedJaccardPairs(
         docsIn, "doc_id", "text", k = 3, minJac = 0.6,

@@ -46,22 +46,18 @@ import graft.core.Tables
   */
 object MediaSegQueries {
 
-  /** Planted shot geometry for video `id`: (width, height, per-shot
-    * frame counts) — the single source the fixture builder, the Stress
-    * tier, the streaming-twin staging, and both oracles' SQL mirror.
+  /** The raw shot-structured payload for video `id`: 2 + id%4 shots,
+    * shot s running 2 + (id+s)%3 frames — the planted geometry the
+    * fixture, the streaming-twin staging and q_scene_cuts' oracle SQL
+    * share.
     */
-  private[graft] def shotParams(id: Long, shotMult: Int): (Int, Int, Seq[Int]) = {
+  private[graft] def videoPayload(id: Long): Array[Byte] = {
     val nShots = 2 + (id % 4).toInt
-    (
+    MediaCodec.buildShotY4m(
       16 + (id % 4).toInt * 8,
       8 + (id % 2).toInt * 8,
-      (0 until nShots * shotMult).map(sh => 2 + ((id + sh % nShots) % 3).toInt))
-  }
-
-  /** The raw shot-structured payload for video `id`. */
-  private[graft] def videoPayload(id: Long, shotMult: Int = 1): Array[Byte] = {
-    val (w, h, lens) = shotParams(id, shotMult)
-    MediaCodec.buildShotY4m(w, h, lens, id)
+      (0 until nShots).map(sh => 2 + ((id + sh) % 3).toInt),
+      id)
   }
 
   /** (vid, payload) rows for the sf corpus's video items — what an
@@ -77,15 +73,13 @@ object MediaSegQueries {
       .toDF("vid", "payload")
   }
 
-  /** Per-frame luma hashes for the planted shot fixture, `shotMult`
-    * repetitions of each video's shot pattern (shotMult = 1 is the
-    * registered query; the Stress media tier raises it to grow the
-    * frames-PER-ITEM axis — the one the per-vid window actually feels).
+  /** Per-frame luma hashes for the planted shot fixture. With 16× the
+    * frames per video the scene chain ran 29.8 → 233 kframes/s: it is
+    * job-fixed-cost bound, not window bound (PLANS.md, "Media tier scale
+    * row").
     */
   def frameHashes(
-      s: org.apache.spark.sql.SparkSession,
-      d: String,
-      shotMult: Int): org.apache.spark.sql.DataFrame = {
+      s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     import s.implicits._
     val vids = Tables(s, d, "documents")
       .select(col("doc_id")).filter(col("doc_id") % 3 === 2).as[Long]
@@ -93,7 +87,7 @@ object MediaSegQueries {
       it.flatMap { id =>
         // build → parse real bytes: the differential pins the round-trip
         val (pw, ph, frames) =
-          MediaCodec.lumaFrames(videoPayload(id, shotMult)).get
+          MediaCodec.lumaFrames(videoPayload(id)).get
         frames.iterator.zipWithIndex.map { case (luma, f) =>
           (id, f, Phash.dHashLuma(pw, ph, luma))
         }
@@ -102,8 +96,7 @@ object MediaSegQueries {
   }
 
   /** Cut detection + run-length scene rollup over (vid, frame_idx,
-    * fhash) rows — the segmentation chain both the registered query and
-    * the Stress tier time.
+    * fhash) rows.
     */
   def sceneChain(hashed: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val byFrame = Window.partitionBy(col("vid")).orderBy(col("frame_idx"))
@@ -121,9 +114,8 @@ object MediaSegQueries {
   }
 
   /** The raw activity-structured payload for audio item `id`. */
-  private[graft] def audioPayload(id: Long, secMult: Int = 1): Array[Byte] = {
-    val nSec = 3 + (id % 3).toInt
-    val lens = (0 until nSec * secMult).map(sc => 2 + ((id + sc % nSec) % 3).toInt)
+  private[graft] def audioPayload(id: Long): Array[Byte] = {
+    val lens = (0 until 3 + (id % 3).toInt).map(sc => 2 + ((id + sc) % 3).toInt)
     MediaCodec.buildActivityWav(lens, 160, 16000, id)
   }
 
@@ -139,20 +131,15 @@ object MediaSegQueries {
       .toDF("aid", "payload")
   }
 
-  /** Per-window PCM peaks for the planted activity fixture, `secMult`
-    * repetitions of each item's section pattern (secMult = 1 is the
-    * registered query; see [[frameHashes]]).
-    */
+  /** Per-window PCM peaks for the planted activity fixture. */
   def windowPeaks(
-      s: org.apache.spark.sql.SparkSession,
-      d: String,
-      secMult: Int): org.apache.spark.sql.DataFrame = {
+      s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     import s.implicits._
     val auds = Tables(s, d, "documents")
       .select(col("doc_id")).filter(col("doc_id") % 3 === 1).as[Long]
     auds.mapPartitions { it =>
       it.flatMap { id =>
-        val pcm = MediaCodec.pcmSamples(audioPayload(id, secMult)).get
+        val pcm = MediaCodec.pcmSamples(audioPayload(id)).get
         (0 until pcm.length / 160).iterator.map { wi =>
           var p = 0
           var i = wi * 160
@@ -168,7 +155,7 @@ object MediaSegQueries {
   }
 
   /** Threshold + contiguous-run segment rollup over (aid, w_idx, peak)
-    * rows — shared by the registered query and the Stress tier.
+    * rows.
     */
   def activityChain(peaks: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val byWindow = Window.partitionBy(col("aid")).orderBy(col("w_idx"))
@@ -191,7 +178,7 @@ object MediaSegQueries {
   val queries: Seq[Q] = Seq(
     Q(
       "q_scene_cuts",
-      (s, d) => sceneChain(frameHashes(s, d, shotMult = 1)),
+      (s, d) => sceneChain(frameHashes(s, d)),
       // Re-derives the planted shot arithmetic: nShots = 2 + id%4, shot s
       // runs 2 + (id+s)%3 frames; starts = prefix sums. An exact match
       // means every planted boundary was detected and nothing else was.
@@ -207,7 +194,7 @@ object MediaSegQueries {
     ),
     Q(
       "q_audio_activity",
-      (s, d) => activityChain(windowPeaks(s, d, secMult = 1)),
+      (s, d) => activityChain(windowPeaks(s, d)),
       // Sections alternate active/silent starting active; the per-section
       // amplitude IS each window's exact peak, so the peak column pins
       // the 16-bit little-endian PCM decode bit-for-bit.

@@ -401,7 +401,7 @@ object QualityQueries {
       // in-plan (the fixture's own `lang` column is a random label —
       // measured 0.20 NB accuracy at 5 classes, i.e. chance — so the
       // separation a LangID must demonstrate is planted
-      // deterministically, like the Stress docs tier's rotation
+      // deterministically, like the Stress simfamily tier's rotation
       // trick). Arithmetic is the q_dsir_weights recipe end to end —
       // char-polynomial bucket hash (B = 4096 — the planted classes'
       // trigram sets are fully disjoint, so the only cross-class mass

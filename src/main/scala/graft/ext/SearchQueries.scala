@@ -151,8 +151,8 @@ object SearchQueries {
 
   /** The registered champion-list cap. C trades recall for candidate
     * volume (≤ C·M·n); the two-point sensitivity evidence (C=16 vs 64:
-    * recall in SearchSpec, runtime in the Stress retrieval tier) backs
-    * the choice — see PLANS.md.
+    * recall in SearchSpec, runtime on the replicated corpus in PLANS.md
+    * "Measured: retrieval family at replication scale") backs the choice.
     */
   private[graft] val ChampionC = 64
 
@@ -191,18 +191,18 @@ object SearchQueries {
     * session change or to time a cold build ([[clearSparseShared]]).
     */
   private[graft] def sparseIndexShared(
-      s: org.apache.spark.sql.SparkSession, d: String, c: Int = ChampionC): SparseIndex =
+      s: org.apache.spark.sql.SparkSession, d: String): SparseIndex =
     sparseIndexCache.computeIfAbsent(
       // "sparse2": the round-22 slot layout (tid-keyed signatures +
       // pre-rooted norms) — a stale "sparse" slot from an earlier build
       // must not be served into the new serving chain
-      s"$d|${Tables.fingerprint(d, "documents")}|sparse2|sig=5|C=$c",
+      s"$d|${Tables.fingerprint(d, "documents")}|sparse2|sig=5|C=$ChampionC",
       key =>
         // disk tier below the in-memory map (ArtifactStore): a cold JVM
         // serves persisted signatures/champion lists without re-scanning
         // the corpus; derived corpora keep calling sparseIndexBuild
         graft.core.ArtifactStore.loadOrBuild(s, key) { w =>
-          val ix = sparseIndexBuild(Tables(s, d, "documents"), c)
+          val ix = sparseIndexBuild(Tables(s, d, "documents"), ChampionC)
           w.df("sig", ix.sig)
           w.df("sigarr", ix.sigArr)
           w.df("champarr", ix.champArr)
@@ -1324,7 +1324,7 @@ object SearchQueries {
       // codebooks/codes; the oracle still recomputes the whole chain
       // from the raw corpus, so the differential covers build AND
       // serve every run.
-      (s, d) => championServe(sparseIndexShared(s, d, ChampionC)),
+      (s, d) => championServe(sparseIndexShared(s, d)),
       Some(
         s"WITH toks AS ($tokensSql), " +
           "tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf FROM toks GROUP BY doc_id, term), " +

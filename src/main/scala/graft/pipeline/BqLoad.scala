@@ -8,7 +8,7 @@ import graft.core.SchemaDoc
 
 /** Local twin of the BigQuery CSV LOAD JOB the reference's importer runs
   * (app/bq-importer/main.py:19-41) — the load-contract semantics that the
-  * plain `saveAsTable` stand-in ([[Pipeline.loadToTable]]) does not
+  * plain `saveAsTable` stand-in ([[CatalogWarehouseSink]]) does not
   * assert. A BQ load job is not "write whatever parses":
   *
   *   - the schema is EXPLICIT and never inferred (`job_config.schema`
@@ -26,10 +26,10 @@ import graft.core.SchemaDoc
   * The twin enforces all five locally: parse under the explicit schema in
   * PERMISSIVE mode with a corrupt-record column, count bad records
   * BEFORE any write (so failure cannot touch the destination), then
-  * apply the disposition via `saveAsTable`. Scale shape: the validation
-  * pass and the write are both distributed scans of the CSV; only the
-  * bad-record COUNT (and a bounded sample for the error message) reaches
-  * the driver.
+  * apply the disposition via `saveAsTable`, counting the loaded rows on
+  * that write. Scale shape: the validation pass and the write are both
+  * distributed scans of the CSV; only the bad-record COUNT (and a
+  * bounded sample for the error message) reaches the driver.
   */
 object BqLoad {
 
@@ -104,20 +104,18 @@ object BqLoad {
             s"${config.maxBadRecords}; first: ${sample.take(200)}")
       }
       val good = parsed.filter(col(CorruptCol).isNull).drop(CorruptCol)
-      config.writeDisposition match {
+      val mode = config.writeDisposition match {
         case WriteEmpty if spark.catalog.tableExists(table) && !spark.table(table).isEmpty =>
           throw new LoadJobFailed(s"WRITE_EMPTY: destination table $table is not empty")
-        case WriteEmpty | WriteTruncate =>
-          good.write.mode(SaveMode.Overwrite).saveAsTable(table)
-        case WriteAppend =>
-          good.write.mode(SaveMode.Append).saveAsTable(table)
+        case WriteEmpty | WriteTruncate => SaveMode.Overwrite
+        case WriteAppend => SaveMode.Append
       }
-      // output_rows = rows loaded BY THIS JOB (main.py:41-43) — for
-      // WriteAppend a destination count would report pre-existing rows
-      // too, diverging from the contract (round-15 advice). `good` is a
-      // filter over the cached validation relation, so this is a cheap
-      // second action, not a rescan.
-      LoadJobResult(outputRows = good.count(), badRecords = badCount)
+      // output_rows = rows loaded BY THIS JOB (main.py:41-43), observed
+      // on the write — for WriteAppend a destination count would report
+      // pre-existing rows too, diverging from the contract (round-15
+      // advice)
+      val loaded = WarehouseSink.observedWrite(good)(_.write.mode(mode).saveAsTable(table))
+      LoadJobResult(outputRows = loaded, badRecords = badCount)
     } finally {
       parsed.unpersist()
       ()

@@ -107,13 +107,6 @@ object Pipeline {
     sink.read(spark, layout, table)
   }
 
-  /** Stage 4b — load to a catalog table (`WRITE_TRUNCATE` ≡
-    * `mode(Overwrite).saveAsTable`, app/bq-importer/main.py:28-39).
-    * Returns the loaded row count (report parity, main.py:41-43).
-    */
-  def loadToTable(spark: SparkSession, layout: Layout, table: String): Long =
-    CatalogWarehouseSink.load(spark, layout, table)
-
   /** Full per-table pipeline: export → clean schema → clean data → load.
     * Schema stage runs strictly before data load (SURVEY §3 ordering hazard).
     */

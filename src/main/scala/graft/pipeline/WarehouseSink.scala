@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, DataFrameWriter, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 
 /** The stage-4 seam (round-15 verdict #5 / "what's missing #1"): the
@@ -32,16 +32,14 @@ trait WarehouseSink {
 }
 
 object WarehouseSink {
-  /** Truncate-write `table`'s clean CSV through `save` and return the rows
-    * written, observed on the write job itself (one Spark job in all).
+  /** Run `write` on `df` and return the rows it wrote, observed on the
+    * write job itself (no second scan, no extra Spark job).
     * `Observation.get` returns only once the write has succeeded; a
     * failed write throws before any count is read.
     */
-  private[pipeline] def observedLoad(spark: SparkSession, layout: Pipeline.Layout, table: String)(
-      save: DataFrameWriter[Row] => Unit): Long = {
+  private[pipeline] def observedWrite(df: DataFrame)(write: DataFrame => Unit): Long = {
     val rows = Observation()
-    save(Pipeline.readClean(spark, layout, table).observe(rows, count(lit(1)).as("rows"))
-      .write.mode(SaveMode.Overwrite))
+    write(df.observe(rows, count(lit(1)).as("rows")))
     rows.get("rows").asInstanceOf[Long]
   }
 }
@@ -52,7 +50,8 @@ object WarehouseSink {
   */
 object ParquetWarehouseSink extends WarehouseSink {
   override def load(spark: SparkSession, layout: Pipeline.Layout, table: String): Long =
-    WarehouseSink.observedLoad(spark, layout, table)(_.parquet(layout.warehouse(table)))
+    WarehouseSink.observedWrite(Pipeline.readClean(spark, layout, table))(
+      _.write.mode(SaveMode.Overwrite).parquet(layout.warehouse(table)))
   override def read(spark: SparkSession, layout: Pipeline.Layout, table: String): DataFrame =
     spark.read.schema(Pipeline.declaredSchema(spark, layout, table)).parquet(layout.warehouse(table))
 }
@@ -63,7 +62,8 @@ object ParquetWarehouseSink extends WarehouseSink {
   */
 object CatalogWarehouseSink extends WarehouseSink {
   override def load(spark: SparkSession, layout: Pipeline.Layout, table: String): Long =
-    WarehouseSink.observedLoad(spark, layout, table)(_.saveAsTable(table))
+    WarehouseSink.observedWrite(Pipeline.readClean(spark, layout, table))(
+      _.write.mode(SaveMode.Overwrite).saveAsTable(table))
   override def read(spark: SparkSession, layout: Pipeline.Layout, table: String): DataFrame =
     spark.table(table)
 }

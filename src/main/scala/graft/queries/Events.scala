@@ -213,21 +213,13 @@ object Events {
           (col("ts") + expr("INTERVAL 10 MINUTES")).as("t1"))
         val pur = e.filter(col("event_type") === "purchase")
           .select(col("event_id").as("pur_id"), col("ts").as("pt"))
-        val joined =
-          if (s.conf.get("graft.interval.bucketize", "true").toBoolean) {
-            val bw = 600000000L // bucket width in µs — exactly the window length
-            val errB = err.select(
-              col("err_id"), col("t0"), col("t1"),
-              explode(expr(s"sequence(unix_micros(t0) div $bw, unix_micros(t1) div $bw)")).as("bkt"))
-            val purB = pur.withColumn("bkt", expr(s"unix_micros(pt) div $bw"))
-            errB.join(purB, "bkt")
-              .filter(col("pt") >= col("t0") && col("pt") < col("t1"))
-          } else
-            // the plan Spark gives the bare predicate (nested loop) —
-            // kept selectable so graft.AB can measure what the
-            // decomposition buys
-            err.join(pur, col("pt") >= col("t0") && col("pt") < col("t1"))
-        joined
+        val bw = 600000000L // bucket width in µs — exactly the window length
+        val errB = err.select(
+          col("err_id"), col("t0"), col("t1"),
+          explode(expr(s"sequence(unix_micros(t0) div $bw, unix_micros(t1) div $bw)")).as("bkt"))
+        val purB = pur.withColumn("bkt", expr(s"unix_micros(pt) div $bw"))
+        errB.join(purB, "bkt")
+          .filter(col("pt") >= col("t0") && col("pt") < col("t1"))
           .select(
             col("err_id"), col("pur_id"),
             col("pt").cast("timestamp_ntz").as("purchase_ts"))

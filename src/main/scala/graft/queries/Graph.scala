@@ -80,8 +80,7 @@ object Graph {
               .otherwise(struct(col("b").as("s"), col("a").as("t")))
               .as("e"))
           .select(col("e.s").as("src"), col("e.t").as("dst"))
-        val tri = closedTriangles(o, edgeCentric =
-          s.conf.get("graft.triangles.edgecentric", "true").toBoolean)
+        val tri = closedTriangles(o, edgeCentric = true)
         val edges = e.agg(count(lit(1)).as("n_edges"))
         // wedges straight from the degree table — deg(deg-1) is even, so
         // integer halving is exact in both engines
@@ -1205,10 +1204,10 @@ object Graph {
     * Orientation guarantees each triangle a<b<c appears as exactly the
     * three edges a→b, a→c, b→c and is counted once.
     *
-    * Edge-centric form (default): per-node sorted out-neighbor arrays,
-    * then per EDGE (u→v) count |N⁺(u) ∩ N⁺(v)| — triangle uvw closes at
-    * its base edge only. This replaces the wedge join's materialize-
-    * every-wedge intermediate (Σ outdeg² rows through TWO shuffles — 16M
+    * Edge-centric form (what q_triangle_count runs): per-node sorted
+    * out-neighbor arrays, then per EDGE (u→v) count |N⁺(u) ∩ N⁺(v)| —
+    * triangle uvw closes at its base edge only. This replaces the wedge
+    * join's materialize-every-wedge intermediate (Σ outdeg² rows through TWO shuffles — 16M
     * at sf0.1 on a ~20k-node/800k-edge graph) with edges + two bounded
     * adjacency joins; array sizes are O(√m) by orientation, so the
     * per-edge intersect is the same work the closing join did, minus the
@@ -1216,11 +1215,9 @@ object Graph {
     * 3.11 s vs 6.32 s at sf0.1, PLANS.md) — and the gap grows with wedge
     * volume, which is the quantity power-law graphs explode.
     *
-    * Wedge-join form (graft.triangles.edgecentric=false): e1⋈e2 wedges
-    * semi-closed against e3 — kept A/B-able because at extreme scale a
-    * planner may prefer it when adjacency arrays blow the row budget;
-    * GraphSpec asserts both forms agree on hand graphs and random
-    * corpora.
+    * Wedge-join form (`edgeCentric = false`): e1⋈e2 wedges semi-closed
+    * against e3 — the independent reference GraphSpec checks the
+    * edge-centric form against, on hand graphs and random corpora.
     */
   private[queries] def closedTriangles(
       o: org.apache.spark.sql.DataFrame, edgeCentric: Boolean): org.apache.spark.sql.DataFrame =

@@ -355,9 +355,9 @@ object Structured {
       // caveat, generalized). The three-step ranking (range repartition →
       // in-partition sequence → P-row offset cumsum, one reused exchange)
       // lives in graft.core.Ranks — see its scaladoc; PlanAuditSpec
-      // executes this query and asserts the reused range exchange, and the
-      // gindex Stress tier measured it 10.9× over the window form at 9.6M
-      // rows. Total order is (md5(text), doc_id): unique, so the rank is
+      // executes this query and asserts the reused range exchange. At 9.6M
+      // rows it ran 10.9× faster than the window form (PLANS.md,
+      // q_global_index). Total order is (md5(text), doc_id): unique, so the rank is
       // well-defined and the DuckDB global-window oracle must agree
       // exactly.
       (s, d) =>

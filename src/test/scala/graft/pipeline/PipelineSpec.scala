@@ -74,11 +74,11 @@ class PipelineSpec extends SparkSpec {
     assert(first == second)
   }
 
-  test("loadToTable: WRITE_TRUNCATE semantics via saveAsTable overwrite") {
+  test("catalog sink: WRITE_TRUNCATE semantics via saveAsTable overwrite") {
     val layout = freshLayout()
     stageClean(layout, "users_tbl")
-    val n1 = Pipeline.loadToTable(spark, layout, "users_tbl")
-    val n2 = Pipeline.loadToTable(spark, layout, "users_tbl") // truncate, not append
+    val n1 = CatalogWarehouseSink.load(spark, layout, "users_tbl")
+    val n2 = CatalogWarehouseSink.load(spark, layout, "users_tbl") // truncate, not append
     assert(n1 == 3 && n2 == 3)
     assert(spark.table("users_tbl").count() == 3)
     spark.sql("DROP TABLE users_tbl")
@@ -236,6 +236,17 @@ class PipelineSpec extends SparkSpec {
     // truncate disposition: a second load REPLACES, never appends
     val r2 = BqLoad.load(spark, writeCsv(Seq("9,zoe,0.5")), t, BqLoad.LoadJobConfig(loadSchema))
     assert(r2.outputRows == 1 && spark.table(t).count() == 1)
+    }
+  }
+
+  test("load job: a valid truncate load counts output_rows on its write (4 Spark jobs)") {
+    // the validation count, then the write; a post-write count made it 6
+    withLoadTable("bq_load_jobs") { t =>
+      val csv = writeCsv(Seq("1,alice,12.5", "2,,3.25", "3,7,1.0"))
+      val (r, jobs) = jobsOf(BqLoad.load(spark, csv, t, BqLoad.LoadJobConfig(loadSchema)))
+      assert(r == BqLoad.LoadJobResult(outputRows = 3, badRecords = 0))
+      val n = jobs.size
+      assert(n == 4, s"BqLoad.load ran $n Spark jobs")
     }
   }
 
