@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 
+import graft.Verify.jstr
+
 /** Benchmark main: times the registered queries on SPARK_GRAFT_SF_DIR and
   * emits ONE compact JSON line on stdout plus a detail file on disk
   * (BENCH_OFFICIAL.json by default, GRAFT_BENCH_DETAIL overrides; the
@@ -363,12 +365,6 @@ object Bench {
     t.map { case (k, v) => k -> v.map(_._1).min }
 
   private def minPasses(t: Tier): Iterable[Int] = t.values.map(_.minBy(_._1)._2)
-
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
 
   // Locale.ROOT (via Timing): comma-decimal locales would emit invalid JSON.
   private def num(v: Double): String = Timing.fmt3(v)

@@ -3,18 +3,37 @@ package graft
 /** Ad-hoc single-query timer: runs named registered queries end-to-end
   * through the shared [[Timing]] harness N times each and prints per-run
   * seconds — for comparing plan variants without editing the headline
-  * set. Usage: runMain graft.QTime <sfDir> <reps> <name...>
+  * set. With `--ab <confKey>` it A/Bs a boolean session conf instead:
+  * both arms are warmed, then each rep runs `key=true` and `key=false`
+  * back to back, so JIT/GC drift hits both arms equally, and one line
+  * per arm is printed.
+  *
+  * Usage: runMain graft.QTime <sfDir> <reps> [--ab <confKey>] <name...>
   */
 object QTime {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val reps = args(1).toInt
-    val names = args.drop(2)
+    val (abKey, names) = args.drop(2) match {
+      case Array("--ab", key, rest @ _*) => (Some(key), rest)
+      case rest => (None, rest.toSeq)
+    }
     val spark = Sessions.build("graft-qtime")
     Timing.warm(spark, sfDir)
+    def line(tag: String, ts: Seq[Double]): String =
+      s"$tag ${ts.map(Timing.fmt).mkString(" ")}  min=${Timing.fmt(ts.min)}"
     names.foreach { n =>
-      val ts = (1 to reps).map(_ => Timing.timeQuery(spark, n, sfDir))
-      println(s"QTIME ${n.padTo(24, ' ')} ${ts.map(Timing.fmt).mkString(" ")}  min=${Timing.fmt(ts.min)}")
+      def time(): Double = Timing.timeQuery(spark, n, sfDir)
+      abKey match {
+        case None =>
+          println(line(s"QTIME ${n.padTo(24, ' ')}", (1 to reps).map(_ => time())))
+        case Some(key) =>
+          def arm(v: String): Double = { spark.conf.set(key, v); time() }
+          arm("true"); arm("false") // warm both arms
+          val ab = (1 to reps).map(_ => (arm("true"), arm("false")))
+          println(line(s"AB ${n.padTo(24, ' ')} $key=true ", ab.map(_._1)))
+          println(line(s"AB ${n.padTo(24, ' ')} $key=false", ab.map(_._2)))
+      }
     }
     spark.stop()
   }

@@ -276,12 +276,16 @@ object Stress {
               ((te.taskInfo.duration, m.shuffleReadMetrics.totalBytesRead))
         }
       /** (worst max/avg task-duration ratio, worst max/avg shuffle-read
-        * ratio, stages counted): stages with ≥ 8 tasks; the shuffle
-        * ratio only over stages reading ≥ 1 MB total (below that the
-        * "skew" is constant-overhead noise).
+        * ratio, stages counted): stages with at least min(8, the
+        * session's default parallelism) tasks, since sessions run one
+        * shuffle partition per core and a fixed 8 would skip nearly
+        * every stage on a smaller box; the shuffle ratio only over
+        * stages reading ≥ 1 MB total (below that the "skew" is
+        * constant-overhead noise).
         */
       def worst(): (Double, Double, Int) = synchronized {
-        val st = byStage.values.filter(_.length >= 8).toSeq
+        val minTasks = math.min(8, spark.sparkContext.defaultParallelism)
+        val st = byStage.values.filter(_.length >= minTasks).toSeq
         def ratio(xs: Seq[Long]): Double = {
           val av = xs.sum.toDouble / xs.length
           if (av <= 0) 1.0 else xs.max / av

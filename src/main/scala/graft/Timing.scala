@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared measurement harness for the QTime/AB mains: one definition of
-  * "run a registered query end-to-end" (noop sink — materializes every
-  * column without collecting) and locale-safe number formatting, so the
-  * two tools can never measure differently.
+/** Shared measurement harness: one definition of "run a registered
+  * query end-to-end" (noop sink — materializes every column without
+  * collecting) for QTime's plain and `--ab` modes, so the two can never
+  * measure differently, plus locale-safe number formatting.
   */
 object Timing {
 

@@ -78,21 +78,20 @@ object Verify {
     // thread's delete and here must not leave a stale parquet for the
     // compare. (Its own post-write re-check covers the reverse order.)
     cancelled.forEach(name => deleteRec(new java.io.File(s"$outDir/$name")))
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  /** A JSON string literal: quote, backslash and newline escaped, every
+    * other control char (< 0x20) as \u00XX, so a tab or CR in an oracle
+    * string cannot make the reader's json.load fail. Shared by the
+    * oracle_sql.json writers and the Bench JSON lines.
+    */
+  private[graft] def jstr(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
+    } + "\""
 }

@@ -16,13 +16,8 @@ object VerifySome {
       val q = Registry.byName(name)
       q.run(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     }
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
     val oracle = names.flatMap(n => Registry.byName(n).oracle.map(n -> _))
-      .map { case (n, sql) => s"${jstr(n)}:${jstr(sql)}" }
+      .map { case (n, sql) => s"${Verify.jstr(n)}:${Verify.jstr(sql)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracle)
     spark.stop()

@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.Q
 import graft.core.Tables
@@ -773,58 +773,84 @@ object SearchQueries {
         .localCheckpoint(true)
     }
 
-  /** Exact maxsim scores (q_id, n_id, li_score) for a (q_id, n_id)
-    * candidate relation over the [[tokenVecs]] corpus: Σ over the query's
-    * first-4 token positions of the per-position max cosine, the 4-term
-    * sum pinned as m0+m1+m2+m3 — the shared scoring stage of the
-    * late-interaction family (served and pruned forms both converge
-    * here; the full-scan form is the same chain over all pairs).
-    */
-  private[ext] def maxsimOver(
-      vecs: org.apache.spark.sql.DataFrame,
-      pairs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    maxsimOverQ(
-      vecs.filter(col("doc_id") < 3 && col("pos") < 4)
-        .select(col("doc_id").as("q_id"), col("pos").as("qi"),
-          col("tv").as("qv"), col("tn2").as("qn2")),
-      vecs, pairs)
+  // ---- the late-interaction (ColBERT maxsim) stages, each written once;
+  // every query of the family and latePruned compose them ----
 
-  /** [[maxsimOver]] with an EXPLICIT query-token relation (q_id, qi, qv,
-    * qn2) — for callers that already hold the ≤12 query-token rows
-    * (q_late_interaction_pq collects them for its ADC tables): feeding
-    * them back as a literal relation saves one corpus scan per scoring
-    * stage (round 22, guide §5 — the driver already paid for these
-    * rows).
+  /** The query tokens of the family over a [[tokenVecs]] relation: the
+    * first 4 token positions of docs 0-2.
     */
-  private[ext] def maxsimOverQ(
-      q: org.apache.spark.sql.DataFrame,
-      vecs: org.apache.spark.sql.DataFrame,
-      pairs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val c = vecs.select(col("doc_id").as("n_id"), col("tv").as("cv"), col("tn2").as("cn2"))
-    // ONE aggregation (round 21, guide §2.4): the old shape grouped by
-    // (q_id, n_id, qi) for the per-position max and then again by
-    // (q_id, n_id) for the pivot — but max(when(qi = j, sim)) over the
-    // raw sims IS the per-position max (max of maxes ≡ max), so the
-    // intermediate exchange+agg bought nothing. Bit-identical: max is
-    // order-free and the null/coalesce semantics are unchanged.
-    pairs
-      .join(q, Seq("q_id"))
-      .join(c, Seq("n_id"))
+  private def queryTokens(vecs: DataFrame): DataFrame =
+    vecs.filter(col("doc_id") < 3 && col("pos") < 4)
+
+  /** [[queryTokens]] as the scorer's query leg (q_id, qi, qv, qn2). */
+  private def queryVecs(vecs: DataFrame): DataFrame =
+    queryTokens(vecs).select(col("doc_id").as("q_id"), col("pos").as("qi"),
+      col("tv").as("qv"), col("tn2").as("qn2"))
+
+  /** The scorer's document leg (n_id, cv, cn2): every token of every doc. */
+  private def docVecs(vecs: DataFrame): DataFrame =
+    vecs.select(col("doc_id").as("n_id"), col("tv").as("cv"), col("tn2").as("cn2"))
+
+  /** The served candidates: every (q_id, n_id ≠ q_id) whose doc shares at
+    * least one term with the query's [[queryTokens]].
+    */
+  private def termCandidates(vecs: DataFrame): DataFrame =
+    queryTokens(vecs).select(col("doc_id").as("q_id"), col("term")).distinct()
+      .join(vecs.select(col("doc_id").as("n_id"), col("term")), Seq("term"))
+      .filter(col("q_id") =!= col("n_id"))
+      .select(col("q_id"), col("n_id")).distinct()
+
+  /** The per-token max sum Σ_{j=0..3} max(x | qi = j), an aggregate over
+    * the per-token rows of one (q_id, n_id) group. max over the raw rows
+    * IS the per-position max, so one aggregation suffices. The sum is
+    * pinned as m0+m1+m2+m3, so the double result is bit-equal to the
+    * DuckDB oracle's. An absent position (a query doc with fewer than 4
+    * tokens) adds 0: a null would null the whole sum.
+    */
+  private[ext] def perTokenMaxSum(x: Column): Column =
+    coalesce(max(when(col("qi") === 0, x)), lit(0.0)) +
+      coalesce(max(when(col("qi") === 1, x)), lit(0.0)) +
+      coalesce(max(when(col("qi") === 2, x)), lit(0.0)) +
+      coalesce(max(when(col("qi") === 3, x)), lit(0.0))
+
+  /** ColBERT maxsim over a token-pair relation (q_id, n_id, qi, qv, qn2,
+    * cv, cn2), one row per (query token, doc token): each pair's cosine,
+    * then [[perTokenMaxSum]] per (q_id, n_id). Returns (q_id, n_id,
+    * li_score); the caller's join decides which pairs are scored.
+    */
+  private[ext] def maxsim(tokenPairs: DataFrame): DataFrame =
+    tokenPairs
       .select(
         col("q_id"), col("n_id"), col("qi"),
         (Similarity.dot(col("qv"), col("cv")) /
           (sqrt(col("qn2")) * sqrt(col("cn2")))).as("sim"))
       .groupBy(col("q_id"), col("n_id"))
-      .agg(
-        max(when(col("qi") === 0, col("sim"))).as("m0"),
-        max(when(col("qi") === 1, col("sim"))).as("m1"),
-        max(when(col("qi") === 2, col("sim"))).as("m2"),
-        max(when(col("qi") === 3, col("sim"))).as("m3"))
-      .select(
-        col("q_id"), col("n_id"),
-        (coalesce(col("m0"), lit(0.0)) + coalesce(col("m1"), lit(0.0)) +
-          coalesce(col("m2"), lit(0.0)) + coalesce(col("m3"), lit(0.0))).as("li_score"))
-  }
+      .agg(perTokenMaxSum(col("sim")).as("li_score"))
+
+  /** The top `k` rows per q_id by `score` desc, ties by n_id, ranked 1..k
+    * in `rankCol`: exactly `row_number() over (partition by q_id order by
+    * score desc, n_id) <= k`, the shape [[graft.plans.TopKRewrite]] turns
+    * into a bounded per-key heap.
+    */
+  private[ext] def topByScore(df: DataFrame, score: String, k: Int, rankCol: String = "rank"): DataFrame =
+    df.withColumn(rankCol, row_number().over(
+      Window.partitionBy(col("q_id")).orderBy(col(score).desc, col("n_id"))))
+      .filter(col(rankCol) <= k)
+
+  /** Exact maxsim scores (q_id, n_id, li_score) of a (q_id, n_id)
+    * candidate relation over the [[tokenVecs]] corpus.
+    */
+  private[ext] def maxsimOver(vecs: DataFrame, pairs: DataFrame): DataFrame =
+    maxsimOverQ(queryVecs(vecs), vecs, pairs)
+
+  /** [[maxsimOver]] with an explicit query leg (q_id, qi, qv, qn2), for
+    * callers that already hold the ≤12 query-token rows
+    * (q_late_interaction_pq collects them for its ADC tables): feeding
+    * them back as a literal relation saves one corpus scan per scoring
+    * stage.
+    */
+  private[ext] def maxsimOverQ(q: DataFrame, vecs: DataFrame, pairs: DataFrame): DataFrame =
+    maxsim(pairs.join(q, Seq("q_id")).join(docVecs(vecs), Seq("n_id")))
 
   /** DuckDB mirror of [[maxsimOver]]: emits `<p>sims`/`<p>ms`/`<p>scored`
     * CTEs scoring the (q_id, n_id) relation `candRel`; expects `tn`.
@@ -850,7 +876,6 @@ object SearchQueries {
   private[ext] def latePruned(
       vecsIn: org.apache.spark.sql.DataFrame,
       seedWidth: Int = 32): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
       // the token-vector relation feeds the cell table, doc-cell map,
       // query legs, and both exact-scoring stages — materialize it once
       // (round 21; the same multiply-consumed-relation rule the bound
@@ -881,10 +906,7 @@ object SearchQueries {
         .groupBy(col("cell")).agg(min(col("cm")).as("b"))
       val docCells = vecs.withColumn("cell", cellOf)
         .select(col("doc_id").as("n_id"), col("cell")).distinct()
-      val q = vecs.filter(col("doc_id") < 3 && col("pos") < 4)
-        .select(col("doc_id").as("q_id"), col("pos").as("qi"),
-          col("tv").as("qv"), col("tn2").as("qn2"))
-      val qa = q.crossJoin(broadcast(cent.join(cellRad, Seq("cell"))))
+      val qa = queryVecs(vecs).crossJoin(broadcast(cent.join(cellRad, Seq("cell"))))
         .select(col("q_id"), col("qi"), col("cell"), col("b"),
           (Similarity.dot(col("qv"), col("cent")) /
             (sqrt(col("qn2")) * sqrt(Similarity.dot(col("cent"), col("cent"))))).as("a"))
@@ -899,27 +921,17 @@ object SearchQueries {
       // lesson) or the whole bound pipeline re-executes per consumer —
       // measured 8 copies of the cell-cross subtree in the un-cut plan,
       // enforced down to 1 by PlanAuditSpec.
-      // one aggregation — max(when(qi = j, ub)) over the raw bounds ≡
-      // the per-position max (max of maxes; round 21). Coalesce each qi
-      // term to 0, exactly as maxsimOver does: a query doc with fewer
-      // than 4 tokens otherwise nulls EVERY ub, so the escape filter
-      // matches nothing and the "provably exact" top-5 silently
-      // degrades to seed-only (both engines alike, so the differential
-      // can't catch it).
+      // A doc's bound sums the per-token max over its cells with the
+      // scorer's own [[perTokenMaxSum]]: its coalesce-to-0 keeps a query
+      // doc with fewer than 4 tokens from nulling EVERY ub, which would
+      // make the escape filter match nothing and silently degrade the
+      // "provably exact" top-5 to seed-only.
       val ubs = qcb.join(docCells, Seq("cell"))
         .filter(col("q_id") =!= col("n_id"))
         .groupBy(col("q_id"), col("n_id"))
-        .agg((coalesce(max(when(col("qi") === 0, col("ub"))), lit(0.0)) +
-          coalesce(max(when(col("qi") === 1, col("ub"))), lit(0.0)) +
-          coalesce(max(when(col("qi") === 2, col("ub"))), lit(0.0)) +
-          coalesce(max(when(col("qi") === 3, col("ub"))), lit(0.0)))
-          .as("ub"))
+        .agg(perTokenMaxSum(col("ub")).as("ub"))
         .localCheckpoint(true)
-      val seed = ubs
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("q_id")).orderBy(col("ub").desc, col("n_id"))))
-        .filter(col("rk") <= seedWidth)
-        .select(col("q_id"), col("n_id"))
+      val seed = topByScore(ubs, "ub", seedWidth, "rk").select(col("q_id"), col("n_id"))
       val seedScores = maxsimOver(vecs, seed).localCheckpoint(true)
       val tau = seedScores
         .withColumn("rk", row_number().over(
@@ -933,12 +945,7 @@ object SearchQueries {
         .select(col("q_id"), col("n_id"))
       val finalScores = seedScores.unionByName(maxsimOver(vecs, escapes)).localCheckpoint(true)
       val nScored = finalScores.groupBy(col("q_id")).agg(count(lit(1)).as("n_scored"))
-      finalScores
-        .withColumn(
-          "rank",
-          row_number().over(
-            Window.partitionBy(col("q_id")).orderBy(col("li_score").desc, col("n_id"))))
-        .filter(col("rank") <= 5)
+      topByScore(finalScores, "li_score", 5)
         .join(nScored, Seq("q_id"))
         .select(col("q_id"), col("rank"), col("n_id"), col("li_score"), col("n_scored"))
         .orderBy("q_id", "rank")
@@ -1411,36 +1418,8 @@ object SearchQueries {
       // dots, list-bounded, and the token-vector derivation is a pure
       // per-row projection any shard computes locally.
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val vecs = tokenVecs(Tables(s, d, "documents"))
-        val q = vecs.filter(col("doc_id") < 3 && col("pos") < 4)
-          .select(col("doc_id").as("q_id"), col("pos").as("qi"),
-            col("tv").as("qv"), col("tn2").as("qn2"))
-        val c = vecs
-          .select(col("doc_id").as("n_id"), col("tv").as("cv"), col("tn2").as("cn2"))
-        // one aggregation — max(when(qi = j, sim)) over raw sims ≡ the
-        // per-position max (see maxsimOver, round 21)
-        val scored = q.join(c, col("q_id") =!= col("n_id"))
-          .select(
-            col("q_id"), col("n_id"), col("qi"),
-            (Similarity.dot(col("qv"), col("cv")) /
-              (sqrt(col("qn2")) * sqrt(col("cn2")))).as("sim"))
-          .groupBy(col("q_id"), col("n_id"))
-          .agg(
-            max(when(col("qi") === 0, col("sim"))).as("m0"),
-            max(when(col("qi") === 1, col("sim"))).as("m1"),
-            max(when(col("qi") === 2, col("sim"))).as("m2"),
-            max(when(col("qi") === 3, col("sim"))).as("m3"))
-          .select(
-            col("q_id"), col("n_id"),
-            (coalesce(col("m0"), lit(0.0)) + coalesce(col("m1"), lit(0.0)) +
-              coalesce(col("m2"), lit(0.0)) + coalesce(col("m3"), lit(0.0))).as("li_score"))
-        scored
-          .withColumn(
-            "rank",
-            row_number().over(
-              Window.partitionBy(col("q_id")).orderBy(col("li_score").desc, col("n_id"))))
-          .filter(col("rank") <= 5)
+        topByScore(maxsim(queryVecs(vecs).join(docVecs(vecs), col("q_id") =!= col("n_id"))), "li_score", 5)
           .select(col("q_id"), col("rank"), col("n_id"), col("li_score"))
           .orderBy("q_id", "rank")
       },
@@ -1476,21 +1455,10 @@ object SearchQueries {
       // per-query scored-candidate count) so the df-bounded pool size is
       // itself differentially checked.
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val vecs = tokenVecs(Tables(s, d, "documents"))
-        val qterms = vecs.filter(col("doc_id") < 3 && col("pos") < 4)
-          .select(col("doc_id").as("q_id"), col("term")).distinct()
-        val cand = qterms
-          .join(vecs.select(col("doc_id").as("n_id"), col("term")), Seq("term"))
-          .filter(col("q_id") =!= col("n_id"))
-          .select(col("q_id"), col("n_id")).distinct()
+        val cand = termCandidates(vecs)
         val nCand = cand.groupBy(col("q_id")).agg(count(lit(1)).as("n_cand"))
-        maxsimOver(vecs, cand)
-          .withColumn(
-            "rank",
-            row_number().over(
-              Window.partitionBy(col("q_id")).orderBy(col("li_score").desc, col("n_id"))))
-          .filter(col("rank") <= 5)
+        topByScore(maxsimOver(vecs, cand), "li_score", 5)
           .join(nCand, Seq("q_id"))
           .select(col("q_id"), col("rank"), col("n_id"), col("li_score"), col("n_cand"))
           .orderBy("q_id", "rank")
@@ -1616,7 +1584,6 @@ object SearchQueries {
       // 32×); the compressed stage is the only corpus-wide scan and
       // reads codes; exact re-rank touches 10 docs/query.
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         // DELIBERATELY NOT checkpointed (root-caused in round 22, twice
         // measured): the remaining corpus-wide consumers are the two
         // exact maxsim c-legs, which are INDEPENDENT single-task
@@ -1647,9 +1614,7 @@ object SearchQueries {
         // sf0.1) with lookups against the wide artifact; the original
         // floats are never touched at serving time, exactly the
         // FAISS/ColBERTv2 contract.
-        val qRows = vecs.filter(col("doc_id") < 3 && col("pos") < 4)
-          .select(col("doc_id"), col("pos"), col("tv"), col("tn2"))
-          .collect()
+        val qRows = queryVecs(vecs).collect()
           .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2).toIndexedSeq, r.getDouble(3)))
         val sub = 4
         val qTabs = qRows.toSeq.map { case (qid, qi, qv, qn2) =>
@@ -1662,26 +1627,15 @@ object SearchQueries {
         import s.implicits._
         val qDf = qTabs.toDF("q_id", "qi", "qn2", "tab0", "tab1", "tab2", "tab3")
         def lk(tab: String, c: String) = element_at(col(tab), col(c) + 1)
-        val shortlist = broadcast(qDf)
+        val adc = broadcast(qDf)
           .join(wide.withColumn("n_id", expr("vec_id div 16")), col("q_id") =!= col("n_id"))
           .select(
             col("q_id"), col("n_id"), col("qi"),
             ((lk("tab0", "c0") + lk("tab1", "c1") + lk("tab2", "c2") + lk("tab3", "c3")) /
               (sqrt(col("qn2")) * sqrt(col("rn2")))).as("sim"))
-          // one aggregation — max(when(qi = j, sim)) over raw sims ≡ the
-          // per-position max (see maxsimOver, round 21); coalesce to 0
-          // per qi as before: a <4-token query doc must shortlist by the
-          // sum of its PRESENT positions, not null out every candidate.
           .groupBy(col("q_id"), col("n_id"))
-          .agg((coalesce(max(when(col("qi") === 0, col("sim"))), lit(0.0)) +
-            coalesce(max(when(col("qi") === 1, col("sim"))), lit(0.0)) +
-            coalesce(max(when(col("qi") === 2, col("sim"))), lit(0.0)) +
-            coalesce(max(when(col("qi") === 3, col("sim"))), lit(0.0)))
-            .as("li_c"))
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("q_id")).orderBy(col("li_c").desc, col("n_id"))))
-          .filter(col("rk") <= 10)
-          .select(col("q_id"), col("n_id"))
+          .agg(perTokenMaxSum(col("sim")).as("li_c"))
+        val shortlist = topByScore(adc, "li_c", 10, "rk").select(col("q_id"), col("n_id"))
         // Scan dedup (round 22, guide §5): the query-token relation was
         // ALREADY collected (qRows, for the ADC tables) — feed it back
         // as a literal to both exact maxsim stages instead of two more
@@ -1695,16 +1649,11 @@ object SearchQueries {
         val qLit = qRows.toSeq
           .toDF("q_id", "qi", "qv", "qn2")
           .select(col("q_id"), col("qi"), col("qv").cast("array<double>").as("qv"), col("qn2"))
-        val reranked = maxsimOverQ(qLit, vecs, shortlist)
-          .withColumn("rank", row_number().over(
-            Window.partitionBy(col("q_id")).orderBy(col("li_score").desc, col("n_id"))))
-          .filter(col("rank") <= 5)
+        val reranked = topByScore(maxsimOverQ(qLit, vecs, shortlist), "li_score", 5)
         val docs = wide.select(expr("vec_id div 16").as("n_id")).distinct()
         val qids = docs.filter(col("n_id") < 3).select(col("n_id").as("q_id"))
-        val exactTop5 = maxsimOverQ(qLit, vecs, qids.crossJoin(docs).filter(col("q_id") =!= col("n_id")))
-          .withColumn("rank", row_number().over(
-            Window.partitionBy(col("q_id")).orderBy(col("li_score").desc, col("n_id"))))
-          .filter(col("rank") <= 5)
+        val exactTop5 = topByScore(
+          maxsimOverQ(qLit, vecs, qids.crossJoin(docs).filter(col("q_id") =!= col("n_id"))), "li_score", 5)
         SimilarityQueries.recallGate(
           exactTop5.select(col("q_id"), col("n_id")),
           reranked.select(col("q_id"), col("n_id")), 0.8)
@@ -1734,27 +1683,16 @@ object SearchQueries {
       // rankings are the gate-scale chains; the metric stage is
       // rank-list-sized (5 rows per query), never corpus-sized.
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val wDcg = (1 to 5).map(r => math.round(1e6 / (math.log(r + 1.0) / math.log(2.0))))
         val wMrr = (1 to 5).map(r => math.round(1e6 / r.toDouble))
         val idcg = (1 to 5).map(r => (6 - r) * wDcg(r - 1)).sum
         val vecs = tokenVecs(Tables(s, d, "documents")).localCheckpoint(true)
-        val w = Window.partitionBy(col("q_id")).orderBy(col("li_score").desc, col("n_id"))
         val docs = vecs.select(col("doc_id").as("n_id")).distinct()
         val qids = vecs.filter(col("doc_id") < 3).select(col("doc_id").as("q_id")).distinct()
-        val truth = maxsimOver(vecs, qids.crossJoin(docs).filter(col("q_id") =!= col("n_id")))
-          .withColumn("frnk", row_number().over(w))
-          .filter(col("frnk") <= 5)
+        val truth = topByScore(
+          maxsimOver(vecs, qids.crossJoin(docs).filter(col("q_id") =!= col("n_id"))), "li_score", 5, "frnk")
           .select(col("q_id"), col("n_id"), (lit(6) - col("frnk")).cast("long").as("rel"))
-        val qterms = vecs.filter(col("doc_id") < 3 && col("pos") < 4)
-          .select(col("doc_id").as("q_id"), col("term")).distinct()
-        val cand = qterms
-          .join(vecs.select(col("doc_id").as("n_id"), col("term")), Seq("term"))
-          .filter(col("q_id") =!= col("n_id"))
-          .select(col("q_id"), col("n_id")).distinct()
-        val sys = maxsimOver(vecs, cand)
-          .withColumn("srnk", row_number().over(w))
-          .filter(col("srnk") <= 5)
+        val sys = topByScore(maxsimOver(vecs, termCandidates(vecs)), "li_score", 5, "srnk")
         val wdArr = array(wDcg.map(lit): _*)
         val wmArr = array(wMrr.map(lit): _*)
         sys

@@ -1284,12 +1284,13 @@ object SimilarityQueries {
       // needs). Cross-engine exact: quantized-integer dots through the
       // single sqrt chain, per-token maxes are order-independent, and
       // the 4-term sum is written as m0+m1+m2+m3 in BOTH engines — a
-      // fixed expression order, not a float groupBy fold. Scale shape:
+      // fixed expression order, not a float groupBy fold (the shared
+      // SearchQueries.maxsim scorer; every pseudo-token is present, so
+      // its coalesce-to-0 never fires here). Scale shape:
       // gate-scale scores all pairs (it IS the oracle); production
       // generates candidates from any first-stage list and late-interacts
       // only the shortlist — per-pair work is tokens², list-bounded.
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         def toks(df: org.apache.spark.sql.DataFrame, idCol: String, tokCol: String) =
           df.select(
             col("vec_id").as(idCol),
@@ -1302,29 +1303,7 @@ object SimilarityQueries {
           .select(col("q_id"), col("qi"), col("tv").as("qv"), col("tn2").as("qn2"))
         val c = toks(emb, "n_id", "di")
           .select(col("n_id"), col("di"), col("tv").as("cv"), col("tn2").as("cn2"))
-        // one aggregation — max(when(qi = j, sim)) over raw sims ≡ the
-        // per-position max (max of maxes; SearchQueries.maxsimOver,
-        // round 21), so the intermediate (q, n, qi) exchange+agg is gone
-        val scored = q.join(c, col("q_id") =!= col("n_id"))
-          .select(
-            col("q_id"), col("n_id"), col("qi"),
-            (Similarity.dot(col("qv"), col("cv")) /
-              (sqrt(col("qn2")) * sqrt(col("cn2")))).as("sim"))
-          .groupBy(col("q_id"), col("n_id"))
-          .agg(
-            max(when(col("qi") === 0, col("sim"))).as("m0"),
-            max(when(col("qi") === 1, col("sim"))).as("m1"),
-            max(when(col("qi") === 2, col("sim"))).as("m2"),
-            max(when(col("qi") === 3, col("sim"))).as("m3"))
-          .select(
-            col("q_id"), col("n_id"),
-            (col("m0") + col("m1") + col("m2") + col("m3")).as("li_score"))
-        scored
-          .withColumn(
-            "rank",
-            row_number().over(
-              Window.partitionBy(col("q_id")).orderBy(col("li_score").desc, col("n_id"))))
-          .filter(col("rank") <= 5)
+        SearchQueries.topByScore(SearchQueries.maxsim(q.join(c, col("q_id") =!= col("n_id"))), "li_score", 5)
           .select(col("q_id"), col("rank"), col("n_id"), col("li_score"))
           .orderBy("q_id", "rank")
       },

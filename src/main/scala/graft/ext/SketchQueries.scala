@@ -285,17 +285,7 @@ object SketchQueries {
       // telemetry from 512-byte-per-shard state — no pairwise corpus
       // join anywhere near the data.
       (s, d) => {
-        val (bi, sk, _) = kmvParts(s, d)
-        val pairs = sk.select(col("source").as("source_a"), col("sk").as("ska"))
-          .join(
-            sk.select(col("source").as("source_b"), col("sk").as("skb")),
-            col("source_a") < col("source_b"))
-        val dist = bi.distinct()
-        val common = dist.select(col("source").as("source_a"), col("bg"))
-          .join(dist.select(col("source").as("source_b"), col("bg")), "bg")
-          .filter(col("source_a") < col("source_b"))
-          .groupBy(col("source_a"), col("source_b"))
-          .agg(count(lit(1)).as("n_exact_common"))
+        val (pairs, _, common) = kmvPairParts(s, d, "n_exact_common")
         pairs
           .join(common, Seq("source_a", "source_b"), "left")
           .select(
@@ -338,35 +328,17 @@ object SketchQueries {
       // VALUE hash-matches DuckDB's relational reconstruction — union:
       // re-rank the combined distinct hash sets to K; diff: A's k-min
       // rows below θ anti-joined against B's. Same 190 pairs as
-      // q_kmv_overlap.
-      (s, d) => {
-        val (bi, sk, _) = kmvParts(s, d)
-        val pairs = sk.select(col("source").as("source_a"), col("sk").as("ska"))
-          .join(
-            sk.select(col("source").as("source_b"), col("sk").as("skb")),
-            col("source_a") < col("source_b"))
-        val dist = bi.distinct()
-        // exact sides by inclusion-exclusion over two small grouped
-        // relations: |A ∪ B| = n_a + n_b − n_common, |A \ B| = n_a −
-        // n_common — no per-pair corpus join beyond the common counts
-        val perSrc = dist.groupBy(col("source")).agg(count(lit(1)).as("nd"))
-        val common = dist.select(col("source").as("source_a"), col("bg"))
-          .join(dist.select(col("source").as("source_b"), col("bg")), "bg")
-          .filter(col("source_a") < col("source_b"))
-          .groupBy(col("source_a"), col("source_b"))
-          .agg(count(lit(1)).as("ncom"))
-        pairs
-          .join(perSrc.select(col("source").as("source_a"), col("nd").as("na")), "source_a")
-          .join(perSrc.select(col("source").as("source_b"), col("nd").as("nb")), "source_b")
-          .join(common, Seq("source_a", "source_b"), "left")
+      // q_kmv_overlap; the exact sides by inclusion-exclusion: |A ∪ B| =
+      // n_a + n_b − n_common, |A \ B| = n_a − n_common.
+      (s, d) =>
+        kmvPairSizes(s, d)
           .select(
             col("source_a"), col("source_b"),
             (col("na") + col("nb") - coalesce(col("ncom"), lit(0L))).as("n_exact_union"),
             (col("na") - coalesce(col("ncom"), lit(0L))).as("n_exact_only_a"),
             expr("graft_kmv_est(graft_kmv_union(ska, skb))").as("est_union"),
             expr("graft_kmv_diff(ska, skb)").as("est_only_a"))
-          .orderBy("source_a", "source_b")
-      },
+          .orderBy("source_a", "source_b"),
       Some(
         kmvOracleCtes +
           "t AS (SELECT source, CASE WHEN COUNT(*) < 64 THEN CAST(4294967296 AS BIGINT) " +
@@ -477,12 +449,6 @@ object SketchQueries {
     )
   )
 
-  /** Shared KMV inputs: (per-source bigram relation, per-source
-    * graft_kmv sketches, the q_kmv_distinct output) — one definition so
-    * the distinct and overlap gates aggregate the identical stream.
-    * Bigrams via equal-length slice zip (no `sequence(1, 0)` descending
-    * trap on short docs).
-    */
   private def kmvJaccardQ: Q = Q(
     "q_kmv_jaccard",
     // Similarity TELEMETRY from stored sketches — the chart a shard
@@ -494,23 +460,8 @@ object SketchQueries {
     // hash-match too). Exact counterparts ride alongside via
     // inclusion-exclusion. At 100 TB: pairwise corpus similarity from
     // K longs per shard, no co-scan.
-    (s, d) => {
-      val (bi, sk, _) = kmvParts(s, d)
-      val pairs = sk.select(col("source").as("source_a"), col("sk").as("ska"))
-        .join(
-          sk.select(col("source").as("source_b"), col("sk").as("skb")),
-          col("source_a") < col("source_b"))
-      val dist = bi.distinct()
-      val perSrc = dist.groupBy(col("source")).agg(count(lit(1)).as("nd"))
-      val common = dist.select(col("source").as("source_a"), col("bg"))
-        .join(dist.select(col("source").as("source_b"), col("bg")), "bg")
-        .filter(col("source_a") < col("source_b"))
-        .groupBy(col("source_a"), col("source_b"))
-        .agg(count(lit(1)).as("ncom"))
-      pairs
-        .join(perSrc.select(col("source").as("source_a"), col("nd").as("na")), "source_a")
-        .join(perSrc.select(col("source").as("source_b"), col("nd").as("nb")), "source_b")
-        .join(common, Seq("source_a", "source_b"), "left")
+    (s, d) =>
+      kmvPairSizes(s, d)
         .select(
           col("source_a"), col("source_b"),
           (coalesce(col("ncom"), lit(0L)).cast("double") /
@@ -522,8 +473,7 @@ object SketchQueries {
             expr("graft_kmv_est(graft_kmv_union(ska, skb))")).as("est_jaccard"),
           (expr("graft_kmv_intersect(ska, skb)") /
             expr("graft_kmv_est(ska)")).as("est_containment_a"))
-        .orderBy("source_a", "source_b")
-    },
+        .orderBy("source_a", "source_b"),
     Some(
       kmvOracleCtes +
         "t AS (SELECT source, CASE WHEN COUNT(*) < 64 THEN CAST(4294967296 AS BIGINT) " +
@@ -569,11 +519,6 @@ object SketchQueries {
         "ORDER BY 1, 2")
   )
 
-  /** The (source, bg) bigram relation — ONE spelling shared by the
-    * batch gates and the ingest twin ([[graft.streaming.KmvStream]]),
-    * so stream and batch cannot drift. Streamable: pure per-row
-    * expressions.
-    */
   /** The windowed bigram relation behind q_kmv_windowed and the
     * stream twin's windowed view — single-sourced (the kmvBigrams
     * discipline) so the registered row, the oracle, and the ingest
@@ -588,6 +533,11 @@ object SketchQueries {
         "zip_with(slice(t, 1, greatest(size(t) - 1, 0)), " +
           "slice(t, 2, greatest(size(t) - 1, 0)), (a, b) -> concat(a, '_', b))")).as("bg"))
 
+  /** The (source, bg) bigram relation — ONE spelling shared by the
+    * batch gates and the ingest twin ([[graft.streaming.KmvStream]]),
+    * so stream and batch cannot drift. Streamable: pure per-row
+    * expressions.
+    */
   private[graft] def kmvBigrams(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     docs
       .select(col("source"), filter(split(col("text"), " "), x => x =!= "").as("t"))
@@ -595,6 +545,12 @@ object SketchQueries {
         "zip_with(slice(t, 1, greatest(size(t) - 1, 0)), " +
           "slice(t, 2, greatest(size(t) - 1, 0)), (a, b) -> concat(a, '_', b))")).as("bg"))
 
+  /** Shared KMV inputs: (per-source bigram relation, per-source
+    * graft_kmv sketches, the q_kmv_distinct output) — one definition so
+    * the distinct and overlap gates aggregate the identical stream.
+    * Bigrams via equal-length slice zip (no `sequence(1, 0)` descending
+    * trap on short docs).
+    */
   private def kmvParts(s: org.apache.spark.sql.SparkSession, d: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
         org.apache.spark.sql.DataFrame) = {
@@ -608,6 +564,43 @@ object SketchQueries {
         expr("graft_kmv_est(sk)").as("est"))
       .orderBy("source")
     (bi, sk, out)
+  }
+
+  /** The source-pair relations of the theta set algebra (q_kmv_overlap,
+    * _setops, _jaccard): (every pair a < b with both stored sketches
+    * (ska, skb), the distinct (source, bg) relation, and per pair that
+    * shares any bigram its exact distinct common count, named
+    * `commonCol`).
+    */
+  private def kmvPairParts(s: org.apache.spark.sql.SparkSession, d: String, commonCol: String)
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame) = {
+    val (bi, sk, _) = kmvParts(s, d)
+    val pairs = sk.select(col("source").as("source_a"), col("sk").as("ska"))
+      .join(
+        sk.select(col("source").as("source_b"), col("sk").as("skb")),
+        col("source_a") < col("source_b"))
+    val dist = bi.distinct()
+    val common = dist.select(col("source").as("source_a"), col("bg"))
+      .join(dist.select(col("source").as("source_b"), col("bg")), "bg")
+      .filter(col("source_a") < col("source_b"))
+      .groupBy(col("source_a"), col("source_b"))
+      .agg(count(lit(1)).as(commonCol))
+    (pairs, dist, common)
+  }
+
+  /** [[kmvPairParts]]' pairs with each side's exact distinct count (na,
+    * nb) and the common count `ncom` (null when the pair shares none):
+    * everything inclusion-exclusion needs.
+    */
+  private def kmvPairSizes(s: org.apache.spark.sql.SparkSession, d: String)
+      : org.apache.spark.sql.DataFrame = {
+    val (pairs, dist, common) = kmvPairParts(s, d, "ncom")
+    val perSrc = dist.groupBy(col("source")).agg(count(lit(1)).as("nd"))
+    pairs
+      .join(perSrc.select(col("source").as("source_a"), col("nd").as("na")), "source_a")
+      .join(perSrc.select(col("source").as("source_b"), col("nd").as("nb")), "source_b")
+      .join(common, Seq("source_a", "source_b"), "left")
   }
 
   /** The oracle's shared k-min reconstruction CTEs: bigrams (1-based

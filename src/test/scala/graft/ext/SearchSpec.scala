@@ -310,6 +310,61 @@ class SearchSpec extends SparkSpec {
     }
   }
 
+  test("a 2-token query doc: absent positions add 0 to maxsim and the pruned top-5 stays exact") {
+    // Query doc 0 has only positions 0 and 1, so positions 2 and 3 of the
+    // per-token max sum see no rows. Its best matches (docs 70-79 carry
+    // near-copies of its tokens) sit above the 32 lowest doc ids: were
+    // the bound sum null, the seed would fall back to those ids, no doc
+    // would escape, and the pruned top-5 would miss them.
+    import spark.implicits._
+    def tok(d: Int, k: Int): Array[Double] = {
+      val rnd = new scala.util.Random(d * 16L + k)
+      Array.tabulate(16)(j => if (j == 0) 50.0 + rnd.nextInt(13) else rnd.nextInt(201) - 100.0)
+    }
+    val q0 = Seq(tok(0, 0), tok(0, 1))
+    val nDocs = 80
+    val rows = (0 until nDocs).flatMap { d =>
+      val n = if (d == 0) 2 else 8
+      (0 until n).map { k =>
+        val v =
+          if (d >= 70 && k < 2) q0(k).zipWithIndex.map { case (x, j) => if (j == 1 + d % 15) x + d else x }
+          else tok(d, k)
+        (d.toLong, k, s"t${d}_$k", v.toSeq)
+      }
+    }
+    val vecs = rows.toDF("doc_id", "pos", "term", "tv")
+      .withColumn("tv", col("tv").cast("array<double>"))
+      .withColumn("tn2", Similarity.dot(col("tv"), col("tv")))
+    val allPairs = (for { q <- 0L until 3L; n <- 0L until nDocs.toLong if n != q }
+      yield (q, n)).toDF("q_id", "n_id")
+    val scored = SearchQueries.maxsimOver(vecs, allPairs).collect()
+    assert(scored.length == allPairs.count())
+    // the scorer against a driver-side sum of query 0's two per-token max
+    // cosines (integer vectors, so every dot is exact and the sums match
+    // bit for bit)
+    def dot(a: Seq[Double], b: Seq[Double]) = a.zip(b).map { case (x, y) => x * y }.sum
+    def cos(a: Seq[Double], b: Seq[Double]) = dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b)))
+    val docToks = rows.groupBy(_._1).map { case (d, ts) => d -> ts.map(_._4) }
+    scored.filter(_.getAs[Long]("q_id") == 0L).foreach { r =>
+      val n = r.getAs[Long]("n_id")
+      assert(!r.isNullAt(r.fieldIndex("li_score")), s"query 0 vs doc $n: li_score is null")
+      val want = q0.map(q => docToks(n).map(c => cos(q.toSeq, c)).max).sum
+      assert(r.getAs[Double]("li_score") == want, s"query 0 vs doc $n")
+    }
+    val full = scored.groupBy(_.getAs[Long]("q_id")).map { case (q, rs) =>
+      q -> rs.map(r => (r.getAs[Double]("li_score"), r.getAs[Long]("n_id")))
+        .sortBy { case (s, n) => (-s, n) }.take(5).toSeq
+    }
+    assert(full(0L).forall(_._2 >= 70L), s"planted matches are not query 0's top-5: ${full(0L)}")
+    val pruned = SearchQueries.latePruned(vecs).collect()
+    assert(pruned.map(_.getAs[Long]("q_id")).toSet == Set(0L, 1L, 2L))
+    pruned.groupBy(_.getAs[Long]("q_id")).foreach { case (q, rs) =>
+      val got = rs.sortBy(_.getAs[Int]("rank"))
+        .map(r => (r.getAs[Double]("li_score"), r.getAs[Long]("n_id"))).toSeq
+      assert(got == full(q), s"pruned top-5 differs from the full scan for query $q")
+    }
+  }
+
   test("pruned late interaction on the MoG fixture: exact, with a REAL measured prune rate") {
     // Round-13 planted corpora prove pruning CAN bite; this measures it
     // on the realistic clustered regime (MoGFixture: hash-random cluster

@@ -114,7 +114,8 @@ class PipelineSpec extends SparkSpec {
     val layout = freshLayout()
     stageClean(layout, "users")
     val (out, jobs) = jobsOf(Pipeline.loadStage(spark, layout, "users"))
-    assert(jobs.size == 1, s"loadStage ran ${jobs.size} Spark jobs")
+    val n = jobs.size
+    assert(n == 1, s"loadStage ran $n Spark jobs")
     assert(out.schema == Pipeline.readClean(spark, layout, "users").schema)
   }
 
