@@ -2,7 +2,6 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.core.Ckpt.TruncateOps
 
 /** Deduplication building blocks for the training-data pipeline: exact
   * (hash groupBy), MinHash+LSH (shingle → minhash signature → banded
@@ -267,18 +266,16 @@ object Dedup {
       .distinct()
 
   /** Connected components — the cluster step after near-dup pair
-    * detection (keep one doc per component). Round 18: delegates to the
+    * detection (keep one doc per component). Delegates to the
     * STAR-CONTRACTION kernel ([[graft.queries.Graph.ccStar]], Kiveris
     * et al.'s alternating large-star/small-star) — O(log n) rounds on
-    * ANY component shape, where the previous min-label loop needed
-    * DIAMETER-many rounds and THREW past `maxIters`. That failure mode
-    * was real for dedup specifically: transitive near-dup CHAINS
-    * (A~B~C~…, each link above threshold, ends unrelated) are the
-    * textbook long-diameter component, and a 100 TB corpus will
-    * contain one longer than any fixed cap. Output contract unchanged
-    * — (id, comp = min node id of the component), a deterministic
-    * integer labeling — so every downstream oracle is unaffected;
-    * DedupSpec's hand graphs pin the delegation.
+    * ANY component shape, where min-label propagation needs
+    * DIAMETER-many rounds. That matters for dedup specifically:
+    * transitive near-dup CHAINS (A~B~C~…, each link above threshold,
+    * ends unrelated) are the textbook long-diameter component, and a
+    * 100 TB corpus will contain one longer than any fixed cap. The
+    * labeling is deterministic — comp = min node id of the component;
+    * DedupSpec pins it label-equal to [[graft.queries.Graph.ccConverged]].
     *
     * @param nodes (id) one row per node
     * @param edges (a, b) undirected pairs
@@ -291,63 +288,12 @@ object Dedup {
       maxRounds = maxIters)
     // gate on the kernel's explicit flag, not `rounds >= maxIters`: a
     // run whose fixpoint lands exactly on the last permitted round is
-    // converged yet reports rounds == maxIters (round-18 ADVICE — the
-    // old comparison raised a spurious IllegalStateException there)
+    // converged yet reports rounds == maxIters
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIters star-contraction rounds — " +
           "with the log-round kernel this indicates a bug, not a long component")
     labels.select(col("pk").as("id"), col("label").as("comp"))
-  }
-
-  /** The pre-round-18 min-label loop — kept for the DedupSpec A/B that
-    * pins the star-contraction delegation label-equal to it, and as the
-    * honest baseline whose diameter-bounded round count motivated the
-    * switch.
-    */
-  private[ext] def connectedComponentsHashMin(
-      nodes: DataFrame, edges: DataFrame, maxIters: Int = 50): DataFrame = {
-    // localCheckpoint (not persist) per round: persist caches BLOCKS but
-    // the LOGICAL plan still nests one level per iteration, and on a
-    // long-diameter component (the 21-round chain the A/B spec plants)
-    // the nested join tree goes exponential — the pre-round-18 persist
-    // form OOMed building its own explain string there before a single
-    // extra row moved. Checkpointing truncates the plan each round.
-    val sym = edges.select(col("a").as("src"), col("b").as("dst"))
-      .union(edges.select(col("b").as("src"), col("a").as("dst")))
-      .truncateLineage()
-    var labels = nodes.select(col("id"), col("id").as("comp")).truncateLineage()
-    var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIters) {
-      val nb = sym.join(labels.withColumnRenamed("id", "src"), Seq("src"))
-        .select(col("dst").as("id"), col("comp"))
-        .groupBy(col("id"))
-        .agg(min(col("comp")).as("nb_comp"))
-      // Convergence detection is folded into the SAME pass that computes
-      // the new labels: a per-row `chg` flag summed after the
-      // materializing checkpoint, instead of a second join of
-      // next-vs-previous labels — one fewer shuffle join per round, and
-      // the changed-count (a control decision) is all that reaches the
-      // driver.
-      val next = labels
-        .join(nb, Seq("id"), "left")
-        .select(
-          col("id"),
-          least(col("comp"), coalesce(col("nb_comp"), col("comp"))).as("comp"),
-          (coalesce(col("nb_comp"), col("comp")) < col("comp")).cast("long").as("chg"))
-        .truncateLineage()
-      changed = next.agg(coalesce(sum(col("chg")), lit(0L))).first().getLong(0)
-      labels = next.select(col("id"), col("comp"))
-      i += 1
-    }
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"connectedComponentsHashMin did not converge in $maxIters rounds " +
-          s"($changed labels still changing) — a component's diameter exceeds " +
-          "maxIters (rounds needed = max component diameter; the registered " +
-          "connectedComponents delegates to the log-round star kernel instead)")
-    labels
   }
 
   /** Blocked exact k-gram Jaccard candidate pairs — the shared shape for

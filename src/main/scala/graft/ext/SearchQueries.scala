@@ -1539,8 +1539,8 @@ object SearchQueries {
           "qcb AS (SELECT q_id, qi, cell, CASE WHEN a >= b THEN 1.0 ELSE " +
           "a * b + sqrt(GREATEST(1 - a * a, 0)) * sqrt(GREATEST(1 - b * b, 0)) END AS ub FROM qa), " +
           "ubs AS (SELECT q_id, n_id, " +
-          "MAX(CASE WHEN qi = 0 THEN mu END) + MAX(CASE WHEN qi = 1 THEN mu END) + " +
-          "MAX(CASE WHEN qi = 2 THEN mu END) + MAX(CASE WHEN qi = 3 THEN mu END) AS ub FROM " +
+          "COALESCE(MAX(CASE WHEN qi = 0 THEN mu END), 0) + COALESCE(MAX(CASE WHEN qi = 1 THEN mu END), 0) + " +
+          "COALESCE(MAX(CASE WHEN qi = 2 THEN mu END), 0) + COALESCE(MAX(CASE WHEN qi = 3 THEN mu END), 0) AS ub FROM " +
           "(SELECT q_id, n_id, qi, MAX(ub) AS mu FROM qcb JOIN dc USING (cell) " +
           "WHERE q_id <> n_id GROUP BY q_id, n_id, qi) GROUP BY q_id, n_id), " +
           "seed AS (SELECT q_id, n_id FROM (SELECT q_id, n_id, " +

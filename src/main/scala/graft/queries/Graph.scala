@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Q
-import graft.core.{Agg, Tables}
+import graft.core.{Agg, Ckpt, Tables}
 import graft.core.Ckpt.TruncateOps
 
 /** Graph analytics beyond near-dup connected components
@@ -658,51 +658,41 @@ object Graph {
     * the edge relation's endpoints, highest non-empty phase, converged
     * — EVERY phase's peel found its fixpoint within [[CorenessUnroll]]
     * AND the outer loop emptied the core before [[CorenessMaxK]]).
-    * Driver state per phase: one survivor count; the accumulated
-    * membership union is label-width, truncated per phase.
+    * Driver state per phase: one survivor count; each phase's member
+    * set is truncated and the sets are unioned once at the end.
     */
   private[graft] def coreness(
       edges: org.apache.spark.sql.DataFrame)
       : (org.apache.spark.sql.DataFrame, Int, Boolean) = {
-    var cur = edges.select(col("src"), col("dst")).truncateLineage()
-    // phase membership collected as a LIST of checkpointed relations and
-    // unioned once at the end (round 21): the old running-union
-    // re-checkpointed the ever-growing accumulator every phase — one
-    // extra materialization of all prior phases' rows per phase. Each
-    // element is itself truncated, so the final union's lineage is flat.
+    val whole = Ckpt.Round.of(edges.select(col("src"), col("dst")), lit(true))
+    var cur = whole.df
     val memberSets = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
     var k = 0
-    var allDone = true
-    var survivors = -1L
-    while (survivors != 0L && k < CorenessMaxK) {
-      k += 1
-      val (core, _, done) = kCore(cur, k, CorenessUnroll)
-      allDone &&= done
-      // survivor count rides the members checkpoint job (round 22,
-      // guide §1.2 — one job per phase instead of checkpoint + count)
-      val (members, n) = graft.core.Ckpt.truncateCounted(core.select(col("pk")), lit(true))
-      survivors = n
-      if (survivors > 0L) {
-        memberSets += members
+    var peelsDone = true
+    val phases = Ckpt.fixpoint(whole, CorenessMaxK) { prev =>
+      // the step only runs after a non-empty phase: restrict the graph to
+      // that phase's members before peeling at the next threshold
+      if (k > 0) {
+        memberSets += prev
         cur = cur
-          .join(members.select(col("pk").as("src")), Seq("src"))
-          .join(members.select(col("pk").as("dst")), Seq("dst"))
+          .join(prev.select(col("pk").as("src")), Seq("src"))
+          .join(prev.select(col("pk").as("dst")), Seq("dst"))
           .select(col("src"), col("dst"))
           .truncateLineage()
       }
-    }
+      k += 1
+      val (core, _, done) = kCore(cur, k, CorenessUnroll)
+      peelsDone &&= done
+      (core.select(col("pk")), lit(true))
+    }((_, next) => next.count == 0L)
+    // on a CorenessMaxK cap exit the last phase still had survivors
+    if (!phases.converged) memberSets += phases.state
     val labels = memberSets
       .reduceOption(_ unionByName _)
-      .getOrElse(edges.sparkSession.emptyDataFrame.sparkSession
-        .range(0).select(col("id").as("pk")))
+      .getOrElse(edges.sparkSession.range(0).select(col("id").as("pk")))
       .groupBy(col("pk"))
       .agg(count(lit(1)).as("core_number"))
-    // highest non-empty phase: k−1 when the loop exited because phase k
-    // peeled to empty; on a CorenessMaxK cap-exit phase k itself still
-    // had survivors, so k is the last non-empty phase (round-19 ADVICE
-    // — callers all drop the value on converged=false, but the tuple's
-    // documented meaning must hold on both exit paths)
-    (labels, if (survivors == 0L) k - 1 else k, allDone && survivors == 0L)
+    (labels, memberSets.size, peelsDone && phases.converged)
   }
 
   /** The stored base-graph CC labeling behind q_cc_repair_served: built
@@ -728,56 +718,32 @@ object Graph {
 
   /** Iterative k-core peeling over a symmetric (src, dst) edge list:
     * keep nodes whose degree AMONG SURVIVORS is ≥ k, to fixpoint.
-    * Returns (survivors with their in-core degree, rounds run — one
-    * bounded count per round reaches the driver, converged — the loop
-    * exited on a NO-CHANGE round, not on the `maxRounds` cap). The
-    * explicit flag exists because "rounds ≤ cap" cannot distinguish
-    * convergence from cap exhaustion: a peel deeper than the cap stops
-    * at the cap's intermediate survivor set, which is NOT a k-core
-    * (round-18 ADVICE — the registered gate rides this flag).
+    * Returns (survivors with their in-core degree, rounds run,
+    * converged — the loop exited on a NO-CHANGE round, not on the
+    * `maxRounds` cap). A peel deeper than the cap stops at an
+    * intermediate survivor set that is NOT a k-core, so callers gate on
+    * the flag. Callers pass an already-truncated edge relation; the loop
+    * only references it and the per-round survivor sets, so lineage
+    * cannot nest.
     */
   private[graft] def kCore(
       edges: org.apache.spark.sql.DataFrame,
       k: Int,
       maxRounds: Int): (org.apache.spark.sql.DataFrame, Int, Boolean) = {
-    // NO internal truncate (round 21): every caller (q_kcore via
-    // coPurchaseEdges, coreness's per-phase cur, GraphSpec's planted
-    // graphs) passes an already-checkpointed edge relation, so the
-    // re-materialization was one wasted job per kCore call — ~10 per
-    // coreness run. Callers own the truncation; the loop itself only
-    // ever references `e` and per-round-truncated `keep`, so lineage
-    // cannot nest.
     val e = edges.select(col("src"), col("dst"))
-    // survivor counts ride the checkpoint jobs as observed metrics
-    // (round 22, guide §1.2): one job per peel round instead of
-    // checkpoint + count — this kernel runs once per q_kcore but
-    // ~degeneracy× inside every coreness phase, so the saved job is
-    // multiplied by the total round count.
-    var (keep, nKeep) = graft.core.Ckpt.truncateCounted(
-      e.select(col("src").as("pk")).distinct(), lit(true))
-    var rounds = 0
-    var done = false
-    while (!done && rounds < maxRounds) {
-      val (next, n) = graft.core.Ckpt.truncateCounted(
-        e.join(keep.select(col("pk").as("src")), Seq("src"))
-          .join(keep.select(col("pk").as("dst")), Seq("dst"))
-          .groupBy(col("src"))
-          .agg(count(lit(1)).as("deg"))
-          .filter(col("deg") >= k)
-          .select(col("src").as("pk")),
-        lit(true))
-      rounds += 1
-      if (n == nKeep) done = true
-      keep = next
-      nKeep = n
-    }
-    val core = e
+    def inCore(keep: org.apache.spark.sql.DataFrame) = e
       .join(keep.select(col("pk").as("src")), Seq("src"))
       .join(keep.select(col("pk").as("dst")), Seq("dst"))
       .groupBy(col("src"))
+    val peel = Ckpt.fixpoint(
+      Ckpt.Round.of(e.select(col("src").as("pk")).distinct(), lit(true)), maxRounds) { keep =>
+      (inCore(keep).agg(count(lit(1)).as("deg")).filter(col("deg") >= k).select(col("src").as("pk")),
+        lit(true))
+    }((prev, next) => next.count == prev.count)
+    val core = inCore(peel.state)
       .agg(count(lit(1)).as("deg_in_core"))
       .select(col("src").as("pk"), col("deg_in_core"))
-    (core, rounds, done)
+    (core, peel.rounds, peel.converged)
   }
 
   /** Runaway cap for [[ccConverged]] — far above any fixture diameter;
@@ -792,11 +758,8 @@ object Graph {
     * the Stress graph tier charts: late-round deltas shrink toward
     * empty, which is exactly the work a fixed-round job wastes,
     * converged — the loop SAW the empty wave rather than hitting the
-    * cap; `rounds < cap` is NOT equivalent, because a run whose empty
-    * wave lands exactly on the last permitted round converged but
-    * reads rounds == cap — round-18 ADVICE).
-    * Per-round driver state is ONE long (the improved count on a
-    * checkpointed delta); labels never leave the cluster.
+    * cap). Per-round driver state is ONE long (the improved count);
+    * labels never leave the cluster.
     */
   private[graft] def ccConverged(
       nodes: org.apache.spark.sql.DataFrame,
@@ -814,6 +777,18 @@ object Graph {
     * ITSELF in init (any smaller stored label would name a smaller
     * member) and every smaller foreign label would contradict m's
     * minimality.
+    *
+    * Warm starts pass `seed` = the nodes whose neighborhoods actually
+    * changed (delta-edge endpoints + new nodes): the improvement wave
+    * can only START at a changed neighborhood, so round 1 propagates
+    * the seed's labels only, not the corpus's.
+    *
+    * The state is (pk, label, __chg): a round propagates the changed
+    * labels along the edges, and ONE left join computes both the new
+    * label min(old, candidate) and its change flag, checkpointed once;
+    * the next delta is a narrow filter of that checkpoint. The cold
+    * start carries no flag: every label is the delta, and round 1 reads
+    * the same relation on both join sides, so AQE reuses its exchange.
     */
   private[graft] def ccConvergedFrom(
       init: org.apache.spark.sql.DataFrame,
@@ -821,58 +796,34 @@ object Graph {
       maxRounds: Int = CcMaxRounds,
       seed: Option[org.apache.spark.sql.DataFrame] = None)
       : (org.apache.spark.sql.DataFrame, Int, Seq[Long], Boolean) = {
-    var labels = init.select(col("pk"), col("label")).truncateLineage()
-    // warm starts pass `seed` = the nodes whose neighborhoods actually
-    // changed (delta-edge endpoints + new nodes): the improvement wave
-    // can only START at a changed neighborhood, so round 1 joins the
-    // seed — not the corpus — against the edges, and every later round
-    // tracks improvements exactly as the cold form does
-    var delta = seed match {
+    val labels0 = init.select(col("pk"), col("label"))
+    val state0 = seed match {
       case Some(sd) =>
-        labels.join(sd.select(col("pk")).distinct(), Seq("pk")).truncateLineage()
-      case None => labels
+        Ckpt.Round.of(
+          labels0
+            .join(sd.select(col("pk")).distinct().withColumn("__chg", lit(true)), Seq("pk"), "left")
+            .select(col("pk"), col("label"), coalesce(col("__chg"), lit(false)).as("__chg")),
+          col("__chg"))
+      case None => Ckpt.Round.of(labels0, lit(true))
     }
-    var rounds = 0
-    val waves = scala.collection.mutable.ArrayBuffer[Long]()
-    var done = false
-    while (!done && rounds < maxRounds) {
+    val run = Ckpt.fixpoint(state0, maxRounds) { state =>
+      val labels = state.select(col("pk"), col("label"))
+      val delta =
+        if (state.columns.contains("__chg")) state.filter(col("__chg")).select(col("pk"), col("label"))
+        else labels
       val fromNbr = edges
         .join(delta, col("src") === col("pk"))
         .select(col("dst").as("pk"), col("label"))
-        .groupBy(col("pk")).agg(min(col("label")).as("label"))
-      // Round-21 fusion (guide §2.4): improvement detection and the
-      // label update used to be TWO corpus-width joins with TWO
-      // checkpoints per round (improved = fromNbr ⋈ labels, then
-      // labels = labels ⋈ broadcast(improved) keyed on a driver count).
-      // One left join now computes both: label' = min(old, candidate)
-      // and a change flag, checkpointed ONCE; the next delta is a
-      // narrow read OF that checkpoint. AQE replaces the count-keyed
-      // broadcast decision — a small fromNbr relation is broadcast at
-      // runtime from its actual shuffle stats, a flood round
-      // shuffle-joins — and the checkpointed output carries the join's
-      // hash(pk) partitioning into the next round's labels leg.
-      // Semantics unchanged: fromNbr is unique per pk (per-pk min) so
-      // min(old, new) ≡ the old coalesce/union-min forms, and a pk
-      // absent from labels is dropped by both shapes.
-      // Round 22 (guide §1.2, per-round fixed cost): the wave count no
-      // longer runs as a second job over the fresh checkpoint — it is
-      // an observed metric of the checkpoint job itself, so each round
-      // is ONE job (Ckpt.truncateCounted; same count, same rows).
-      val (merged, n) = graft.core.Ckpt.truncateCounted(
-        labels
-          .join(fromNbr.select(col("pk"), col("label").as("__new")), Seq("pk"), "left")
-          .select(
-            col("pk"),
-            when(col("__new") < col("label"), col("__new")).otherwise(col("label")).as("label"),
-            (col("__new") < col("label")).as("__chg")),
-        col("__chg"))
-      rounds += 1
-      waves += n
-      if (n == 0L) done = true
-      else delta = merged.filter(col("__chg")).select(col("pk"), col("label"))
-      labels = merged.select(col("pk"), col("label"))
-    }
-    (labels, rounds, waves.toSeq, done)
+        .groupBy(col("pk")).agg(min(col("label")).as("__new"))
+      val merged = labels
+        .join(fromNbr, Seq("pk"), "left")
+        .select(
+          col("pk"),
+          when(col("__new") < col("label"), col("__new")).otherwise(col("label")).as("label"),
+          (col("__new") < col("label")).as("__chg"))
+      (merged, col("__chg"))
+    }((_, next) => next.count == 0L)
+    (run.state.select(col("pk"), col("label")), run.rounds, run.counts, run.converged)
   }
 
   /** Star-contraction connected components (Kiveris et al. 2014,
@@ -904,9 +855,8 @@ object Graph {
     * rounds run, converged — the fixpoint was DETECTED, not the cap
     * hit; a run that stabilizes exactly on the last permitted round
     * reads rounds == maxRounds AND converged = true, so callers must
-    * gate on the flag, never on the round count — round-18 ADVICE).
-    * The convergence probe is one bounded count per round (edge-set
-    * size + changed-edge count via a join).
+    * gate on the flag, never on the round count). An empty edge set is
+    * converged after 0 rounds.
     */
   private[graft] def ccStar(
       nodes: org.apache.spark.sql.DataFrame,
@@ -936,46 +886,30 @@ object Graph {
         .select(col("v").as("src"), col("m").as("dst"))
         .unionByName(m.select(col("u").as("src"), col("m").as("dst")))
     }
-    // edge-set sizes ride the checkpoint jobs as observed metrics
-    // (round 22, guide §1.2): one job per contraction round instead of
-    // checkpoint + count; the symmetric-difference probe below stays a
-    // separate (count-equality-gated) job because it reads BOTH rounds.
-    var (cur, curCount) = graft.core.Ckpt.truncateCounted(canon(edges), lit(true))
-    var rounds = 0
-    var done = curCount == 0L
-    while (!done && rounds < maxRounds) {
-      // inner canon dropped (round 21): largeStar's output is already
-      // down-directed (every emitted dst is a neighborhood minimum
-      // strictly below its src — m ≤ a < b), and smallStar is a SET
-      // function of its input (per-u min over a multiset ≡ min over its
-      // set; emitted rows depend only on edge membership), so the
-      // intermediate distinct bought nothing but one full exchange +
-      // dedup per round — the outer canon still dedupes the round's
-      // result exactly once. Same per-round edge SET, same rounds, same
-      // labels (GraphSpec's planted-chain and A/B gates pin it).
-      val ls = largeStar(cur).select(col("src").as("u"), col("dst").as("v"))
-      val (next, nextCount) = graft.core.Ckpt.truncateCounted(canon(smallStar(ls)), lit(true))
-      rounds += 1
-      // fixpoint: the canonical edge set is unchanged. The cheap
-      // necessary condition first — counts equal (the observed metric
-      // of the checkpoint job; early contraction rounds shrink the set,
-      // so this alone decides them) — then, only on count equality, the
-      // sufficient one: both sides are DISTINCT canonical edge lists,
-      // so set equality ⟺ the full-outer symmetric difference is empty
-      // (round 21: the old shape paid count + anti-join EVERY round).
-      val stable = nextCount == curCount &&
-        next.select(col("u"), col("v"), lit(1).as("__n"))
-          .join(cur.select(col("u"), col("v"), lit(1).as("__c")), Seq("u", "v"), "full_outer")
-          .filter(col("__n").isNull || col("__c").isNull)
-          .isEmpty
-      cur = next
-      curCount = nextCount
-      done = stable
-    }
+    val init = Ckpt.Round.of(canon(edges), lit(true))
+    val run =
+      if (init.count == 0L) Ckpt.Fixpoint(init.df, 0, Nil, converged = true)
+      else
+        // largeStar's output is already down-directed (m ≤ a < b) and
+        // smallStar is a set function of its input, so one canon per
+        // round dedupes the result
+        Ckpt.fixpoint(init, maxRounds) { cur =>
+          val ls = largeStar(cur).select(col("src").as("u"), col("dst").as("v"))
+          (canon(smallStar(ls)), lit(true))
+        } { (prev, next) =>
+          // the canonical edge set is unchanged: counts equal first (early
+          // rounds shrink the set, so this alone decides them), then, both
+          // sides being DISTINCT edge lists, an empty symmetric difference
+          next.count == prev.count &&
+          next.df.select(col("u"), col("v"), lit(1).as("__n"))
+            .join(prev.df.select(col("u"), col("v"), lit(1).as("__c")), Seq("u", "v"), "full_outer")
+            .filter(col("__n").isNull || col("__c").isNull)
+            .isEmpty
+        }
     val labels = nodes
-      .join(cur.select(col("u").as("pk"), col("v").as("label")), Seq("pk"), "left")
+      .join(run.state.select(col("u").as("pk"), col("v").as("label")), Seq("pk"), "left")
       .select(col("pk"), coalesce(col("label"), col("pk")).as("label"))
-    (labels, rounds, done)
+    (labels, run.rounds, run.converged)
   }
 
   /** One-directional distinct co-purchase pairs (src < dst) from an
@@ -1111,41 +1045,15 @@ object Graph {
   }
 
   /** Synchronous min-label propagation for `rounds` rounds (the Pregel
-    * hash-min kernel); labels init to node ids. DELTA-OPTIMIZED: each
-    * round propagates only labels that CHANGED last round — a node
-    * whose label is stable already pushed it to every neighbor the
-    * round it last changed, so the delta form is round-for-round
-    * equivalent to the full propagation (the q_label_prop oracle's
-    * unrolled joins pin the equivalence) while its per-round join
-    * tracks the change wave, not the node count.
+    * hash-min kernel); labels init to node ids. This is [[ccConverged]]
+    * capped at `rounds`: its delta form propagates only labels that
+    * changed last round, which is round-for-round equivalent to the full
+    * propagation (the q_label_prop oracle's unrolled joins pin it), and
+    * a round after an empty delta would change nothing.
     */
   private[graft] def labelProp(
-      edges: org.apache.spark.sql.DataFrame, rounds: Int): org.apache.spark.sql.DataFrame = {
-    var labels = edges.select(col("src").as("pk")).distinct()
-      .select(col("pk"), col("pk").as("label"))
-      .truncateLineage()
-    var delta = labels
-    for (_ <- 1 to rounds) {
-      val fromNbr = edges
-        .join(delta, col("src") === col("pk"))
-        .select(col("dst").as("pk"), col("label"))
-        .groupBy(col("pk")).agg(min(col("label")).as("label"))
-      // fused improvement+update join — ONE checkpoint per round, the
-      // next delta read narrowly off it (the ccConvergedFrom round-21
-      // shape; min(old, new) ≡ the old union+min over a per-pk-unique
-      // fromNbr, so the emitted labels are bit-identical)
-      val merged = labels
-        .join(fromNbr.select(col("pk"), col("label").as("__new")), Seq("pk"), "left")
-        .select(
-          col("pk"),
-          when(col("__new") < col("label"), col("__new")).otherwise(col("label")).as("label"),
-          (col("__new") < col("label")).as("__chg"))
-        .truncateLineage()
-      delta = merged.filter(col("__chg")).select(col("pk"), col("label"))
-      labels = merged.select(col("pk"), col("label"))
-    }
-    labels.select(col("pk"), col("label"))
-  }
+      edges: org.apache.spark.sql.DataFrame, rounds: Int): org.apache.spark.sql.DataFrame =
+    ccConverged(edges.select(col("src").as("pk")).distinct(), edges, maxRounds = rounds)._1
 
   /** Delta-optimized bounded Bellman-Ford (SPFA shape) over a weighted
     * edge relation (src, dst, w): each round relaxes only last round's

@@ -13,4 +13,30 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  /** Run `body` in a fresh job group; returns its result and the
+    * properties of every Spark job it started (session SQL confs are
+    * propagated into them, so they show the conf each job ran under).
+    */
+  def jobsOf[T](body: => T): (T, Seq[java.util.Properties]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val props = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group).foreach(props.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val out =
+      try {
+        sc.setJobGroup(group, "job count")
+        try body
+        finally sc.clearJobGroup()
+      } finally {
+        org.apache.spark.sql.GraftShim.drainListenerBus(spark)
+        sc.removeSparkListener(listener)
+      }
+    (out, props.toArray(Array.empty[java.util.Properties]).toSeq)
+  }
 }

@@ -97,11 +97,11 @@ class DedupSpec extends SparkSpec {
   }
 
   test("connectedComponents star delegation is label-equal to the hash-min baseline") {
-    // Round 18 swapped the kernel to star contraction; both algorithms
-    // compute the same deterministic component-minimum labeling, pinned
-    // here on a deliberately awkward graph: a 20-link chain (the
-    // diameter shape that motivated the swap), a clique, a pair sharing
-    // ids across decades, and singletons.
+    // star contraction and min-label propagation compute the same
+    // deterministic component-minimum labeling, pinned here on a
+    // deliberately awkward graph: a 20-link chain (the diameter shape
+    // star contraction exists for), a clique, a pair sharing ids across
+    // decades, and singletons.
     import spark.implicits._
     val chain = (100L until 120L).map(i => (i, i + 1))
     val clique = for (i <- 0L to 3L; j <- (i + 1) to 3L) yield (i, j)
@@ -109,8 +109,13 @@ class DedupSpec extends SparkSpec {
     val nodes = ((0L to 3L) ++ (100L to 120L) ++ Seq(50L, 70L, 999L)).toDF("id")
     val star = Dedup.connectedComponents(nodes, edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val hm = Dedup.connectedComponentsHashMin(nodes, edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // ccConverged propagates src → dst only: symmetrize the pairs
+    val sym = edges.select(col("a").as("src"), col("b").as("dst"))
+      .unionByName(edges.select(col("b").as("src"), col("a").as("dst")))
+    val (labels, _, _, converged) =
+      graft.queries.Graph.ccConverged(nodes.select(col("id").as("pk")), sym)
+    assert(converged)
+    val hm = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(star == hm, "star kernel diverged from the hash-min baseline")
     assert((100L to 120L).forall(star(_) == 100L) && star(999L) == 999L && star(70L) == 50L)
   }

@@ -84,32 +84,6 @@ class PipelineSpec extends SparkSpec {
     spark.sql("DROP TABLE users_tbl")
   }
 
-  /** Run `body` in a fresh job group; returns its result and the
-    * properties of every Spark job it started (session SQL confs are
-    * propagated into them, so they show the conf each job ran under).
-    */
-  private def jobsOf[T](body: => T): (T, Seq[java.util.Properties]) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val group = s"jobs-${java.util.UUID.randomUUID()}"
-    val props = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group).foreach(props.add)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    val out =
-      try {
-        sc.setJobGroup(group, "PipelineSpec job count")
-        try body
-        finally sc.clearJobGroup()
-      } finally {
-        org.apache.spark.sql.GraftShim.drainListenerBus(spark)
-        sc.removeSparkListener(listener)
-      }
-    (out, props.toArray(Array.empty[java.util.Properties]).toSeq)
-  }
-
   test("loadStage with the default sink is one Spark job; the relation keeps the declared schema") {
     val layout = freshLayout()
     stageClean(layout, "users")

@@ -40,6 +40,25 @@ class GraphSpec extends SparkSpec {
     byEdge
   }
 
+  /** Both directions of each pair, truncated like a kernel's input. */
+  private def undirected(pairs: Seq[(Long, Long)]) = {
+    import spark.implicits._
+    val e0 = pairs.toDF("src", "dst")
+    e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
+      .localCheckpoint(true)
+  }
+
+  /** Round-cap boundary of a stop rule: uncapped, `run` converges in some
+    * R rounds; capped at exactly R it must still report convergence, and
+    * capped at R - 1 it must not.
+    */
+  private def convergesOnLastRound(kernel: String)(run: Int => (Int, Boolean)): Unit = {
+    val (r, done) = run(64)
+    assert(done && r >= 1, s"$kernel did not converge uncapped")
+    assert(run(r) == ((r, true)), s"$kernel capped at its own $r rounds must report convergence")
+    assert(run(r - 1) == ((r - 1, false)), s"$kernel capped at ${r - 1} rounds must report a cap exit")
+  }
+
   test("triangle count: K4 has 4, a path has 0, two shared-edge triangles count twice") {
     // K4: every 3-subset of 4 nodes closes = C(4,3) = 4 triangles
     val k4 = for (i <- 0L to 3L; j <- (i + 1) to 3L) yield (i, j)
@@ -61,12 +80,6 @@ class GraphSpec extends SparkSpec {
     // merged component — C's labels never re-enter the delta (its
     // total improvement volume excludes them), which is the entire
     // point of seeding at the changed neighborhoods.
-    import spark.implicits._
-    def undirected(pairs: Seq[(Long, Long)]) = {
-      val e0 = pairs.toDF("src", "dst")
-      e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
-        .localCheckpoint(true)
-    }
     val base = undirected(Seq((0L, 1L), (1L, 2L), (10L, 11L), (11L, 12L),
       (100L, 101L), (101L, 102L), (102L, 103L)))
     val nodes = base.select(col("src").as("pk")).distinct()
@@ -124,6 +137,14 @@ class GraphSpec extends SparkSpec {
     val (l2, _, _) = Graph.ccStar(nodes2, edges2)
     val m2 = l2.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(m2 == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 10L -> 10L, 11L -> 10L, 99L -> 99L))
+    convergesOnLastRound("ccStar") { cap =>
+      val (_, rounds, done) = Graph.ccStar(nodes2, edges2, maxRounds = cap)
+      (rounds, done)
+    }
+    convergesOnLastRound("ccConverged") { cap =>
+      val (_, rounds, _, done) = Graph.ccConverged(nodes2, edges2, maxRounds = cap)
+      (rounds, done)
+    }
   }
 
   test("oracle headroom: fixture degeneracy/peel depth leave >= 1 round against the pinned unroll constants") {
@@ -285,13 +306,7 @@ class GraphSpec extends SparkSpec {
     // round-18 ADVICE scenario: at maxRounds=4 the survivor set still
     // holds chain nodes 4 and 5 with in-core degree 1 — a relation that
     // is NOT a k-core — and only the explicit flag exposes it.
-    import spark.implicits._
-    def und(p: Seq[(Long, Long)]) = {
-      val e0 = p.toDF("src", "dst")
-      e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
-        .localCheckpoint(true)
-    }
-    val edges = und((0L until 9L).map(i => (i, i + 1)) ++
+    val edges = undirected((0L until 9L).map(i => (i, i + 1)) ++
       Seq((100L, 101L), (101L, 102L), (100L, 102L)))
     val (core, rounds, done) = Graph.kCore(edges, k = 2, maxRounds = 8)
     assert(done, "full peel must report convergence")
@@ -305,6 +320,37 @@ class GraphSpec extends SparkSpec {
     val cm = capped.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(cm.contains(4L) && cm(4L) < 2L,
       "the capped survivor set should still hold a sub-k node — the relation the flag guards against")
+    convergesOnLastRound("kCore") { cap =>
+      val (_, r, d) = Graph.kCore(edges, k = 2, maxRounds = cap)
+      (r, d)
+    }
+  }
+
+  test("kernel job counts: ccConverged, kCore and ccStar on the planted graphs") {
+    // Each round is ONE checkpoint action with its count observed inside
+    // it; ccStar adds its symmetric-difference probe on a count-equal
+    // round. The pin is on SQL executions (one per action), which are
+    // exact: the Spark job total also counts every AQE shuffle/broadcast
+    // stage, and AQE materializes independent stages concurrently, so the
+    // total varies run to run (kCore 32-35, ccStar 22-24 jobs over 8
+    // runs of a 4-core session).
+    // A per-round count job added later raises the execution count.
+    import spark.implicits._
+    val twoComp = undirected(Seq((0L, 1L), (1L, 2L), (10L, 11L)))
+    val nodes = Seq(0L, 1L, 2L, 10L, 11L, 99L).toDF("pk").localCheckpoint(true)
+    val peel = undirected((0L until 9L).map(i => (i, i + 1)) ++
+      Seq((100L, 101L), (101L, 102L), (100L, 102L)))
+    def actions(jobs: Seq[java.util.Properties]) =
+      jobs.map(p => Option(p.getProperty("spark.sql.execution.id"))).distinct.size
+    val ((_, ccRounds, _, _), ccJobs) = jobsOf(Graph.ccConverged(nodes, twoComp))
+    val ((_, kRounds, _), kJobs) = jobsOf(Graph.kCore(peel, k = 2, maxRounds = 64))
+    val ((_, starRounds, _), starJobs) = jobsOf(Graph.ccStar(nodes, twoComp))
+    info(s"jobs: ccConverged ${ccJobs.size}, kCore ${kJobs.size}, ccStar ${starJobs.size}")
+    val measured = Seq(
+      ("ccConverged", ccRounds, actions(ccJobs)),
+      ("kCore", kRounds, actions(kJobs)),
+      ("ccStar", starRounds, actions(starJobs)))
+    assert(measured == Seq(("ccConverged", 3, 4), ("kCore", 6, 7), ("ccStar", 2, 5)))
   }
 
   test("Ckpt.truncateCounted: the observed in-job count equals a post-hoc count on both truncation paths") {
