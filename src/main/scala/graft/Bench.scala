@@ -320,7 +320,7 @@ object Bench {
     val (pqTrainSec, pqEncodeSec, pqWideSec): (Option[Double], Option[Double], Option[Double]) =
       try {
         spark.conf.set("graft.artifacts.persist", "false")
-        graft.ext.Pq.clearShared()
+        graft.core.ArtifactStore.clearShared()
         val t0 = System.nanoTime()
         graft.ext.SearchQueries.pqTokenBooks(spark, sfDir)
         val t1 = System.nanoTime()
@@ -334,7 +334,6 @@ object Bench {
       } catch { case e: Throwable => errors("__pq_train__") = errMsg(e); (None, None, None) }
     val sparseIndexSec: Option[Double] =
       try {
-        graft.ext.SearchQueries.clearSparseShared()
         val t0 = System.nanoTime()
         graft.ext.SearchQueries.sparseIndexShared(spark, sfDir)
         Some((System.nanoTime() - t0) / 1e9)

@@ -6,14 +6,15 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Disk tier under the trained-artifact registries — TRAIN-ONCE /
-  * SERVE-MANY across PROCESS RESTARTS (round-15 verdict #2).
+/** The stored-artifact registry — TRAIN-ONCE / SERVE-MANY across
+  * PROCESS RESTARTS (round-15 verdict #2).
   *
-  * The per-JVM registries ([[graft.ext.Pq.shared]]/`sharedDf`,
-  * [[graft.ext.Ivf.trainShared]], `SearchQueries.sparseIndexShared`/
-  * `bm25IndexShared`, `Dedup.minhashIndexShared`) memoize materialized
-  * relations keyed on a corpus content fingerprint — correct, but
-  * "train-once" used to mean "per driver lifetime": a restarted driver
+  * [[shared]] is the one per-JVM memo in front of the disk tier: every
+  * trained or materialized artifact (IVF centroids, PQ codebooks and
+  * codes, the sparse and BM25 indexes, the minhash band index, the
+  * navigable graphs, the stored CC labels) is a key built by
+  * [[corpusKey]] plus a build/load pair passed to it. Before the disk
+  * tier, "train-once" meant "per driver lifetime": a restarted driver
   * silently retrained every codebook and index. This store completes the
   * production lifecycle (FAISS index files, ColBERTv2 residual stores,
   * Lucene segments — the artifact LIVES in storage, keyed by what built
@@ -152,12 +153,62 @@ object ArtifactStore {
     }
   }
 
+  /** Once-holder: the body runs on first `value`, outside any map
+    * compute, so a body may itself call [[memo]] for another key.
+    */
+  private final class Once(body: => Any) { lazy val value: Any = body }
+
+  private val registry = new java.util.concurrent.ConcurrentHashMap[String, Once]()
+
+  /** Per-JVM memo with no slot: `f` runs at most once per `key` (also
+    * under concurrent callers, which wait for the first); a body that
+    * throws caches nothing, so the next call runs it again.
+    */
+  def memo[A](key: String)(f: => A): A = {
+    val once = registry.computeIfAbsent(key, _ => new Once(f))
+    try once.value.asInstanceOf[A]
+    catch { case e: Throwable => registry.remove(key, once); throw e }
+  }
+
+  /** The per-JVM artifact registry: [[memo]] in front of [[loadOrBuild]],
+    * keyed on the slot key itself. `key` must embed the corpus content
+    * fingerprint ([[corpusKey]]) and every build parameter, so a fixture
+    * regenerated under the same path keys a fresh build instead of
+    * serving a stale artifact. Building is deterministic on a fixed
+    * corpus, so sharing changes no output — it removes repeated
+    * identical Lloyd runs, encodes and index builds from Verify/Bench
+    * sessions. Served relations hold executor-block references, valid
+    * only within the SparkSession that built them: single-session mains
+    * and specs fit; call [[clearShared]] on session change, to time a
+    * cold build, or to simulate a restarted driver (slots persist).
+    */
+  def shared[A](spark: SparkSession, key: String)(build: SlotWriter => Unit)(
+      load: Slot => A): A =
+    memo(key)(loadOrBuild(spark, key)(build)(load))
+
+  /** A one-relation [[shared]] artifact. `df` should be eagerly
+    * materialized (`localCheckpoint(true)`) so the cost is paid at
+    * registration.
+    */
+  def sharedDf(spark: SparkSession, key: String)(df: => DataFrame): DataFrame =
+    shared(spark, key)(_.df("codes", df))(_.df("codes"))
+
+  /** The registry key of an artifact built from `table` under `dir`:
+    * the dir, the table's content fingerprint, then `spec` (the
+    * artifact's name and every build parameter).
+    */
+  def corpusKey(dir: String, table: String, spec: String): String =
+    s"$dir|${Tables.fingerprint(dir, table)}|$spec"
+
+  /** Drop every memoized artifact; the disk slots stay. */
+  def clearShared(): Unit = registry.clear()
+
   /** Serve `key`'s artifact from a completed slot, or run `build` and
     * persist what it writes. `load` turns a completed slot back into the
     * registry's artifact type; it runs for fresh builds too (after the
     * rename), so both paths serve byte-identical, slot-backed relations.
     */
-  def loadOrBuild[A](spark: SparkSession, key: String)(build: SlotWriter => Unit)(
+  private[graft] def loadOrBuild[A](spark: SparkSession, key: String)(build: SlotWriter => Unit)(
       load: Slot => A): A = {
     if (!persistEnabled(spark)) {
       // memory-only lifecycle (the bench's cold-build timing path): the

@@ -12,12 +12,11 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Cheap content fingerprint of a table's parquet — the cache-key
-    * component that lets trained-artifact registries
-    * ([[graft.ext.Ivf.trainShared]], [[graft.ext.Pq.shared]]) survive
+  /** Cheap content fingerprint of a table's parquet — the key component
+    * ([[ArtifactStore.corpusKey]]) that lets stored artifacts survive
     * fixture REBUILDS under the same path: a regenerated table changes
-    * the key, so stale centroids or codebooks are never served to a new
-    * corpus. Every file's (relative name, length, mtime) triple folds
+    * the key, so stale centroids, codebooks or indexes are never served
+    * to a new corpus. Every file's (relative name, length, mtime) triple folds
     * into one order-independent digest — unlike the earlier
     * count+total-bytes+max-mtime summary, a rename, a same-total rewrite,
     * or a regeneration landing inside one mtime granule still changes

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.functions._
 
 import graft.Q
-import graft.core.Tables
+import graft.core.{ArtifactStore, Tables}
 
 /** Embedding-compression and semantic-dedup operators (round-6 widening):
   *
@@ -73,10 +73,7 @@ object EmbedQueries {
         (Similarity.dot(col("qv"), col("cv")) /
           (sqrt(Similarity.dot(col("qv"), col("qv"))) *
             sqrt(Similarity.dot(col("cv"), col("cv"))))).as("cos"))
-    val wCos = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    val served = reranked
-      .withColumn("rank", row_number().over(wCos)).filter(col("rank") <= 3)
-    (served, pool)
+    (Similarity.topByScore(reranked, "cos", 3), pool)
   }
 
   val queries: Seq[Q] = Seq(
@@ -286,7 +283,7 @@ object EmbedQueries {
       (s, d) => {
         val emb = Tables(s, d, "embeddings")
         Pq.encode(emb, Pq.shared(
-          s"$d|${Tables.fingerprint(d, "embeddings")}|raw|m=4|k=16|iters=3")(
+          s, ArtifactStore.corpusKey(d, "embeddings", "raw|m=4|k=16|iters=3"))(
           Pq.train(s, emb, m = 4, k = 16)))
           .groupBy(col("m"))
           .agg(
@@ -321,7 +318,7 @@ object EmbedQueries {
         val emb = Tables(s, d, "embeddings")
         val queries = emb.filter(col("vec_id") < 10)
         val books = Pq.shared(
-          s"$d|${Tables.fingerprint(d, "embeddings")}|raw|m=8|k=16|iters=6")(
+          s, ArtifactStore.corpusKey(d, "embeddings", "raw|m=8|k=16|iters=6"))(
           Pq.train(s, emb, m = 8, k = 16, iters = 6))
         val enc = Pq.encode(emb, books).select(col("vec_id"), col("m"), col("code"))
         val approx = Pq.adcRerankTopK(queries, enc, books, emb, k = 10, shortlist = 128)
@@ -375,7 +372,7 @@ object EmbedQueries {
         val queries = emb.filter(col("vec_id") < 10)
         val coarse = Ivf.trainSharedAdaptive(s, d)
         val books = Pq.shared(
-          s"$d|${Tables.fingerprint(d, "embeddings")}|raw|m=8|k=16|iters=6")(
+          s, ArtifactStore.corpusKey(d, "embeddings", "raw|m=8|k=16|iters=6"))(
           Pq.train(s, emb, m = 8, k = 16, iters = 6))
         val enc = Pq.encodeCells(emb, books, coarse)
         val np = Ivf.adaptiveNprobe(6, coarse.size) // = 6 at both gate tiers
@@ -450,7 +447,7 @@ object EmbedQueries {
         // so the artifact key carries its cell count — a corpus that
         // grows re-keys both quantizer and residual books together
         val booksRes = Pq.shared(
-          s"$d|${Tables.fingerprint(d, "embeddings")}|residual-k${coarse.size}|m=8|k=16|iters=6")(
+          s, ArtifactStore.corpusKey(d, "embeddings", s"residual-k${coarse.size}|m=8|k=16|iters=6"))(
           Pq.trainResidual(s, emb, coarse, m = 8, k = 16, iters = 6))
         val encRes = Pq.encodeCellsResidual(emb, booksRes, coarse)
         val npRes = Ivf.adaptiveNprobe(6, coarse.size) // = 6 at both gate tiers

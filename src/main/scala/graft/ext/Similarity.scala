@@ -59,6 +59,16 @@ object Similarity {
     array((0 until bands).map(b => shiftright(sig.cast("long"), b * bitsPerBand).bitwiseAND(mask)): _*)
   }
 
+  /** The top `k` rows per q_id by `score` desc, ties by n_id, ranked 1..k
+    * in `rankCol`: exactly `row_number() over (partition by q_id order by
+    * score desc, n_id) <= k`, the shape [[graft.plans.TopKRewrite]] turns
+    * into a bounded per-key heap.
+    */
+  def topByScore(df: DataFrame, score: String, k: Int, rankCol: String = "rank"): DataFrame =
+    df.withColumn(rankCol, row_number().over(
+      Window.partitionBy(col("q_id")).orderBy(col(score).desc, col("n_id"))))
+      .filter(col(rankCol) <= k)
+
   /** Exact brute-force cosine top-k: for each row of `queries`, the k
     * nearest rows of `corpus` (self excluded) by cosine.
     */
@@ -76,15 +86,14 @@ object Similarity {
     val c = corpus
       .select(col("vec_id").as("n_id"), col("embedding").cast("array<double>").as("cv"))
       .withColumn("cn", sqrt(dot(col("cv"), col("cv"))))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    broadcast(q)
-      .crossJoin(c)
-      .filter(col("q_id") =!= col("n_id"))
-      .select(
-        col("q_id"), col("n_id"),
-        (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topByScore(
+      broadcast(q)
+        .crossJoin(c)
+        .filter(col("q_id") =!= col("n_id"))
+        .select(
+          col("q_id"), col("n_id"),
+          (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cos")),
+      "cos", k)
       .select(col("q_id"), col("rank"), col("n_id"), col("cos"))
   }
 
@@ -103,17 +112,16 @@ object Similarity {
     }
     val q = prep(queries, "q_id", "qv", "qn")
     val c = prep(corpus, "n_id", "cv", "cn")
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    q.join(c, Seq("band_idx", "band_val"))
-      .filter(col("q_id") =!= col("n_id"))
-      // norms precomputed per (vector, band) row, never per candidate
-      // pair — same doubles as the fused cosine (see bruteForceTopK)
-      .select(
-        col("q_id"), col("n_id"),
-        (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cos"))
-      .distinct()
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topByScore(
+      q.join(c, Seq("band_idx", "band_val"))
+        .filter(col("q_id") =!= col("n_id"))
+        // norms precomputed per (vector, band) row, never per candidate
+        // pair — same doubles as the fused cosine (see bruteForceTopK)
+        .select(
+          col("q_id"), col("n_id"),
+          (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cos"))
+        .distinct(),
+      "cos", k)
       .select(col("q_id"), col("rank"), col("n_id"), col("cos"))
   }
 }

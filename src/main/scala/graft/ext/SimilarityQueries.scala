@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.functions._
 
 import graft.Q
-import graft.core.{Agg, Tables}
+import graft.core.{Agg, ArtifactStore, Tables}
 
 /** Registered similarity/embedding queries. Brute-force cosine and the
   * per-dimension embedding aggregate are differentially verified against
@@ -179,22 +179,19 @@ object SimilarityQueries {
       waypoints: org.apache.spark.sql.DataFrame,
       queries: org.apache.spark.sql.DataFrame,
       s: Int = 8): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val q = queries
       .select(col("vec_id").as("q_id"), col("embedding").cast("array<double>").as("qv"))
     val wp = waypoints
       .select(col("n_id"), col("cv"))
       .withColumn("wn", sqrt(Similarity.dot(col("cv"), col("cv"))))
-    q.crossJoin(broadcast(wp))
-      .filter(col("q_id") =!= col("n_id"))
-      .select(
-        col("q_id"), col("n_id"),
-        (Similarity.dot(col("qv"), col("cv")) /
-          (sqrt(Similarity.dot(col("qv"), col("qv"))) * col("wn"))).as("wcos"))
-      .withColumn(
-        "wrk",
-        row_number().over(Window.partitionBy(col("q_id")).orderBy(col("wcos").desc, col("n_id"))))
-      .filter(col("wrk") <= s)
+    Similarity.topByScore(
+      q.crossJoin(broadcast(wp))
+        .filter(col("q_id") =!= col("n_id"))
+        .select(
+          col("q_id"), col("n_id"),
+          (Similarity.dot(col("qv"), col("cv")) /
+            (sqrt(Similarity.dot(col("qv"), col("qv"))) * col("wn"))).as("wcos")),
+      "wcos", s, "wrk")
       .select(col("q_id"), col("n_id"))
   }
 
@@ -261,7 +258,6 @@ object SimilarityQueries {
       hops: Int = 6,
       beam: Int = 12,
       seeds: Option[org.apache.spark.sql.DataFrame] = None): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
     val c = corpus
       .select(col("vec_id").as("n_id"), col("embedding").cast("array<double>").as("cv"))
       .withColumn("cn", sqrt(Similarity.dot(col("cv"), col("cv"))))
@@ -283,10 +279,8 @@ object SimilarityQueries {
           .crossJoin(qn.select(col("q_id")))
     }
     var visited = score(entry).localCheckpoint(true)
-    val wBeam = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
     for (_ <- 1 to hops) {
-      val frontier = visited
-        .withColumn("rk", row_number().over(wBeam)).filter(col("rk") <= beam)
+      val frontier = Similarity.topByScore(visited, "cos", beam, "rk")
         .select(col("q_id"), col("n_id"))
       val expand = frontier
         .join(graph, frontier("n_id") === graph("src"))
@@ -294,9 +288,7 @@ object SimilarityQueries {
         .join(visited.select(col("q_id"), col("n_id")), Seq("q_id", "n_id"), "left_anti")
       visited = visited.unionByName(score(expand)).localCheckpoint(true)
     }
-    val routed = visited
-      .withColumn("rank", row_number().over(wBeam)).filter(col("rank") <= 3)
-    (routed, visited)
+    (Similarity.topByScore(visited, "cos", 3), visited)
   }
 
   /** NSW insert-edge derivation (q_sim_graph_incremental's body, shared
@@ -322,8 +314,8 @@ object SimilarityQueries {
     // the shared stored artifact (one Lloyd run per corpus fingerprint
     // across this build AND q_knn_graph_ivf/q_dedup_embed)
     val k = Ivf.adaptiveK(s, d)
-    Pq.sharedDf(
-      s"$d|${graft.core.Tables.fingerprint(d, "embeddings")}|nav-graph|deg=8+4|build=ivfx2|k=$k") {
+    ArtifactStore.sharedDf(
+      s, ArtifactStore.corpusKey(d, "embeddings", s"nav-graph|deg=8+4|build=ivfx2|k=$k")) {
       val emb = graft.core.Tables(s, d, "embeddings")
       navGraphFrom(emb, navKnnEdgesWith(emb, Ivf.trainSharedAdaptive(s, d)))
     }
@@ -336,8 +328,7 @@ object SimilarityQueries {
   private[graft] def waypointsShared(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     val k = Ivf.adaptiveK(s, d)
-    Pq.sharedDf(
-      s"$d|${graft.core.Tables.fingerprint(d, "embeddings")}|nav-waypoints|k=$k") {
+    ArtifactStore.sharedDf(s, ArtifactStore.corpusKey(d, "embeddings", s"nav-waypoints|k=$k")) {
       cellMedoids(graft.core.Tables(s, d, "embeddings"), Ivf.trainSharedAdaptive(s, d))
         .localCheckpoint(true)
     }
@@ -357,8 +348,8 @@ object SimilarityQueries {
     */
   private[graft] def compactedWaypointsShared(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    Pq.sharedDf(
-      s"$d|${graft.core.Tables.fingerprint(d, "embeddings")}|nav-waypoints-compact|dead=7m3|build=adaptive") {
+    ArtifactStore.sharedDf(
+      s, ArtifactStore.corpusKey(d, "embeddings", "nav-waypoints-compact|dead=7m3|build=adaptive")) {
       val live = graft.core.Tables(s, d, "embeddings").filter(!(col("vec_id") % 7 === 3))
       cellMedoids(live, Ivf.trainK(s, live, Ivf.cellCountScaled(live.count())))
         .localCheckpoint(true)
@@ -366,8 +357,8 @@ object SimilarityQueries {
 
   private[graft] def compactedNavGraphShared(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    Pq.sharedDf(
-      s"$d|${graft.core.Tables.fingerprint(d, "embeddings")}|nav-graph-compact|dead=7m3|build=ivfAdaptiveX2") {
+    ArtifactStore.sharedDf(
+      s, ArtifactStore.corpusKey(d, "embeddings", "nav-graph-compact|dead=7m3|build=ivfAdaptiveX2")) {
       // derived (live-only) corpus: navGraph picks its own adaptive k
       // from the live count — the quantizer is re-trained on exactly
       // the vectors the compacted graph indexes
@@ -387,8 +378,8 @@ object SimilarityQueries {
     val emb = graft.core.Tables(s, d, "embeddings")
     val base = emb.filter(col("vec_id") % 10 =!= 0)
     val delta = emb.filter(col("vec_id") % 10 === 0)
-    val baseGraph = Pq.sharedDf(
-      s"$d|${graft.core.Tables.fingerprint(d, "embeddings")}|nav-graph-base|deg=8+4|build=ivfAdaptiveX2") {
+    val baseGraph = ArtifactStore.sharedDf(
+      s, ArtifactStore.corpusKey(d, "embeddings", "nav-graph-base|deg=8+4|build=ivfAdaptiveX2")) {
       navGraph(base)
     }
     (base, delta, baseGraph)
@@ -400,11 +391,8 @@ object SimilarityQueries {
       baseGraph: org.apache.spark.sql.DataFrame,
       hops: Int = 6,
       beam: Int = 12): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val (_, visited) = graphRoutedOver(base, delta, baseGraph, hops, beam)
-    val wIns = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    visited
-      .withColumn("rk", row_number().over(wIns)).filter(col("rk") <= 8)
+    Similarity.topByScore(visited, "cos", 8, "rk")
       .select(col("q_id").as("src"), col("n_id").as("dst"), col("cos"))
   }
 
@@ -447,13 +435,7 @@ object SimilarityQueries {
     * (q_id, n_id, cv, cn2, rel), checkpointed once for the greedy rounds.
     */
   private def mmrTop20(rels: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    rels
-      .withColumn(
-        "crnk",
-        row_number().over(
-          Window.partitionBy(col("q_id")).orderBy(col("rel").desc, col("n_id"))))
-      .filter(col("crnk") <= 20)
+    Similarity.topByScore(rels, "rel", 20, "crnk")
       .select(col("q_id"), col("n_id"), col("cv"), col("cn2"), col("rel"))
       .localCheckpoint(true)
   }
@@ -502,7 +484,6 @@ object SimilarityQueries {
       emb: org.apache.spark.sql.DataFrame,
       anchorPred: org.apache.spark.sql.Column,
       pool: Option[org.apache.spark.sql.DataFrame]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val n = emb
       .select(
         col("vec_id"), col("label"),
@@ -521,16 +502,12 @@ object SimilarityQueries {
           .join(candsN, Seq("n_id"))
           .filter(col("q_label") =!= col("neg_label"))
     }
-    joined
-      .select(
+    Similarity.topByScore(
+      joined.select(
         col("q_id"), col("q_label"), col("n_id"), col("neg_label"),
         (Similarity.dot(col("qv"), col("cv")) /
-          (sqrt(col("qn2")) * sqrt(col("cn2")))).as("cos"))
-      .withColumn(
-        "rank",
-        row_number().over(
-          Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))))
-      .filter(col("rank") <= 3)
+          (sqrt(col("qn2")) * sqrt(col("cn2")))).as("cos")),
+      "cos", 3)
       .select(col("q_id"), col("rank"), col("n_id"), col("q_label"), col("neg_label"), col("cos"))
   }
 
@@ -589,7 +566,6 @@ object SimilarityQueries {
     */
   def rankEval(emb: org.apache.spark.sql.DataFrame,
       queryPred: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val wDcg = (1 to 10).map(r => math.round(1e6 / (math.log(r + 1.0) / math.log(2.0))))
     val wMrr = (1 to 10).map(r => math.round(1e6 / r.toDouble))
     val idcg = (1 to 10).map(r => (11 - r) * wDcg(r - 1)).sum
@@ -613,15 +589,9 @@ object SimilarityQueries {
         (sqrt(col("qn2")) * sqrt(col("cn2")))).as("cos_full"),
       (Similarity.dot(col("qvt"), col("cvt")) /
         (sqrt(col("qn2t")) * sqrt(col("cn2t")))).as("cos_trunc"))
-    val truth = scored
-      .withColumn("frnk", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("cos_full").desc, col("n_id"))))
-      .filter(col("frnk") <= 10)
+    val truth = Similarity.topByScore(scored, "cos_full", 10, "frnk")
       .select(col("q_id"), col("n_id"), (lit(11) - col("frnk")).cast("long").as("rel"))
-    val system = scored
-      .withColumn("srnk", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("cos_trunc").desc, col("n_id"))))
-      .filter(col("srnk") <= 10)
+    val system = Similarity.topByScore(scored, "cos_trunc", 10, "srnk")
       .select(col("q_id"), col("n_id"), col("srnk"))
     val wd = array(wDcg.map(lit): _*)
     val wm = array(wMrr.map(lit): _*)
@@ -936,11 +906,7 @@ object SimilarityQueries {
         // waypoints may still SEED the walk — that IS the tombstone
         // contract (dead nodes stay routing structure, answers filter)
         val (_, visited) = hierRoutedOver(s, d, emb, q, graph)
-        val wBeam = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-        val servedLive = visited
-          .filter(!(col("n_id") % 7 === 3))
-          .withColumn("rank", row_number().over(wBeam)).filter(col("rank") <= 3)
+        val servedLive = Similarity.topByScore(visited.filter(!(col("n_id") % 7 === 3)), "cos", 3)
         val live = emb.filter(!deadPred)
         recallGate(Similarity.bruteForceTopK(q, live, 3), servedLive, floor = 0.4)
           .crossJoin(broadcast(live.agg(count(lit(1)).as("n_live"))))
@@ -1063,11 +1029,7 @@ object SimilarityQueries {
         // regardless of seed count/beam; the depth, not the entry, is
         // what that geometry pays for). Bound = 8 + 6·12·12 = 872.
         val (_, visited) = hierRoutedOver(s, d, corpus, q, graph, wp, hops = 6)
-        val wBeam = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-        val served = visited
-          .filter(!(col("n_id") % 7 === 3))
-          .withColumn("rank", row_number().over(wBeam)).filter(col("rank") <= 3)
+        val served = Similarity.topByScore(visited.filter(!(col("n_id") % 7 === 3)), "cos", 3)
         recallGate(Similarity.bruteForceTopK(q, live, 3), served, floor = 0.4)
           .crossJoin(broadcast(live.agg(count(lit(1)).as("n_live"))))
           .crossJoin(broadcast(
@@ -1303,7 +1265,7 @@ object SimilarityQueries {
           .select(col("q_id"), col("qi"), col("tv").as("qv"), col("tn2").as("qn2"))
         val c = toks(emb, "n_id", "di")
           .select(col("n_id"), col("di"), col("tv").as("cv"), col("tn2").as("cn2"))
-        SearchQueries.topByScore(SearchQueries.maxsim(q.join(c, col("q_id") =!= col("n_id"))), "li_score", 5)
+        Similarity.topByScore(SearchQueries.maxsim(q.join(c, col("q_id") =!= col("n_id"))), "li_score", 5)
           .select(col("q_id"), col("rank"), col("n_id"), col("li_score"))
           .orderBy("q_id", "rank")
       },

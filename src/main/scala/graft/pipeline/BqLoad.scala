@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField}
 
 import graft.core.SchemaDoc
+import graft.sources.DirtyCsv
 
 /** Local twin of the BigQuery CSV LOAD JOB the reference's importer runs
   * (app/bq-importer/main.py:19-41) — the load-contract semantics that the
@@ -83,11 +84,9 @@ object BqLoad {
     // COUNT failures against max_bad_records before deciding anything.
     val parsed = spark.read
       .schema(declared.add(StructField(CorruptCol, StringType, nullable = true)))
+      .options(DirtyCsv.CleanCsvOptions)
       .option("header", config.skipLeadingRows == 1)
       .option("enforceSchema", "true")
-      .option("quote", "\"")
-      .option("escape", "\"")
-      .option("nullValue", "")
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", CorruptCol)
       .csv(csvPath)

@@ -83,10 +83,7 @@ object Pipeline {
   def readClean(spark: SparkSession, layout: Layout, table: String): DataFrame =
     spark.read
       .schema(declaredSchema(spark, layout, table))
-      .option("header", "false")
-      .option("quote", "\"")
-      .option("escape", "\"")
-      .option("nullValue", "")
+      .options(DirtyCsv.CleanCsvOptions)
       .csv(layout.cleanCsv(table))
 
   /** Stage 4 — load through the pluggable [[WarehouseSink]] seam
@@ -107,9 +104,27 @@ object Pipeline {
     sink.read(spark, layout, table)
   }
 
-  /** Full per-table pipeline: export → clean schema → clean data → load.
-    * Schema stage runs strictly before data load (SURVEY §3 ordering hazard).
+  /** Full per-table pipeline: export → clean schema → clean data → load,
+    * returning the rows the load wrote (`output_rows` parity,
+    * app/bq-importer/main.py:41-43), as the sink observed them on the
+    * write — no scan of the destination. Schema stage runs strictly
+    * before data load (SURVEY §3 ordering hazard).
     */
+  def runTableRows(
+      spark: SparkSession,
+      df: DataFrame,
+      mysqlTypes: Seq[SchemaColumn],
+      layout: Layout,
+      table: String,
+      compat: Boolean = true,
+      sink: WarehouseSink = ParquetWarehouseSink): Long = {
+    exportStage(spark, df, mysqlTypes, layout, table)
+    cleanSchemaStage(spark, layout, table, compat)
+    cleanDataStage(spark, layout, table)
+    sink.load(spark, layout, table)
+  }
+
+  /** [[runTableRows]], then the loaded relation (getting it runs no job). */
   def runTable(
       spark: SparkSession,
       df: DataFrame,
@@ -118,10 +133,8 @@ object Pipeline {
       table: String,
       compat: Boolean = true,
       sink: WarehouseSink = ParquetWarehouseSink): DataFrame = {
-    exportStage(spark, df, mysqlTypes, layout, table)
-    cleanSchemaStage(spark, layout, table, compat)
-    cleanDataStage(spark, layout, table)
-    loadStage(spark, layout, table, sink)
+    runTableRows(spark, df, mysqlTypes, layout, table, compat, sink)
+    sink.read(spark, layout, table)
   }
 
   /** Dated-partition warehouse load (SURVEY §1.1 "dated partition

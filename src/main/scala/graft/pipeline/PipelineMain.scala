@@ -26,7 +26,8 @@ object PipelineMain {
 
   /** One scheduler tick — exactly what the external cron invokes
     * (reference main.tf:46-56), minus session lifecycle so a spec can
-    * drive ticks end-to-end (CronKickoffSpec). Single-flight: a tick
+    * drive ticks end-to-end (CronKickoffSpec). Returns the (table, rows
+    * loaded) of every table it ran, in load order. Single-flight: a tick
     * scheduled while one is in flight yields cleanly (None), like the
     * reference's 409-means-already-running path (main.py:87-92) — it
     * must NOT interleave loads with the holder.
@@ -34,7 +35,7 @@ object PipelineMain {
   def tick(
       root: String,
       urlArg: Option[String],
-      spark: org.apache.spark.sql.SparkSession): Option[Unit] =
+      spark: org.apache.spark.sql.SparkSession): Option[Seq[(String, Long)]] =
     RunLock.singleFlight(root) {
       run(root, urlArg, spark)
     }
@@ -42,7 +43,7 @@ object PipelineMain {
   private def run(
       root: String,
       urlArg: Option[String],
-      spark: org.apache.spark.sql.SparkSession): Unit = {
+      spark: org.apache.spark.sql.SparkSession): Seq[(String, Long)] = {
     val url = urlArg.getOrElse(JdbcCatalog.seedDemoDb(s"$root/derbydb"))
 
     // stage 1 — discovery (query_runner parity) + publish
@@ -60,13 +61,14 @@ object PipelineMain {
     // process would silently lose the batch on failure.
     val layout = Pipeline.Layout.today(root)
     val peeked = MessageQueue.peekAll(topic)
-    peeked.foreach { case (_, msg) =>
+    val loaded = peeked.flatMap { case (_, msg) =>
       RunGuard.check(msg)
-      msg.tables.foreach { table =>
+      msg.tables.map { table =>
         val df = JdbcCatalog.fullTableScan(spark, url, table)
         val cols = JdbcCatalog.introspectColumns(url, table)
-        val loaded = Pipeline.runTable(spark, df, cols, layout, table)
-        println(s"[pipeline] loaded $table: ${loaded.count()} rows") // main.py:41-43 parity
+        val rows = Pipeline.runTableRows(spark, df, cols, layout, table)
+        println(s"[pipeline] loaded $table: $rows rows") // main.py:41-43 parity
+        table -> rows
       }
     }
     // ack EXACTLY the processed files — a message published mid-run stays
@@ -78,5 +80,6 @@ object PipelineMain {
     // serve touches _OK, so live artifacts never expire
     val swept = graft.core.ArtifactStore.retentionSweep(spark)
     if (swept.nonEmpty) println(s"[pipeline] artifact sweep removed ${swept.size} stale slots")
+    loaded
   }
 }

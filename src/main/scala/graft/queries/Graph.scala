@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Q
-import graft.core.{Agg, Ckpt, Tables}
+import graft.core.{Agg, ArtifactStore, Ckpt, Tables}
 import graft.core.Ckpt.TruncateOps
 
 /** Graph analytics beyond near-dup connected components
@@ -588,7 +588,7 @@ object Graph {
       // recompute IN-PLAN as its gate, so no registered row showed the
       // warm path's actual cost shape. Here the base labeling is a
       // STORED ARTIFACT (built once per corpus fingerprint through the
-      // Pq.sharedDf registry — the CcStream snapshot shape), and the
+      // ArtifactStore.sharedDf registry — the CcStream snapshot shape), and the
       // registered plan runs ONLY the warm wave: stored labels + delta
       // batch → ccConvergedFrom seeded at the changed neighborhoods.
       // No cold ccConverged anywhere in the serve path (GraphSpec pins
@@ -704,8 +704,7 @@ object Graph {
     */
   private[graft] def storedBaseLabels(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    graft.ext.Pq.sharedDf(
-      s"$d|${Tables.fingerprint(d, "lineitem")}|cc-labels|dom=pk%4=1|base=ok%2=0") {
+    ArtifactStore.sharedDf(s, ArtifactStore.corpusKey(d, "lineitem", "cc-labels|dom=pk%4=1|base=ok%2=0")) {
       val liBase = Tables(s, d, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .filter(col("pk") % 4 === 1 && col("l_orderkey") % 2 === 0)

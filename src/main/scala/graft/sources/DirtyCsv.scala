@@ -67,9 +67,7 @@ object DirtyCsv {
             .as("value"))
         .write.mode("overwrite").text(tmp)
       spark.read
-        .options(Map(
-          "multiLine" -> "true", "nullValue" -> "", "emptyValue" -> "",
-          "quote" -> "\"", "escape" -> "\"")) // wire doubles quotes, not backslash-escapes
+        .options(CleanCsvOptions ++ Map("multiLine" -> "true", "emptyValue" -> ""))
         .schema(schema)
         .csv(tmp)
     } else {
@@ -108,6 +106,14 @@ object DirtyCsv {
       .mode("overwrite")
       .text(path)
   }
+
+  /** Spark csv reader options for the POST-CLEAN format
+    * [[writeHeaderless]] writes: headerless, `"`-quoted values with `""`
+    * escapes (the wire doubles quotes, never backslash-escapes), and an
+    * empty unquoted field as NULL.
+    */
+  val CleanCsvOptions: Map[String, String] =
+    Map("header" -> "false", "quote" -> "\"", "escape" -> "\"", "nullValue" -> "")
 
   /** Write a DataFrame as headerless quoted CSV in the POST-CLEAN format:
     * values quoted, NULL as an UNQUOTED empty field — exactly what the

@@ -52,10 +52,7 @@ object FileChain {
       checkpoint: String): Unit = {
     val q = spark.readStream
       .schema(schema)
-      .option("header", "false")
-      .option("quote", "\"")
-      .option("escape", "\"")
-      .option("nullValue", "")
+      .options(DirtyCsv.CleanCsvOptions)
       .csv(inDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>

@@ -4,19 +4,22 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** The stale-cache hazard the stored-artifact registries are keyed
+/** The stale-cache hazard the stored-artifact registry is keyed
   * against (round-14 advice): a per-JVM registry keyed only on (dir,
   * params) silently serves the OLD index after the fixture under `dir`
-  * is regenerated. Every registry ([[Pq.shared]]/[[Pq.sharedDf]],
+  * is regenerated. [[graft.core.ArtifactStore.shared]] is the one
+  * per-JVM memo, and every artifact served through it ([[Pq.shared]],
   * [[Ivf.trainShared]], [[SearchQueries.sparseIndexShared]],
-  * [[SearchQueries.bm25IndexShared]], [[Dedup.minhashIndexShared]])
-  * embeds `Tables.fingerprint` (a digest of every file's name, length
-  * and mtime) in its key for exactly this reason — this spec REBUILDS a
+  * [[SearchQueries.bm25IndexShared]], [[Dedup.minhashIndexShared]],
+  * the `sharedDf` codes, graphs and labels) is keyed by
+  * `ArtifactStore.corpusKey`, which embeds `Tables.fingerprint` (a
+  * digest of every file's name, length and mtime) — this spec REBUILDS a
   * corpus under one path mid-JVM and asserts the served artifacts
   * reflect the new rows, so the fingerprint keying is a gated contract,
-  * not a comment. Since round 16 the registries also carry a DISK tier
+  * not a comment. Since round 16 the registry also carries a DISK tier
   * ([[graft.core.ArtifactStore]]): the cold-JVM tests below gate the
-  * restart half of train-once/serve-many.
+  * restart half of train-once/serve-many, and the memo case gates its
+  * nested, concurrent and failing calls.
   */
 class ArtifactRegistrySpec extends SparkSpec {
 
@@ -32,6 +35,68 @@ class ArtifactRegistrySpec extends SparkSpec {
     }.toDF("doc_id", "text")
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+  }
+
+  test("the registry memo runs each body once under nested, concurrent and failing calls") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import graft.core.ArtifactStore
+    val tag = java.util.UUID.randomUUID().toString
+    val store = java.nio.file.Files.createTempDirectory("graft-artifact-memo").toString
+    spark.conf.set("graft.artifacts.dir", store)
+    try {
+      // nested: each outer body resolves an inner key through the same
+      // registry (memo for even i, a slot-backed shared for odd i), the
+      // pqTokenCodes -> pqTokenBooks and navGraphShared -> adaptiveK
+      // shape. "Aa" and "BB" have one String hash, so every inner key
+      // lands in its outer key's map bin: a memo that ran bodies inside
+      // computeIfAbsent throws "Recursive update" here.
+      assert("Aa".hashCode == "BB".hashCode)
+      val outerRuns = new AtomicInteger(0)
+      val innerRuns = new AtomicInteger(0)
+      def inner(i: Int): Int =
+        if (i % 2 == 0) ArtifactStore.memo(s"$tag|$i|BB") { innerRuns.incrementAndGet(); i * 10 }
+        else
+          ArtifactStore.shared(spark, s"$tag|$i|BB") { w =>
+            innerRuns.incrementAndGet(); w.text("p", (i * 10).toString)
+          } { slot => slot.text("p").toInt }
+      def outer(i: Int): Int =
+        ArtifactStore.memo(s"$tag|$i|Aa") { outerRuns.incrementAndGet(); inner(i) + i }
+      assert((0 until 64).map(outer) == (0 until 64).map(_ * 11))
+      assert(outerRuns.get() == 64 && innerRuns.get() == 64)
+      assert((0 until 64).map(outer) == (0 until 64).map(_ * 11))
+      assert(outerRuns.get() == 64 && innerRuns.get() == 64, "a memoized body ran twice")
+
+      // concurrent: 4 threads ask for one key; the body runs once and
+      // every caller gets its value
+      val runs = new AtomicInteger(0)
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val got = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
+      val threads = (0 until 4).map { _ =>
+        val t = new Thread(() => {
+          start.await()
+          got.add(ArtifactStore.memo(s"$tag|concurrent") {
+            runs.incrementAndGet(); Thread.sleep(200); Integer.valueOf(42)
+          })
+          ()
+        })
+        t.start(); t
+      }
+      start.countDown()
+      threads.foreach(_.join(60000))
+      assert(runs.get() == 1, s"concurrent callers ran the body ${runs.get()} times")
+      assert(got.size == 4 && got.toArray.forall(_ == Integer.valueOf(42)))
+
+      // failing: the exception reaches the caller, nothing is cached,
+      // and the next call runs the body again
+      val tries = new AtomicInteger(0)
+      def flaky(): String = ArtifactStore.memo(s"$tag|flaky") {
+        if (tries.incrementAndGet() == 1) throw new IllegalStateException("planted body failure")
+        "ok"
+      }
+      assert(intercept[IllegalStateException](flaky()).getMessage == "planted body failure")
+      assert(flaky() == "ok" && tries.get() == 2)
+      assert(flaky() == "ok" && tries.get() == 2)
+    } finally spark.conf.unset("graft.artifacts.dir")
   }
 
   test("sparse index registry rebuilds when the corpus under the same path is regenerated") {
@@ -76,7 +141,7 @@ class ArtifactRegistrySpec extends SparkSpec {
   test("a cold JVM serves every registry from the persisted slot: no corpus scan, no rebuild") {
     // Round-15 verdict #2: "train-once/serve-many" must survive process
     // restarts. A true cold JVM can't run inside one suite, so this simulates
-    // its observable state: the in-memory maps are EMPTY (clearShared)
+    // its observable state: the in-memory memo is EMPTY (clearShared)
     // while the ArtifactStore slots persist — exactly what a restarted
     // driver sees. Done-criteria asserted: (a) the second serve performs
     // ZERO builds (ArtifactStore.builds unchanged — nothing re-trained,
@@ -99,9 +164,7 @@ class ArtifactRegistrySpec extends SparkSpec {
         .orderBy("a_id", "rnk").collect().map(_.toSeq).toSeq
 
       // "restart": drop all in-memory registries; the slots remain
-      Dedup.clearMinhashShared()
-      SearchQueries.clearSparseShared()
-      Pq.clearShared()
+      graft.core.ArtifactStore.clearShared()
       val buildsBefore = graft.core.ArtifactStore.builds.get()
 
       val coldMh = Dedup.minhashIndexShared(spark, dir)
@@ -137,11 +200,17 @@ class ArtifactRegistrySpec extends SparkSpec {
       writeEmbeddings(dir, 0L until 40L)
       val warmGraph = SimilarityQueries.navGraphShared(spark, dir)
         .orderBy("src", "dst").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      Pq.clearShared()
+      val warmCentroids = Ivf.trainSharedAdaptive(spark, dir)
+      graft.core.ArtifactStore.clearShared()
       val graphBuildsBefore = graft.core.ArtifactStore.builds.get()
       val coldGraph = SimilarityQueries.navGraphShared(spark, dir)
       assert(graft.core.ArtifactStore.builds.get() == graphBuildsBefore,
         "cold nav-graph serve re-ran the kNN build instead of loading the slot")
+      // the quantizer the graph build trained is its own slot: a cold
+      // JVM serves it without re-running Lloyd
+      assert(Ivf.trainSharedAdaptive(spark, dir) == warmCentroids)
+      assert(graft.core.ArtifactStore.builds.get() == graphBuildsBefore,
+        "cold quantizer serve re-trained the IVF centroids")
       assert(coldGraph.orderBy("src", "dst").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSeq == warmGraph,
         "persisted nav graph diverged from the built one")
@@ -172,7 +241,7 @@ class ArtifactRegistrySpec extends SparkSpec {
       val warmBooks = SearchQueries.pqTokenBooks(spark, dir)
       val warmCodes = SearchQueries.pqTokenCodes(spark, dir)
         .orderBy("vec_id", "m").collect().map(_.toSeq).toSeq
-      Pq.clearShared()
+      graft.core.ArtifactStore.clearShared()
       val buildsBefore = graft.core.ArtifactStore.builds.get()
       val coldBooks = SearchQueries.pqTokenBooks(spark, dir)
       val coldCodes = SearchQueries.pqTokenCodes(spark, dir)
@@ -194,7 +263,7 @@ class ArtifactRegistrySpec extends SparkSpec {
       writeCorpus(dir, 0L until 20L, Seq("apple", "banana", "cherry"))
       Dedup.minhashIndexShared(spark, dir)
       // restart + regenerate: the persisted slot must NOT shadow the new corpus
-      Dedup.clearMinhashShared()
+      graft.core.ArtifactStore.clearShared()
       writeCorpus(dir, 300L until 350L, Seq("stoat", "weasel"))
       val buildsBefore = graft.core.ArtifactStore.builds.get()
       val after = Dedup.minhashIndexShared(spark, dir)

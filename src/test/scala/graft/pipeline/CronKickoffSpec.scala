@@ -26,6 +26,14 @@ class CronKickoffSpec extends SparkSpec {
     // the demo db's discovered tables landed in the warehouse
     val users = spark.read.parquet(s"$root/warehouse/users")
     assert(users.count() > 0)
+    // each reported count is the rows the load wrote, read off the
+    // write itself: it equals the warehouse table's row count
+    val loaded = ran.get
+    assert(loaded.map(_._1).contains("users"))
+    loaded.foreach { case (table, rows) =>
+      assert(rows == spark.read.parquet(s"$root/warehouse/$table").count(),
+        s"tick reported $rows rows loaded for $table")
+    }
     // peek-then-ack drained the batch it processed
     assert(MessageQueue.peekAll(s"$root/topic").isEmpty, "topic not drained")
     // and the lock was released: a second tick runs (idempotent overwrite)

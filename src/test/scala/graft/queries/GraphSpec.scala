@@ -287,7 +287,7 @@ class GraphSpec extends SparkSpec {
       assert(warmMap == coldMap, "warm-served repair diverged from the cold fixpoint")
       // serve path: clear the JVM memo so the disk slot is the only
       // warm state — the rerun must LOAD, not rebuild
-      graft.ext.Pq.clearShared()
+      graft.core.ArtifactStore.clearShared()
       val buildsBefore = graft.core.ArtifactStore.builds.get()
       val second = q.run(spark, sf()).collect()
       assert(second.map(r => r.getAs[Long]("pk") -> r.getAs[Long]("label")).toMap == coldMap)
@@ -295,7 +295,7 @@ class GraphSpec extends SparkSpec {
         "second q_cc_repair_served run re-built the stored base labels")
     } finally {
       spark.conf.unset("graft.artifacts.dir")
-      graft.ext.Pq.clearShared()
+      graft.core.ArtifactStore.clearShared()
     }
   }
 
