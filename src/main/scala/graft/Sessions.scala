@@ -6,6 +6,11 @@ import org.apache.spark.sql.SparkSession
   * tests: local[N] with N shuffle partitions (sized to the local core
   * count, not the 200 default — on a real cluster this is set per job),
   * AQE on, UTC session time, graft extensions registered.
+  *
+  * `file:` paths go through [[graft.core.NioLocalFileSystem]], which sets
+  * permissions without forking `chmod`. Hadoop caches the first `file:`
+  * FileSystem a JVM creates, so build the session before touching a local
+  * path through Hadoop.
   */
 object Sessions {
 
@@ -34,6 +39,7 @@ object Sessions {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.core.NioLocalFileSystem].getName)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // reliable-checkpoint seam (graft.core.Ckpt): set from the

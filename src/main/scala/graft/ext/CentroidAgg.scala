@@ -41,4 +41,8 @@ object CentroidAgg extends Aggregator[Seq[Float], (Array[Double], Long), Seq[Dou
 
   override def outputEncoder: Encoder[Seq[Double]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]()
+
+  // plan text prints the aggregator; the default `…$@<identity hash>`
+  // would differ in every JVM
+  override def toString: String = "CentroidAgg"
 }

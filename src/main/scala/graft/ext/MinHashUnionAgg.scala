@@ -37,4 +37,8 @@ object MinHashUnionAgg extends Aggregator[Seq[Long], Array[Long], Seq[Long]] {
 
   override def outputEncoder: Encoder[Seq[Long]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
+
+  // plan text prints the aggregator; the default `…$@<identity hash>`
+  // would differ in every JVM
+  override def toString: String = "MinHashUnionAgg"
 }

@@ -48,30 +48,18 @@ object SchemaFile {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Read a `.schema` file into ordered (name, mysqlType) columns. */
-  def read(spark: SparkSession, path: String): Seq[SchemaColumn] = {
-    val p = new Path(path)
-    val in = fs(spark, p).open(p)
-    val text =
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), StandardCharsets.UTF_8)
-      finally in.close()
-    text.linesIterator
+  def read(spark: SparkSession, path: String): Seq[SchemaColumn] =
+    readText(spark, path).linesIterator
       .filter(_.nonEmpty)
       .map { l =>
         val fields = parseLine(l)
         SchemaColumn(fields.head, if (fields.size > 1) fields(1) else "")
       }
       .toSeq
-  }
 
   /** Write (name, mysqlType) columns as a `.schema` file (quoted, headerless). */
-  def write(spark: SparkSession, path: String, cols: Seq[SchemaColumn]): Unit = {
-    val p = new Path(path)
-    val out = fs(spark, p).create(p, true)
-    try out.write(
-      cols.map(c => s""""${c.name}","${c.mysqlType}"""").mkString("", "\n", "\n")
-        .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  def write(spark: SparkSession, path: String, cols: Seq[SchemaColumn]): Unit =
+    writeText(spark, path, cols.map(c => s""""${c.name}","${c.mysqlType}"""").mkString("", "\n", "\n"))
 
   /** Write small text content (e.g. the BQ schema JSON) to any Hadoop FS path. */
   def writeText(spark: SparkSession, path: String, content: String): Unit = {
