@@ -6,7 +6,9 @@ package graft
   * set. With `--ab <confKey>` it A/Bs a boolean session conf instead:
   * both arms are warmed, then each rep runs `key=true` and `key=false`
   * back to back, so JIT/GC drift hits both arms equally, and one line
-  * per arm is printed.
+  * per arm is printed. Every line ends with `compiles=`, the number of
+  * classes each rep compiled through Janino (a rep that reuses Spark's
+  * codegen cache reads 0).
   *
   * Usage: runMain graft.QTime <sfDir> <reps> [--ab <confKey>] <name...>
   */
@@ -20,15 +22,21 @@ object QTime {
     }
     val spark = Sessions.build("graft-qtime")
     Timing.warm(spark, sfDir)
-    def line(tag: String, ts: Seq[Double]): String =
-      s"$tag ${ts.map(Timing.fmt).mkString(" ")}  min=${Timing.fmt(ts.min)}"
+    def line(tag: String, reps: Seq[(Double, Long)]): String = {
+      val ts = reps.map(_._1)
+      s"$tag ${ts.map(Timing.fmt).mkString(" ")}  min=${Timing.fmt(ts.min)} compiles=${reps.map(_._2).mkString(",")}"
+    }
     names.foreach { n =>
-      def time(): Double = Timing.timeQuery(spark, n, sfDir)
+      def time(): (Double, Long) = {
+        val c0 = Timing.compiles
+        val s = Timing.timeQuery(spark, n, sfDir)
+        (s, Timing.compiles - c0)
+      }
       abKey match {
         case None =>
           println(line(s"QTIME ${n.padTo(24, ' ')}", (1 to reps).map(_ => time())))
         case Some(key) =>
-          def arm(v: String): Double = { spark.conf.set(key, v); time() }
+          def arm(v: String): (Double, Long) = { spark.conf.set(key, v); time() }
           arm("true"); arm("false") // warm both arms
           val ab = (1 to reps).map(_ => (arm("true"), arm("false")))
           println(line(s"AB ${n.padTo(24, ' ')} $key=true ", ab.map(_._1)))

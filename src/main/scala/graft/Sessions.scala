@@ -7,10 +7,22 @@ import org.apache.spark.sql.SparkSession
   * count, not the 200 default — on a real cluster this is set per job),
   * AQE on, UTC session time, graft extensions registered.
   *
-  * `file:` paths go through [[graft.core.NioLocalFileSystem]], which sets
-  * permissions without forking `chmod`. Hadoop caches the first `file:`
-  * FileSystem a JVM creates, so build the session before touching a local
-  * path through Hadoop.
+  * `file:` paths go through [[graft.core.NioLocalFileSystem]], and
+  * `FileContext` (Structured Streaming's checkpoint and sink metadata)
+  * through [[graft.core.NioLocalFs]]; both set permissions and read
+  * symlinks without forking `chmod` or `readlink`. Hadoop caches the first
+  * `file:` FileSystem a JVM creates, so build the session before touching a
+  * local path through Hadoop.
+  *
+  * Spark's codegen cache holds 2048 generated classes instead of its
+  * default 100. One pass of perfbench's ten-query warehouse mix compiles
+  * 206 classes at sf0.01; Bench's main, ext and graph tiers compile 291,
+  * 315 and 138, and all three in one pass 744. At 100 entries the
+  * least-recently-used cache evicts every class of such a mix before its
+  * next pass reuses it, so every pass compiled its whole working set again
+  * through Janino; at 2048 a repeated pass compiles none. The setting is a static conf read once,
+  * when the JVM first generates code: it takes effect only if this is the
+  * JVM's first session.
   */
 object Sessions {
 
@@ -39,7 +51,9 @@ object Sessions {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
+      .config("spark.sql.codegen.cache.maxEntries", "2048")
       .config("spark.hadoop.fs.file.impl", classOf[graft.core.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.core.NioLocalFs].getName)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // reliable-checkpoint seam (graft.core.Ckpt): set from the

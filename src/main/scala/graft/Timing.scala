@@ -22,6 +22,11 @@ object Timing {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** Classes compiled through Janino in this JVM so far: Spark's codegen
+    * cache misses, driver and task threads alike.
+    */
+  def compiles: Long = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   def fmt(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
 
   /** 3-decimal locale-safe formatting for machine-read JSON lines. */

@@ -39,4 +39,25 @@ abstract class SparkSpec extends AnyFunSuite {
       }
     (out, props.toArray(Array.empty[java.util.Properties]).toSeq)
   }
+
+  /** `body`'s result and the commands of the operating-system processes
+    * started while it ran (JFR `jdk.ProcessStart`).
+    */
+  def processStarts[T](body: => T): (T, Seq[String]) = {
+    import scala.jdk.CollectionConverters._
+    val rec = new jdk.jfr.Recording()
+    val dump = java.nio.file.Files.createTempFile("process-starts", ".jfr")
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      val out = body
+      rec.stop()
+      rec.dump(dump)
+      (out, jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toList
+        .filter(_.getEventType.getName == "jdk.ProcessStart").map(_.getString("command")))
+    } finally {
+      rec.close()
+      java.nio.file.Files.deleteIfExists(dump)
+    }
+  }
 }

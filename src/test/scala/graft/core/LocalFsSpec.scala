@@ -2,19 +2,23 @@ package graft.core
 
 import java.net.URI
 import java.nio.file.{Files, Path => JPath}
+import java.util.EnumSet
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{CreateFlag, FileContext, FileSystem, LocalFileSystem, Options, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.local.LocalFs
 import org.apache.hadoop.fs.permission.FsPermission
 
 import graft.SparkSpec
 import graft.pipeline.Pipeline
 
-/** The session's `file:` FileSystem ([[NioLocalFileSystem]]): it is the one
-  * every caller gets, it leaves the same permission bits and `.crc` files as
-  * the stock `LocalFileSystem`, and a pipeline table run starts no process.
+/** The session's `file:` FileSystem ([[NioLocalFileSystem]]) and its
+  * `FileContext` twin ([[NioLocalFs]]): they are the ones every caller gets,
+  * they leave the same permission bits and `.crc` files as the stock
+  * `LocalFileSystem` and `LocalFs`, and a pipeline table run starts no
+  * process.
   */
 class LocalFsSpec extends SparkSpec {
 
@@ -64,6 +68,69 @@ class LocalFsSpec extends SparkSpec {
     }
   }
 
+  test("the session's FileContext file: system is NioLocalFs") {
+    val fc = FileContext.getFileContext(new URI("file:///"), spark.sparkContext.hadoopConfiguration)
+    assert(fc.getDefaultFileSystem.isInstanceOf[NioLocalFs])
+  }
+
+  /** Relative path and octal mode of everything under `root`. */
+  private def tree(root: JPath): Seq[(String, String)] =
+    Files.walk(root).iterator.asScala.filter(_ != root).map { p =>
+      root.relativize(p).toString -> "%04o".format(Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & Integer.parseInt("7777", 8))
+    }.toSeq.sorted
+
+  /** What a Structured Streaming metadata write leaves through a
+    * `FileContext` over `afs`: `mkdir`, then `create` of a temp file, then
+    * an overwriting `rename` onto the final name.
+    */
+  private def fileContextWrite(afs: Class[_], umask: String): Seq[(String, String)] = {
+    val conf = new Configuration()
+    conf.set("fs.permissions.umask-mode", umask)
+    conf.set("fs.AbstractFileSystem.file.impl", afs.getName)
+    val fc = FileContext.getFileContext(new URI("file:///"), conf)
+    assert(fc.getDefaultFileSystem.getClass == afs)
+    val root = Files.createTempDirectory("localfs-fc")
+    val dir = new Path(root.resolve("d/e").toUri)
+    fc.mkdir(dir, FsPermission.getDirDefault, true)
+    for (v <- Seq("1", "2")) {
+      val tmp = new Path(dir, s".$v.tmp")
+      val out = fc.create(tmp, EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE))
+      try out.write(s"v$v\n".getBytes("UTF-8")) finally out.close()
+      fc.rename(tmp, new Path(dir, "f.txt"), Options.Rename.OVERWRITE)
+    }
+    assert(new String(Files.readAllBytes(root.resolve("d/e/f.txt")), "UTF-8") == "v2\n")
+    tree(root)
+  }
+
+  test("FileContext mkdir, create and rename leave the stock LocalFs's files and permission bits") {
+    for ((umask, dir, file) <- Seq(("022", "0755", "0644"), ("077", "0700", "0600"))) {
+      val stock = fileContextWrite(classOf[LocalFs], umask)
+      assert(stock == Seq("d" -> dir, "d/e" -> dir, "d/e/.f.txt.crc" -> file, "d/e/f.txt" -> file), umask)
+      assert(fileContextWrite(classOf[NioLocalFs], umask) == stock, umask)
+    }
+  }
+
+  test("getFileLinkStatus and getLinkTarget answer as the stock RawLocalFileSystem") {
+    val root = Files.createTempDirectory("localfs-links")
+    Files.writeString(root.resolve("f"), "abc")
+    Files.createDirectory(root.resolve("d"))
+    Files.createSymbolicLink(root.resolve("l"), root.resolve("f"))
+    Files.createSymbolicLink(root.resolve("dangling"), root.resolve("gone"))
+    def answers(fs: RawLocalFileSystem, rel: String): (Boolean, Boolean, Long, Option[String], Option[String]) = {
+      // a path without a scheme: the stock readlink is given a plain file name
+      val p = new Path(root.resolve(rel).toString)
+      val st = fs.getFileLinkStatus(p)
+      val target = if (st.isSymlink) Some(fs.getLinkTarget(p).toString) else None
+      (st.isSymlink, st.isDirectory, st.getLen, Option.when(st.isSymlink)(st.getSymlink.toString), target)
+    }
+    val stock = new RawLocalFileSystem
+    val nio = new NioRawLocalFileSystem
+    Seq(stock, nio).foreach(_.initialize(new URI("file:///"), new Configuration()))
+    for (rel <- Seq("f", "d", "l", "dangling")) assert(answers(nio, rel) == answers(stock, rel), rel)
+    assert(answers(nio, "l")._1 && answers(nio, "dangling")._1)
+    intercept[java.io.IOException](nio.getLinkTarget(new Path(root.resolve("f").toString)))
+  }
+
   test("a pipeline table run starts no operating-system process") {
     import spark.implicits._
     val df = Seq((1L, "a"), (2L, null), (3L, "c")).toDF("id", "name")
@@ -75,20 +142,8 @@ class LocalFsSpec extends SparkSpec {
     // a first run loads whatever classes a table run touches, so one-time
     // initialisation cannot count against the recorded run
     assert(run() == 3L)
-    val rec = new jdk.jfr.Recording()
-    val dump = Files.createTempFile("localfs", ".jfr")
-    try {
-      rec.enable("jdk.ProcessStart")
-      rec.start()
-      assert(run() == 3L)
-      rec.stop()
-      rec.dump(dump)
-      val commands = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toList
-        .filter(_.getEventType.getName == "jdk.ProcessStart").map(_.getString("command"))
-      assert(commands.isEmpty, s"${commands.size} process starts")
-    } finally {
-      rec.close()
-      Files.deleteIfExists(dump)
-    }
+    val (rows, commands) = processStarts(run())
+    assert(rows == 3L)
+    assert(commands.isEmpty, s"${commands.size} process starts: ${commands.distinct.take(5)}")
   }
 }

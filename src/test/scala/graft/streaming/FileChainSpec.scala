@@ -65,6 +65,25 @@ class FileChainSpec extends SparkSpec {
     assert(rows(0).getString(1) == "alice" && rows(2).getString(1) == "carol")
   }
 
+  test("a warm clean -> load chain run starts no operating-system process") {
+    // checkpoint and sink metadata go through Hadoop's FileContext, whose
+    // stock file: system forks chmod per create and readlink per rename
+    def run(): Long = {
+      val root = Files.createTempDirectory("chain-procs").toString
+      val dirty = s"$root/staging"; val clean = s"$root/clean"; val tgt = s"$root/wh/users"
+      Files.createDirectories(Paths.get(dirty))
+      Files.writeString(Paths.get(s"$dirty/users.csv"), "\"1\",\"alice\"\n\"2\",\"N")
+      FileChain.cleanStage(spark, dirty, clean, s"$root/ck1")
+      FileChain.loadStage(spark, clean, schema, tgt, s"$root/ck2")
+      spark.read.parquet(tgt).count()
+    }
+    // the first run loads the classes a chain run touches
+    assert(run() == 2L)
+    val (rows, commands) = processStarts(run())
+    assert(rows == 2L)
+    assert(commands.isEmpty, s"${commands.size} process starts: ${commands.distinct.take(5)}")
+  }
+
   test("streaming windowed agg with watermark finalizes windows and drops late data") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.streaming.Trigger
