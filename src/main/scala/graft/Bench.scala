@@ -221,10 +221,9 @@ object Bench {
       case Nil => Registry.all
       case hs  => hs
     }
-    // Warm the session (JVM/codegen/FileSourceStrategy) outside the timings.
-    // Best-effort: a missing dir must still produce the JSON error report.
-    try spark.read.parquet(s"$sfDir/region.parquet").count()
-    catch { case _: Throwable => () }
+    // Warm the session outside the timings. Best-effort: a missing dir
+    // must still produce the JSON error report.
+    Timing.warm(spark, sfDir)
     // Warm the io probe's page cache too: a cold first read is 10×+ a
     // cached one on a quiet box and would read as contention.
     try probeIo(sfDir) catch { case _: Throwable => () }
@@ -298,12 +297,12 @@ object Bench {
       try {
         val dir = graft.core.Tmp.dir("graft_bench_split")
         graft.core.Tables.all.foreach { t =>
-          spark.read.parquet(s"$sfDir/$t.parquet")
+          graft.core.Tables(spark, sfDir, t)
             .repartition(SplitFiles)
             .write.mode("overwrite").parquet(s"$dir/$t.parquet")
         }
         graft.core.Tables.all.foreach { t =>
-          splitRows(t) = spark.read.parquet(s"$dir/$t.parquet").count()
+          splitRows(t) = graft.core.Tables(spark, dir, t).count()
         }
         Some(dir)
       } catch { case e: Throwable => errors("__split_setup__") = errMsg(e); None }

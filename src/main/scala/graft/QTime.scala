@@ -8,7 +8,8 @@ package graft
   * back to back, so JIT/GC drift hits both arms equally, and one line
   * per arm is printed. Every line ends with `compiles=`, the number of
   * classes each rep compiled through Janino (a rep that reuses Spark's
-  * codegen cache reads 0).
+  * codegen cache reads 0), and `jobs=`, the Spark jobs each rep started
+  * ([[Timing.jobsOf]]; under AQE it varies run to run, so read its min).
   *
   * Usage: runMain graft.QTime <sfDir> <reps> [--ab <confKey>] <name...>
   */
@@ -22,21 +23,22 @@ object QTime {
     }
     val spark = Sessions.build("graft-qtime")
     Timing.warm(spark, sfDir)
-    def line(tag: String, reps: Seq[(Double, Long)]): String = {
+    def line(tag: String, reps: Seq[(Double, Long, Int)]): String = {
       val ts = reps.map(_._1)
-      s"$tag ${ts.map(Timing.fmt).mkString(" ")}  min=${Timing.fmt(ts.min)} compiles=${reps.map(_._2).mkString(",")}"
+      s"$tag ${ts.map(Timing.fmt).mkString(" ")}  min=${Timing.fmt(ts.min)}" +
+        s" compiles=${reps.map(_._2).mkString(",")} jobs=${reps.map(_._3).mkString(",")}"
     }
     names.foreach { n =>
-      def time(): (Double, Long) = {
+      def time(): (Double, Long, Int) = {
         val c0 = Timing.compiles
-        val s = Timing.timeQuery(spark, n, sfDir)
-        (s, Timing.compiles - c0)
+        val (s, jobs) = Timing.jobsOf(spark)(Timing.timeQuery(spark, n, sfDir))
+        (s, Timing.compiles - c0, jobs.size)
       }
       abKey match {
         case None =>
           println(line(s"QTIME ${n.padTo(24, ' ')}", (1 to reps).map(_ => time())))
         case Some(key) =>
-          def arm(v: String): (Double, Long) = { spark.conf.set(key, v); time() }
+          def arm(v: String): (Double, Long, Int) = { spark.conf.set(key, v); time() }
           arm("true"); arm("false") // warm both arms
           val ab = (1 to reps).map(_ => (arm("true"), arm("false")))
           println(line(s"AB ${n.padTo(24, ' ')} $key=true ", ab.map(_._1)))

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
+
 /** Scale probes for the iterative-graph and similarity families. Each
   * tier replicates fixture tables `mult`× into multi-file parquet under
   * `java.io.tmpdir` and times one family on the base and the grown
@@ -74,7 +76,7 @@ object Stress {
     // box clobber each other's replicated corpus mid-measure
     val user = sys.props.getOrElse("user.name", "anon").replaceAll("[^A-Za-z0-9._-]", "_")
     val out = s"${System.getProperty("java.io.tmpdir")}/graft-stress-graph-$user"
-    val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val li0 = Tables(spark, sfDir, "lineitem")
       .select(col("l_orderkey"), col("l_partkey"))
     replicate(spark, li0, "l_orderkey", mult)
       .withColumn(
@@ -402,7 +404,7 @@ object Stress {
     // Rotation arity caps the tier at mult <= 26.
     require(mult <= 26, s"simfamily docs leg needs distinct rotations: mult $mult > 26")
     val alpha = "abcdefghijklmnopqrstuvwxyz"
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
+    val docs = Tables(spark, sfDir, "documents").select("doc_id", "text")
     (0 until mult)
       .map { rep =>
         val rot = alpha.drop(rep) + alpha.take(rep)
@@ -412,16 +414,16 @@ object Stress {
       }
       .reduce(_ unionByName _)
       .repartition(32).write.mode("overwrite").parquet(s"$out/documents.parquet")
-    val nDocs = spark.read.parquet(s"$out/documents.parquet").count()
+    val nDocs = Tables(spark, out, "documents").count()
     def mh(): Double = time {
       ext.Dedup.minhashPairs(
-        spark.read.parquet(s"$out/documents.parquet"), "doc_id", "text")
+        Tables(spark, out, "documents"), "doc_id", "text")
         .write.format("noop").mode("overwrite").save()
     }
     mh()
     val mhSec = Seq(mh(), mh()).min
     val mhPairs = ext.Dedup.minhashPairs(
-      spark.read.parquet(s"$out/documents.parquet"), "doc_id", "text").count()
+      Tables(spark, out, "documents"), "doc_id", "text").count()
 
     // ---- IVF-blocked kNN graph at the REGISTERED adaptive-k policy ----
     // k = cellCountScaled(n) on both the base corpus and the replica-
@@ -433,7 +435,7 @@ object Stress {
     // (48k vectors → k=78), so the broadcast-join assignment path runs
     // inside the measured build, not only in spec.
     val multE = math.min(mult, 24)
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").select("vec_id", "embedding")
+    val emb = Tables(spark, sfDir, "embeddings").select("vec_id", "embedding")
     spark.range(multE).withColumnRenamed("id", "rep")
       .crossJoin(emb)
       .select(
@@ -441,7 +443,7 @@ object Stress {
         expr("transform(embedding, (x, i) -> CAST(x + 0.1 * sin(rep * (i + 1)) AS FLOAT))")
           .as("embedding"))
       .repartition(32).write.mode("overwrite").parquet(s"$out/embeddings.parquet")
-    val embBig = spark.read.parquet(s"$out/embeddings.parquet")
+    val embBig = Tables(spark, out, "embeddings")
     val nBase = emb.count()
     val kBase = ext.Ivf.cellCountScaled(nBase)
     val cellsBase = ext.Ivf
@@ -513,7 +515,7 @@ object Stress {
     val autoFracShrinks = sfrMA < sfrB / 2.0
 
     // ---- triangle counting on disjoint replicated basket graphs ----
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val li = Tables(spark, sfDir, "lineitem")
       .select(col("l_orderkey"), col("l_partkey"))
     spark.range(mult).withColumnRenamed("id", "rep")
       .crossJoin(li)
@@ -521,14 +523,14 @@ object Stress {
         (col("l_orderkey") + col("rep") * 100000000L).as("l_orderkey"),
         (col("l_partkey") + col("rep") * 100000000L).as("l_partkey"))
       .repartition(32).write.mode("overwrite").parquet(s"$out/lineitem.parquet")
-    val nLi = spark.read.parquet(s"$out/lineitem.parquet").count()
+    val nLi = Tables(spark, out, "lineitem").count()
     def tri(): Double = time {
       Registry.byName("q_triangle_count").run(spark, out)
         .write.format("noop").mode("overwrite").save()
     }
     tri()
     val triSec = Seq(tri(), tri()).min
-    val liProj = spark.read.parquet(s"$out/lineitem.parquet")
+    val liProj = Tables(spark, out, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
     val nEdges = liProj.as("x")
       .join(liProj.as("y"), col("x.ok") === col("y.ok") && col("x.pk") < col("y.pk"))

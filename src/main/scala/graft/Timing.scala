@@ -5,13 +5,14 @@ import org.apache.spark.sql.SparkSession
 /** Shared measurement harness: one definition of "run a registered
   * query end-to-end" (noop sink — materializes every column without
   * collecting) for QTime's plain and `--ab` modes, so the two can never
-  * measure differently, plus locale-safe number formatting.
+  * measure differently, the compile and job counters QTime and the
+  * specs read, plus locale-safe number formatting.
   */
 object Timing {
 
   /** Warm the session (JVM/codegen/FileSourceStrategy) outside timings. */
   def warm(spark: SparkSession, sfDir: String): Unit =
-    try spark.read.parquet(s"$sfDir/region.parquet").count()
+    try graft.core.Tables(spark, sfDir, "region").count()
     catch { case _: Throwable => () }
 
   /** One end-to-end run of a registered query; returns seconds. */
@@ -26,6 +27,35 @@ object Timing {
     * cache misses, driver and task threads alike.
     */
   def compiles: Long = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Run `body` in a fresh job group; returns its result and the
+    * properties of every Spark job it started (session SQL confs are
+    * propagated into them, so they show the conf each job ran under).
+    * Under AQE a body that runs actions starts a varying number of jobs
+    * on identical input, so such a count is read as min-of-N, like a
+    * timing.
+    */
+  def jobsOf[T](spark: SparkSession)(body: => T): (T, Seq[java.util.Properties]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val props = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group).foreach(props.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val out =
+      try {
+        sc.setJobGroup(group, "job count")
+        try body
+        finally sc.clearJobGroup()
+      } finally {
+        org.apache.spark.sql.GraftShim.drainListenerBus(spark)
+        sc.removeSparkListener(listener)
+      }
+    (out, props.toArray(Array.empty[java.util.Properties]).toSeq)
+  }
 
   def fmt(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
 
