@@ -48,7 +48,6 @@ object Sessions {
       // earlier rounds alive). Must be a SparkConf at context build.
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
       .config("spark.sql.codegen.cache.maxEntries", "2048")

@@ -66,6 +66,17 @@ object Ckpt {
     * [[DirKey]]'s directory when configured, `localCheckpoint(true)`
     * otherwise. Both are EAGER — callers count on the materialization
     * barrier (per-round driver decisions read counts off the result).
+    *
+    * The result keeps `df`'s hash partitioning: a relation built through
+    * `repartition(n, col("k"))` comes back as a scan that reports
+    * `HashPartitioning(k, n)`, so a later join or aggregate on `k` reads
+    * it in place with no exchange. Spark's own checkpoint drops it under
+    * AQE, because it reads the partitioning off the adaptive wrapper
+    * (`UnknownPartitioning(0)`) instead of the final plan; both paths
+    * here restate it from the final plan (`GraftShim.dropStats`). Only
+    * an exact `HashPartitioning` is kept: an AQE-coalesced or skew-split
+    * read, a range partitioning or a partition-count mismatch leaves the
+    * scan at `UnknownPartitioning`, so no false claim is made.
     */
   def truncate(df: DataFrame): DataFrame = {
     val cp = df.sparkSession.conf.getOption(DirKey).filter(_.nonEmpty) match {
@@ -97,8 +108,9 @@ object Ckpt {
     // rounds otherwise CUBE the sizeInBytes estimate per round across
     // checkpoint boundaries, and Catalyst's BigInt stats arithmetic
     // becomes the bottleneck (a measured 28-minute planning hang at
-    // ~100 accumulated rounds — see GraftShim.dropStats)
-    org.apache.spark.sql.GraftShim.dropStats(cp)
+    // ~100 accumulated rounds — see GraftShim.dropStats); keep the
+    // final plan's hash partitioning, which the checkpoint lost
+    org.apache.spark.sql.GraftShim.dropStats(cp, df)
   }
 
   /** Eager truncation that ALSO returns aggregate metrics computed

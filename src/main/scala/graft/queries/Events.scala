@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 import graft.Q
 import graft.core.{Agg, Tables}
@@ -18,20 +17,13 @@ import graft.core.{Agg, Tables}
   */
 object Events {
 
-  /** events.ts is written as parquet TIMESTAMP(NANOS); Spark's TimestampType
-    * is microseconds. Depending on reader config the column surfaces as a
-    * nanosecond long or a timestamp — normalize to TimestampType (µs,
-    * truncating), which is also what DuckDB yields when casting
-    * TIMESTAMP_NS → TIMESTAMP.
+  /** The `events` table with `ts` as a session-zone `TimestampType`.
+    * events.parquet stores `ts` as TIMESTAMP(MICROS, isAdjustedToUTC =
+    * false), which Spark reads as `TimestampNTZType`; the cast matches
+    * DuckDB's `TIMESTAMP` on the oracle side.
     */
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = Tables(s, d, "events")
-    raw.schema("ts").dataType match {
-      case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _        => raw.withColumn("ts", col("ts").cast("timestamp"))
-    }
-  }
+  def events(s: SparkSession, d: String): DataFrame =
+    Tables(s, d, "events").withColumn("ts", col("ts").cast("timestamp"))
 
   /** Window constants shared by the batch queries and their streaming
     * twins ([[graft.streaming.SessionStream]]) — one source of truth so

@@ -981,7 +981,13 @@ object Graph {
     * labelProp / BFS / SSSP — every round joins the edges on src) bakes
     * hash(src) into the checkpointed LogicalRDD, so each round's
     * edges-side join exchange disappears — one build-time shuffle buys
-    * rounds-many join legs (guide §2.4's "share one exchange").
+    * rounds-many join legs (guide §2.4's "share one exchange"). Under
+    * AQE this needs two things: the repartition names its partition
+    * count (the session's `spark.sql.shuffle.partitions`), because AQE
+    * coalesces a count-less one (to 1 partition at sf0.01) and a
+    * coalesced read is not a hash partitioning; and
+    * [[graft.core.Ckpt.truncate]] restates `HashPartitioning(src, n)`
+    * on the checkpoint, which Spark's own checkpoint drops under AQE.
     * ccStar/kCore callers leave it false: star contraction immediately
     * re-canonicalizes to (u, v) and the peel joins broadcast its tiny
     * survivor sets, so there the extra exchange is pure cost (measured
@@ -1012,7 +1018,7 @@ object Graph {
             "transform(filter(ps, y -> y != x), " +
             "y -> named_struct('src', x, 'dst', y))))")).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst"))
-        .repartition(col("src"))
+        .repartition(li.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, col("src"))
         .dropDuplicates("src", "dst")
         .truncateLineage()
     } else {

@@ -1,6 +1,9 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, AttributeSet}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, PartitioningCollection}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Access shim for graft's custom logical operators: `Dataset.ofRows` is
   * `private[sql]`, and surfacing a hand-built [[LogicalPlan]] (e.g.
@@ -34,7 +37,10 @@ object GraftShim {
     spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
 
   /** Rebuild a checkpointed DataFrame's [[execution.LogicalRDD]] WITHOUT
-    * its origin statistics. `Dataset.localCheckpoint` deliberately
+    * its origin statistics, and WITH the hash partitioning `source` (the
+    * Dataset that was checkpointed) produced.
+    *
+    * Stats: `Dataset.localCheckpoint` deliberately
     * carries the optimized source plan's stats into the LogicalRDD —
     * usually what you want, but fatal for long iterative self-join
     * loops: a k-core round's survivors⋈edges⋈survivors estimate is
@@ -45,19 +51,61 @@ object GraftShim {
     * sf0.01 (round 19). Dropping origin stats resets each round to the
     * conservative default (joins of checkpointed state stay
     * SortMergeJoin — the shape the PLANS notes already document; the
-    * hot-loop broadcasts are explicit hints, unaffected). No-op on
-    * non-LogicalRDD plans.
+    * hot-loop broadcasts are explicit hints, unaffected).
+    *
+    * Partitioning: see [[keptPartitioning]]. No-op on non-LogicalRDD
+    * plans.
     */
-  def dropStats(df: DataFrame): DataFrame = {
+  def dropStats(df: DataFrame, source: DataFrame): DataFrame = {
     val d = df.asInstanceOf[classic.Dataset[Row]]
     d.queryExecution.analyzed match {
       case l: execution.LogicalRDD =>
         classic.Dataset.ofRows(
           d.sparkSession,
           execution.LogicalRDD(
-            l.output, l.rdd, l.outputPartitioning, l.outputOrdering,
-            l.isStreaming, l.stream)(d.sparkSession, None, None))
+            l.output, l.rdd, keptPartitioning(source, l).getOrElse(l.outputPartitioning),
+            l.outputOrdering, l.isStreaming, l.stream)(d.sparkSession, None, None))
       case _ => df
+    }
+  }
+
+  /** The hash partitioning of `source`'s executed plan, restated over
+    * the checkpoint `l`'s output. Spark's checkpoint reads the partitioning
+    * off the executed plan's ROOT, which under AQE is the
+    * `AdaptiveSparkPlanExec` wrapper and reports `UnknownPartitioning(0)`;
+    * this reads the FINAL adaptive plan instead (or the plan itself
+    * without AQE). Partition i of either checkpoint RDD is partition i of
+    * that plan, so the claim is exact when all of these hold; otherwise
+    * None:
+    *   - the partitioning (first leaf of a `PartitioningCollection`, as
+    *     Spark's own checkpoint takes it) is exactly a `HashPartitioning`
+    *     — a coalesced or skew-split AQE read, a range or a single
+    *     partition is not;
+    *   - its partition count equals the checkpoint RDD's;
+    *   - its expressions reference only the plan's output columns, which
+    *     map by position onto `l`'s output.
+    */
+  private def keptPartitioning(
+      source: DataFrame, l: execution.LogicalRDD): Option[HashPartitioning] = {
+    val plan = source.asInstanceOf[classic.Dataset[Row]].queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => Some(a).filter(_.isFinalPlan).map(_.executedPlan)
+      case p => Some(p)
+    }
+    @scala.annotation.tailrec
+    def firstLeaf(p: Partitioning): Partitioning = p match {
+      case c: PartitioningCollection => firstLeaf(c.partitionings.head)
+      case other => other
+    }
+    plan.flatMap { p =>
+      firstLeaf(p.outputPartitioning) match {
+        case h: HashPartitioning
+            if h.numPartitions == l.rdd.getNumPartitions &&
+              p.output.size == l.output.size &&
+              h.references.subsetOf(AttributeSet(p.output)) =>
+          val byPosition = AttributeMap(p.output.zip(l.output))
+          Some(h.transform { case a: Attribute => byPosition(a) }.asInstanceOf[HashPartitioning])
+        case _ => None
+      }
     }
   }
 }

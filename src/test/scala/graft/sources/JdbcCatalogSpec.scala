@@ -43,16 +43,16 @@ class JdbcCatalogSpec extends SparkSpec {
     // shapes over a fixture carrying MySQL's byte-for-byte vocabulary in
     // both columns, then pins what each mode produces for every SURVEY
     // §1.2 quirk — each map fed its dialect-correct string.
-    val murl = JdbcCatalog.seedMySqlShapeDb(
+    val murl = JdbcFixtures.seedMySqlShapeDb(
       java.nio.file.Files.createTempDirectory("derby-mysql").toString + "/db")
     val colsData = JdbcCatalog.introspectColumnsSql(
-      spark, murl, JdbcCatalog.mySqlColumnsQuery("typed_tbl"))
+      spark, murl, JdbcFixtures.mySqlColumnsQuery("typed_tbl"))
     val colsFull = JdbcCatalog.introspectColumnsSql(
-      spark, murl, JdbcCatalog.mySqlColumnsQueryFull("typed_tbl"))
+      spark, murl, JdbcFixtures.mySqlColumnsQueryFull("typed_tbl"))
     assert(colsData.map(_.name) ==
-      JdbcCatalog.mySqlFixtureColumns.map(_._1), "ordinal order lost")
-    assert(colsData.map(_.mysqlType) == JdbcCatalog.mySqlFixtureColumns.map(_._2))
-    assert(colsFull.map(_.mysqlType) == JdbcCatalog.mySqlFixtureColumns.map(_._3))
+      JdbcFixtures.mySqlFixtureColumns.map(_._1), "ordinal order lost")
+    assert(colsData.map(_.mysqlType) == JdbcFixtures.mySqlFixtureColumns.map(_._2))
+    assert(colsFull.map(_.mysqlType) == JdbcFixtures.mySqlFixtureColumns.map(_._3))
 
     val compat =
       SchemaDoc.fromColumns(colsData, compat = true).map(f => f.name -> f.tpe.name).toMap
@@ -126,7 +126,7 @@ class JdbcCatalogSpec extends SparkSpec {
   // --- credential indirection (reference get_secret.py shape) ---
 
   private lazy val securePw = "s3cret-Pw!42"
-  private lazy val secureUrl = JdbcCatalog.seedSecureDb(
+  private lazy val secureUrl = JdbcFixtures.seedSecureDb(
     java.nio.file.Files.createTempDirectory("derbysec").toString + "/db",
     user = "appuser",
     password = new Secret(securePw))

@@ -40,8 +40,8 @@ class SessionStreamSpec extends SparkSpec {
       val dir = sf()
       val root = Files.createTempDirectory("session-stream").toString
       val in = s"$root/in"; val out = s"$root/out"; val ck = s"$root/ck"
-      // normalized µs timestamps (events.parquet stores TIMESTAMP(NANOS) —
-      // never readStream it bare); thin to the aggregate's columns
+      // session-zone timestamps, as the batch query reads them; thin to
+      // the aggregate's columns
       val ev = graft.queries.Events.events(spark, dir)
         .select(col("user_id"), col("ts"), col("value"))
       val (tMin, tMax) = ev.agg(min(col("ts")), max(col("ts")))
