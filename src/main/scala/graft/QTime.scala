@@ -3,7 +3,11 @@ package graft
 /** Ad-hoc single-query timer: runs named registered queries end-to-end
   * through the shared [[Timing]] harness N times each and prints per-run
   * seconds — for comparing plan variants without editing the headline
-  * set. With `--ab <confKey>` it A/Bs a boolean session conf instead:
+  * set. Every distinct name runs once untimed before the first timed
+  * rep, so the first names in the list do not pay the JVM's JIT and
+  * codegen warm-up inside their timed reps (a smaller position effect
+  * remains: compare runs over the same name list).
+  * With `--ab <confKey>` it A/Bs a boolean session conf instead:
   * both arms are warmed, then each rep runs `key=true` and `key=false`
   * back to back, so JIT/GC drift hits both arms equally, and one line
   * per arm is printed. Every line ends with `compiles=`, the number of
@@ -28,6 +32,7 @@ object QTime {
       s"$tag ${ts.map(Timing.fmt).mkString(" ")}  min=${Timing.fmt(ts.min)}" +
         s" compiles=${reps.map(_._2).mkString(",")} jobs=${reps.map(_._3).mkString(",")}"
     }
+    if (abKey.isEmpty) names.distinct.foreach(Timing.timeQuery(spark, _, sfDir))
     names.foreach { n =>
       def time(): (Double, Long, Int) = {
         val c0 = Timing.compiles

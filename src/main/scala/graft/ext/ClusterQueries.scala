@@ -233,8 +233,7 @@ object ClusterQueries {
           }
           .reduce(_ unionByName _)
         // 4-row global window + 1-row broadcast scalar: presentation-scale
-        inertias
-          .crossJoin(broadcast(emb.agg(count(lit(1)).as("n_vecs"))))
+        Gate.withCounts(inertias, "n_vecs" -> emb)
           .withColumn(
             "prev",
             // trainer-trace frame: Updates+1 rows, presentation-scale.
@@ -268,8 +267,7 @@ object ClusterQueries {
           .zipWithIndex
           .map { case (i, t) => (t, i) }
           .toDF("iter", "inertia_fp")
-        inertias
-          .crossJoin(broadcast(emb.agg(count(lit(1)).as("n_vecs"))))
+        Gate.withCounts(inertias, "n_vecs" -> emb)
           .withColumn(
             "prev",
             // trainer-trace frame: Updates+1 rows, presentation-scale.

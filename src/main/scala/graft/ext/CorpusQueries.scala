@@ -413,17 +413,15 @@ object CorpusQueries {
         // at 100 TB it is exactly the join the bloom path avoids
         val exactPairs = train.join(broadcast(evalGrams), Seq("gram"))
         val verified = candidates.join(broadcast(evalGrams), Seq("gram"))
-        val nTrain = train.agg(count(lit(1)).as("n_train_grams"))
         val nExactDocs = exactPairs.select(col("doc_id")).distinct()
           .agg(count(lit(1)).as("n_contaminated_docs"))
-        val nExactPairs = exactPairs.agg(count(lit(1)).as("n_exact_pairs"))
-        val nVerified = verified.agg(count(lit(1)).as("n_verified_pairs"))
-        val nCand = candidates.agg(count(lit(1)).as("n_candidates"))
-        nExactDocs
-          .crossJoin(broadcast(nExactPairs))
-          .crossJoin(broadcast(nVerified))
-          .crossJoin(broadcast(nCand))
-          .crossJoin(broadcast(nTrain))
+        Gate
+          .withCounts(
+            nExactDocs,
+            "n_exact_pairs" -> exactPairs,
+            "n_verified_pairs" -> verified,
+            "n_candidates" -> candidates,
+            "n_train_grams" -> train)
           .select(
             col("n_contaminated_docs"),
             col("n_exact_pairs"),
@@ -466,10 +464,8 @@ object CorpusQueries {
             Seq(col("key"), col("doc_id")),
             s.sparkContext.defaultParallelism)
           .select(col("doc_id"), col("source"), col("gidx"))
-        val n = idx.agg(count(lit(1)).as("n"))
-        val anchors = idx
-          .select(col("doc_id").as("anchor_id"), col("gidx"))
-          .crossJoin(broadcast(n))
+        val anchors =
+          Gate.withCounts(idx.select(col("doc_id").as("anchor_id"), col("gidx")), "n" -> idx)
         Seq((1, 1L), (2, 7L))
           .map { case (rank, off) =>
             anchors

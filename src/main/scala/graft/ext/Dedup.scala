@@ -383,8 +383,7 @@ object Dedup {
       case None => greatest(lit(64L), ceil(col("n_docs") * lit(0.02)).cast("long"))
     }
     val scalars = broadcast(
-      dict
-        .crossJoin(broadcast(g.agg(count(lit(1)).as("n_docs"))))
+      Gate.withCounts(dict, "n_docs" -> g)
         .withColumn("cap", capCol)
         .agg(
           max(col("n_docs")).as("n_docs"),

@@ -85,13 +85,13 @@ object DedupQueries {
     * recall floor trivially, so the gate also requires
     * |found| <= 10 × |docs| (sub-quadratic candidates per doc, the scale
     * property LSH/banding exists to provide). Diverges from
-    * [[SimilarityQueries.recallFold]] deliberately: counting the found
-    * side needs a FULL OUTER join (the ANN gates don't — their approx
-    * side is structurally capped by rank <= k).
+    * [[Gate.recallFold]] deliberately: counting the found side needs a
+    * FULL OUTER join (the ANN gates don't — their approx side is
+    * structurally capped by rank <= k).
     */
   private[ext] def pairRecallGate(
-      truth: DataFrame, found: DataFrame, nDocs: DataFrame, floor: Double): DataFrame =
-    truth
+      truth: DataFrame, found: DataFrame, docs: DataFrame, floor: Double): DataFrame = {
+    val folded = truth
       .withColumn("__t", lit(true))
       .join(
         found.select(col("a_id"), col("b_id")).withColumn("__f", lit(true)),
@@ -100,12 +100,12 @@ object DedupQueries {
         coalesce(sum(col("__t").cast("long")), lit(0L)).as("n_true_pairs"),
         coalesce(sum(col("__f").cast("long")), lit(0L)).as("n_found"),
         coalesce(sum((col("__t") && col("__f")).cast("long")), lit(0L)).as("n_hit"))
-      .crossJoin(broadcast(nDocs))
+    Gate.withCounts(folded, "n_docs" -> docs)
       .select(
         col("n_true_pairs"),
-        (col("n_hit").cast("double") >= col("n_true_pairs").cast("double") * floor)
-          .as("recall_ge_floor"),
+        Gate.recallOk(col("n_hit"), col("n_true_pairs"), floor).as("recall_ge_floor"),
         (col("n_found") <= col("n_docs") * 10L).as("candidates_subquadratic"))
+  }
 
   val queries: Seq[Q] = Seq(
     Q(
@@ -255,10 +255,10 @@ object DedupQueries {
         val poolStats = parts.sets.agg(
           count(lit(1)).as("n_docs"),
           coalesce(sum(col("pooled").cast("long")), lit(0L)).as("n_pooled"))
-        poolStats
-          .crossJoin(broadcast(parts.cand.agg(count(lit(1)).as("n_cand"))))
-          .crossJoin(broadcast(parts.postings.agg(count(lit(1)).as("n_post"))))
-          .crossJoin(broadcast(parts.pairs.agg(count(lit(1)).as("n_true_pairs"))))
+        Gate
+          .withCounts(
+            poolStats,
+            "n_cand" -> parts.cand, "n_post" -> parts.postings, "n_true_pairs" -> parts.pairs)
           .crossJoin(broadcast(parts.scalars.select(col("cap"))))
           .select(
             col("n_docs"),
@@ -361,16 +361,18 @@ object DedupQueries {
             col("id").as("doc_id"), col("comp"),
             foldOf(col("comp")).as("fold"), foldOf(col("id")).as("naive_fold"))
           .localCheckpoint(true)
-        def leaked(byCol: String, as: String) =
+        def leaked(byCol: String) =
           assigned.groupBy(col("comp"))
             .agg(countDistinct(col(byCol)).as("nf"))
             .filter(col("nf") > 1)
-            .agg(count(lit(1)).as(as))
-        assigned
+        val perFold = assigned
           .groupBy(col("fold"))
           .agg(count(lit(1)).as("n_docs"), countDistinct(col("comp")).as("n_components"))
-          .crossJoin(broadcast(leaked("naive_fold", "leaked_components_naive")))
-          .crossJoin(broadcast(leaked("fold", "leaked_components_safe")))
+        Gate
+          .withCounts(
+            perFold,
+            "leaked_components_naive" -> leaked("naive_fold"),
+            "leaked_components_safe" -> leaked("fold"))
           .orderBy("fold")
       },
       Some(
@@ -415,7 +417,7 @@ object DedupQueries {
         pairRecallGate(
           truthPairs(s, d),
           Dedup.minhashPairs(Tables(s, d, "documents"), "doc_id", "text", minJaccard = MinJacServe),
-          Tables(s, d, "documents").agg(count(lit(1)).as("n_docs")),
+          Tables(s, d, "documents"),
           floor = 0.5),
       Some(truthCountSql)
     ),
@@ -429,9 +431,8 @@ object DedupQueries {
       // This is the bench headliner for the minhash family (round 8+).
       (s, d) => {
         val docs = Tables(s, d, "documents")
-        Dedup.minhashPairs(docs, "doc_id", "text", minJaccard = MinJacServe)
-          .agg(count(lit(1)).as("n_found"))
-          .crossJoin(broadcast(docs.agg(count(lit(1)).as("n_docs"))))
+        val found = Dedup.minhashPairs(docs, "doc_id", "text", minJaccard = MinJacServe)
+        Gate.withCounts(found.agg(count(lit(1)).as("n_found")), "n_docs" -> docs)
           .select(
             col("n_docs"),
             (col("n_found") <= col("n_docs") * 10L).as("candidates_subquadratic"))
@@ -501,17 +502,13 @@ object DedupQueries {
         val counts = docs.agg(
           sum((col("doc_id") % 5 === 0).cast("long")).as("n_delta"),
           sum((col("doc_id") % 5 =!= 0).cast("long")).as("n_existing"))
-        val gate =
-          pairRecallGate(truthDelta, incr, docs.agg(count(lit(1)).as("n_docs")), floor = 0.5)
-        val nIncr = incr.agg(count(lit(1)).as("n_incr"))
-        val nFull = fullDelta.agg(count(lit(1)).as("n_full"))
-        val nCommon =
-          incr.join(fullDelta, Seq("a_id", "b_id")).agg(count(lit(1)).as("n_common"))
-        counts
-          .crossJoin(broadcast(gate))
-          .crossJoin(broadcast(nIncr))
-          .crossJoin(broadcast(nFull))
-          .crossJoin(broadcast(nCommon))
+        val gate = pairRecallGate(truthDelta, incr, docs, floor = 0.5)
+        Gate
+          .withCounts(
+            counts.crossJoin(broadcast(gate)),
+            "n_incr" -> incr,
+            "n_full" -> fullDelta,
+            "n_common" -> incr.join(fullDelta, Seq("a_id", "b_id")))
           .select(
             col("n_delta"), col("n_existing"), col("n_true_pairs"),
             col("recall_ge_floor"), col("candidates_subquadratic"),
@@ -568,13 +565,10 @@ object DedupQueries {
           .select(col("lang"), explode(Dedup.shingles(5)).as("s"))
           .distinct()
         val enSet = sh.filter(col("lang") === "en").select(col("s"))
-        val enSize = enSet.agg(count(lit(1)).as("en_n"))
         val sizes = sh.groupBy(col("lang")).agg(count(lit(1)).as("n"))
         val inter = sh.join(enSet, Seq("s"), "left_semi")
           .groupBy(col("lang")).agg(count(lit(1)).as("ix"))
-        val exact = sizes
-          .join(inter, Seq("lang"), "left")
-          .crossJoin(broadcast(enSize))
+        val exact = Gate.withCounts(sizes.join(inter, Seq("lang"), "left"), "en_n" -> enSet)
           .select(
             col("lang"),
             (coalesce(col("ix"), lit(0L)).cast("double") /
@@ -634,10 +628,7 @@ object DedupQueries {
           .select(col("a_id"), col("b_id"), expr("bit_count(a_fp ^ b_fp)").as("hamming"))
           .distinct()
           .filter(col("hamming") <= 8)
-        pairRecallGate(
-          truthPairs(s, d), found,
-          Tables(s, d, "documents").agg(count(lit(1)).as("n_docs")),
-          floor = 0.5)
+        pairRecallGate(truthPairs(s, d), found, Tables(s, d, "documents"), floor = 0.5)
       },
       Some(truthCountSql)
     ),

@@ -217,18 +217,14 @@ object EmbedQueries {
         val (served, pool) = binaryIvfServed(
           s, emb, col("vec_id") < 10, coarse, nprobe = np)
         val q = emb.filter(col("vec_id") < 10)
-        SimilarityQueries
-          .recallGate(
-            Similarity.bruteForceTopK(q, emb, 3),
-            served.select(col("q_id"), col("n_id")), floor = 0.5)
-          .crossJoin(broadcast(emb.agg(count(lit(1)).as("n_corpus"))))
-          .crossJoin(broadcast(pool.agg(count(lit(1)).as("__n_pool"))))
-          .crossJoin(broadcast(served.agg(count(lit(1)).as("__n_served"))))
+        val recall = Gate.recallGate(
+          Similarity.bruteForceTopK(q, emb, 3),
+          served.select(col("q_id"), col("n_id")), floor = 0.5)
+        Gate.withCounts(recall, "n_corpus" -> emb, "__n_pool" -> pool, "__n_served" -> served)
           .select(
             col("n_queries"),
             col("recall_ge_floor"),
-            (col("__n_pool").cast("double") <=
-              lit(frac) * col("n_queries").cast("double") * col("n_corpus").cast("double"))
+            Gate.ceiling(col("__n_pool"), frac, col("n_queries"), col("n_corpus"))
               .as("cand_sub_quadratic"),
             (col("__n_served") === col("n_queries") * 3).as("full_serving"))
       },
@@ -336,7 +332,7 @@ object EmbedQueries {
           .select(col("q_id"), col("n_id"), d2.as("d2"))
           .withColumn("rank", row_number().over(w))
           .filter(col("rank") <= 10)
-        SimilarityQueries.recallGate(
+        Gate.recallGate(
           exact,
           approx.select(col("q_id"), col("vec_id").as("n_id")),
           floor = 0.5)
@@ -392,25 +388,15 @@ object EmbedQueries {
           .select(col("q_id"), col("n_id"), d2.as("d2"))
           .withColumn("rank", row_number().over(w))
           .filter(col("rank") <= 10)
-        exact
-          .select(col("q_id"), col("n_id"))
-          .join(
-            approx.select(col("q_id"), col("vec_id").as("n_id"))
-              .withColumn("__hit", lit(true)),
-            Seq("q_id", "n_id"), "left")
-          .agg(
-            countDistinct(col("q_id")).as("n_queries"),
-            count(lit(1)).as("__n_truth"),
-            coalesce(sum(col("__hit").cast("long")), lit(0L)).as("__n_hit"))
-          .crossJoin(broadcast(cand.agg(count(lit(1)).as("__n_cand"))))
-          .crossJoin(broadcast(emb.agg(count(lit(1)).as("__n_docs"))))
+        val recall = Gate.recallGate(
+          exact, approx.select(col("q_id"), col("vec_id").as("n_id")), floor = 0.5)
+        Gate.withCounts(recall, "__n_cand" -> cand, "__n_docs" -> emb)
           .select(
             col("n_queries"),
-            (col("__n_hit").cast("double") >= col("__n_truth").cast("double") * 0.5)
-              .as("recall_ge_floor"),
-            (col("__n_cand").cast("double") <=
-              lit(Ivf.poolCeilingFrac(coarse.size, np)) *
-                col("n_queries").cast("double") * col("__n_docs").cast("double"))
+            col("recall_ge_floor"),
+            Gate.ceiling(
+              col("__n_cand"), Ivf.poolCeilingFrac(coarse.size, np),
+              col("n_queries"), col("__n_docs"))
               .as("candidates_sublinear"))
       },
       Some(
@@ -466,24 +452,15 @@ object EmbedQueries {
           .select(col("q_id"), col("n_id"), d2.as("d2"))
           .withColumn("rank", row_number().over(w))
           .filter(col("rank") <= 10)
-          .select(col("q_id"), col("n_id"))
-        exact
-          .join(
-            topRes.select(col("q_id"), col("vec_id").as("n_id")).withColumn("__hit", lit(true)),
-            Seq("q_id", "n_id"), "left")
-          .agg(
-            countDistinct(col("q_id")).as("n_queries"),
-            count(lit(1)).as("__n_truth"),
-            coalesce(sum(col("__hit").cast("long")), lit(0L)).as("__n_hit"))
-          .crossJoin(broadcast(candRes.agg(count(lit(1)).as("__n_cand"))))
-          .crossJoin(broadcast(emb.agg(count(lit(1)).as("__n_docs"))))
+        val recall = Gate.recallGate(
+          exact, topRes.select(col("q_id"), col("vec_id").as("n_id")), floor = 0.5)
+        Gate.withCounts(recall, "__n_cand" -> candRes, "__n_docs" -> emb)
           .select(
             col("n_queries"),
-            (col("__n_hit").cast("double") >= col("__n_truth").cast("double") * 0.5)
-              .as("recall_ge_floor"),
-            (col("__n_cand").cast("double") <=
-              lit(Ivf.poolCeilingFrac(coarse.size, npRes)) *
-                col("n_queries").cast("double") * col("__n_docs").cast("double"))
+            col("recall_ge_floor"),
+            Gate.ceiling(
+              col("__n_cand"), Ivf.poolCeilingFrac(coarse.size, npRes),
+              col("n_queries"), col("__n_docs"))
               .as("candidates_sublinear"))
       },
       Some(

@@ -142,10 +142,7 @@ object MultimodalQueries {
             struct(col("doc_id").as("a_id"), (col("doc_id") + 10000000L).as("b_id")),
             struct(col("doc_id").as("a_id"), (col("doc_id") + 20000000L).as("b_id")))).as("p"))
           .select(col("p.a_id"), col("p.b_id"))
-        DedupQueries.pairRecallGate(
-          truth, found,
-          hashed.agg(count(lit(1)).as("n_docs")),
-          floor = 0.8)
+        DedupQueries.pairRecallGate(truth, found, hashed, floor = 0.8)
       },
       Some(
         "SELECT CAST(2 * count(*) AS BIGINT) AS n_true_pairs, " +

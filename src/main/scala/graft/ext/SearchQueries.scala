@@ -337,17 +337,24 @@ object SearchQueries {
     // Round 22: the (doc_id, term, tf) aggregate is derived ONCE and
     // checkpointed — it feeds both the df statistics and the signature
     // build (the old shape ran the tokenize+explode+count corpus pass
-    // twice). dfRel additionally assigns each term a dense dictionary
-    // id (row_number over the term order — vocab-sized single-partition
-    // window, build-time only): the id is what the serving kernel's
-    // sorted-dot merges on (long compares; see sigArrOf).
+    // twice). dfRel additionally assigns each term a dense 1-based
+    // dictionary id in term order: the id is what the serving kernel's
+    // sorted-dot merges on (long compares; see sigArrOf). Terms are
+    // unique after the groupBy, so the range-partitioned rank
+    // (Ranks.globalIndex) gives the ids a single-partition
+    // row_number() window would, without funnelling the vocabulary
+    // through one task.
     val tf = tokens(docs)
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))
       .localCheckpoint(true)
-    val dfRel = tf
-      .groupBy(col("term")).agg(count(lit(1)).as("df"))
-      .withColumn("tid", row_number().over(Window.orderBy(col("term"))).cast("long"))
+    val dfRel = graft.core.Ranks
+      .globalIndex(
+        tf.groupBy(col("term")).agg(count(lit(1)).as("df")),
+        Seq(col("term")),
+        docs.sparkSession.sparkContext.defaultParallelism)
+      .withColumn("tid", col("gidx") + lit(1L))
+      .drop("gidx")
       .localCheckpoint(true)
     // 3 consumers hang off the signature relation (champion window,
     // probe side, and the array-signature build), each behind the
@@ -1166,21 +1173,19 @@ object SearchQueries {
             col("n_id").as("doc_id"),
             col("rank").as("drnk"))
         val fusedExact = rrfFuse(sparseTop(s, docs, 20), denseExact)
-        SimilarityQueries
-          .recallFold(
-            fusedExact.select(col("query_id"), col("doc_id")),
-            fusedIvf.select(col("query_id"), col("doc_id")),
-            Seq("query_id", "doc_id"), 0.5,
-            countDistinct(col("query_id")), "n_queries")
-          .crossJoin(broadcast(cand.agg(count(lit(1)).as("__n_cand"))))
-          .crossJoin(broadcast(emb.agg(count(lit(1)).as("__n_docs"))))
+        val recall = Gate.recallFold(
+          fusedExact.select(col("query_id"), col("doc_id")),
+          fusedIvf.select(col("query_id"), col("doc_id")),
+          Seq("query_id", "doc_id"), 0.5,
+          countDistinct(col("query_id")), "n_queries")
+        val k = Ivf.adaptiveK(s, d)
+        Gate.withCounts(recall, "__n_cand" -> cand, "__n_docs" -> emb)
           .select(
             col("n_queries"),
             col("recall_ge_floor"),
-            (col("__n_cand").cast("double") <=
-              col("__n_docs").cast("double") * col("n_queries").cast("double") *
-                Ivf.poolCeilingFrac(Ivf.adaptiveK(s, d),
-                  Ivf.adaptiveNprobe(4, Ivf.adaptiveK(s, d))))
+            Gate.ceiling(
+              col("__n_cand"), Ivf.poolCeilingFrac(k, Ivf.adaptiveNprobe(4, k)),
+              col("n_queries"), col("__n_docs"))
               .as("candidates_subquadratic"))
       },
       // The oracle re-derives ONLY n_queries (from the same queryIds set
@@ -1232,13 +1237,12 @@ object SearchQueries {
             col("n_id").as("doc_id"),
             col("rank").as("drnk"))
         val fusedExact = rrfFuse(sparseTop(s, docs, 20), denseExact)
-        SimilarityQueries
-          .recallFold(
-            fusedExact.select(col("query_id"), col("doc_id")),
-            fusedWalk.select(col("query_id"), col("doc_id")),
-            Seq("query_id", "doc_id"), 0.5,
-            countDistinct(col("query_id")), "n_queries")
-          .crossJoin(broadcast(visited.groupBy().agg(count(lit(1)).as("__n_scored"))))
+        val recall = Gate.recallFold(
+          fusedExact.select(col("query_id"), col("doc_id")),
+          fusedWalk.select(col("query_id"), col("doc_id")),
+          Seq("query_id", "doc_id"), 0.5,
+          countDistinct(col("query_id")), "n_queries")
+        Gate.withCounts(recall, "__n_scored" -> visited)
           .select(
             col("n_queries"),
             col("recall_ge_floor"),
@@ -1612,10 +1616,10 @@ object SearchQueries {
         val qids = docs.filter(col("n_id") < 3).select(col("n_id").as("q_id"))
         val exactTop5 = Similarity.topByScore(
           maxsimOverQ(qLit, vecs, qids.crossJoin(docs).filter(col("q_id") =!= col("n_id"))), "li_score", 5)
-        SimilarityQueries.recallGate(
+        val recall = Gate.recallGate(
           exactTop5.select(col("q_id"), col("n_id")),
           reranked.select(col("q_id"), col("n_id")), 0.8)
-          .crossJoin(broadcast(enc.agg(count(lit(1)).as("n_code_rows"))))
+        Gate.withCounts(recall, "n_code_rows" -> enc)
           .select(col("n_queries"), col("n_code_rows"), col("recall_ge_floor"))
       },
       Some(

@@ -12,48 +12,6 @@ import graft.core.{Agg, ArtifactStore, Tables}
   */
 object SimilarityQueries {
 
-  /** Shared recall fold: single pass over the (expensive) `truth` side —
-    * left-join the candidate set on `joinCols` (candidates must be
-    * distinct on those columns) and reduce totals + hits in ONE aggregate,
-    * so the truth subtree is evaluated once. Output is
-    * (totalName, recall_ge_floor): the total is the oracle-differential
-    * column, the boolean flips when a regression drops recall below
-    * `floor`. Used by both the ANN gates here and the dedup pair gates
-    * ([[DedupQueries]]).
-    */
-  def recallFold(
-      truth: org.apache.spark.sql.DataFrame,
-      found: org.apache.spark.sql.DataFrame,
-      joinCols: Seq[String],
-      floor: Double,
-      totalAgg: org.apache.spark.sql.Column,
-      totalName: String): org.apache.spark.sql.DataFrame =
-    truth
-      .join(
-        found.select(joinCols.map(col): _*).withColumn("__hit", lit(true)),
-        joinCols, "left")
-      .agg(
-        totalAgg.as(totalName),
-        count(lit(1)).as("__n_truth"),
-        coalesce(sum(col("__hit").cast("long")), lit(0L)).as("__n_hit"))
-      .select(
-        col(totalName),
-        (col("__n_hit").cast("double") >= col("__n_truth").cast("double") * floor)
-          .as("recall_ge_floor"))
-
-  /** Reduce an approximate top-k result to its driver-gateable invariant:
-    * overall recall vs the exact top-k (computed in-plan) must clear
-    * `floor`. Output is (n_queries, recall_ge_floor) — n_queries is a real
-    * differential (the oracle derives it from the embeddings table). Both
-    * inputs are (q_id, rank, n_id, …)-shaped.
-    */
-  def recallGate(exact: org.apache.spark.sql.DataFrame, approx: org.apache.spark.sql.DataFrame,
-                 floor: Double): org.apache.spark.sql.DataFrame =
-    recallFold(
-      exact.select(col("q_id"), col("n_id")), approx,
-      Seq("q_id", "n_id"), floor,
-      countDistinct(col("q_id")), "n_queries")
-
   /** The navigable serving graph of q_sim_graph_routed: out-degree-8
     * kNN edges ∪ 4 deterministic long-range edges per node (the
     * NSW navigability ingredient — without them greedy descent strands
@@ -688,20 +646,13 @@ object SimilarityQueries {
           .select(col("src").as("q_id"), col("dst").as("n_id"))
         val truth = Similarity.bruteForceTopK(emb, emb, 3)
           .select(col("q_id"), col("n_id"))
-        truth
-          .join(approx.withColumn("__hit", lit(true)), Seq("q_id", "n_id"), "left")
-          .agg(
-            countDistinct(col("q_id")).as("n_nodes"),
-            count(lit(1)).as("__n_truth"),
-            coalesce(sum(col("__hit").cast("long")), lit(0L)).as("__n_hit"))
-          .crossJoin(broadcast(cand.agg(count(lit(1)).as("__n_cand"))))
-          .crossJoin(broadcast(emb.agg(count(lit(1)).as("__n_docs"))))
+        val recall = Gate.recallFold(
+          truth, approx, Seq("q_id", "n_id"), 0.5, countDistinct(col("q_id")), "n_nodes")
+        Gate.withCounts(recall, "__n_cand" -> cand, "__n_docs" -> emb)
           .select(
             col("n_nodes"),
-            (col("__n_hit").cast("double") >= col("__n_truth").cast("double") * 0.5)
-              .as("recall_ge_floor"),
-            (col("__n_cand").cast("double") <=
-              col("__n_docs").cast("double") * col("__n_docs").cast("double") * 0.6)
+            col("recall_ge_floor"),
+            Gate.ceiling(col("__n_cand"), 0.6, col("__n_docs"), col("__n_docs"))
               .as("candidates_subquadratic"))
       },
       Some(
@@ -718,7 +669,7 @@ object SimilarityQueries {
       (s, d) => {
         val emb = Tables(s, d, "embeddings")
         val q = emb.filter(col("vec_id") < 10)
-        recallGate(
+        Gate.recallGate(
           Similarity.bruteForceTopK(q, emb, 3),
           Similarity.lshTopK(q, emb, 3),
           floor = 0.5)
@@ -744,7 +695,7 @@ object SimilarityQueries {
         val q = emb.filter(col("vec_id") < 10)
         val centroids = Ivf.trainSharedAdaptive(s, d)
         val indexed = Ivf.index(emb, centroids)
-        recallGate(
+        Gate.recallGate(
           Similarity.bruteForceTopK(q, emb, 3),
           Ivf.topK(q, indexed, centroids, k = 3,
             nprobe = Ivf.adaptiveNprobe(4, centroids.size)),
@@ -802,8 +753,9 @@ object SimilarityQueries {
         // tightens 872 → 440/query; the fixed-entry 6-hop walk is the
         // SimilaritySpec baseline row
         val (routed, visited) = hierRoutedOver(s, d, emb, q, graph)
-        recallGate(Similarity.bruteForceTopK(q, emb, 3), routed, floor = 0.4)
-          .crossJoin(broadcast(visited.groupBy().agg(count(lit(1)).as("__n_scored"))))
+        Gate.withCounts(
+          Gate.recallGate(Similarity.bruteForceTopK(q, emb, 3), routed, floor = 0.4),
+          "__n_scored" -> visited)
           .select(
             col("n_queries"),
             col("recall_ge_floor"),
@@ -856,12 +808,10 @@ object SimilarityQueries {
           .distinct()
           .localCheckpoint(true)
         val (routed, _) = graphRoutedOver(emb, emb.filter(col("vec_id") < 10), grown)
-        recallGate(
+        val recall = Gate.recallGate(
           Similarity.bruteForceTopK(emb.filter(col("vec_id") < 10), emb, 3), routed,
           floor = 0.4)
-          .crossJoin(broadcast(base.agg(count(lit(1)).as("n_base"))))
-          .crossJoin(broadcast(delta.agg(count(lit(1)).as("n_delta"))))
-          .crossJoin(broadcast(insEdges.agg(count(lit(1)).as("__n_ins"))))
+        Gate.withCounts(recall, "n_base" -> base, "n_delta" -> delta, "__n_ins" -> insEdges)
           .select(
             col("n_base"), col("n_delta"), col("n_queries"), col("recall_ge_floor"),
             // every delta node links to exactly its routed top-8 (the
@@ -908,9 +858,9 @@ object SimilarityQueries {
         val (_, visited) = hierRoutedOver(s, d, emb, q, graph)
         val servedLive = Similarity.topByScore(visited.filter(!(col("n_id") % 7 === 3)), "cos", 3)
         val live = emb.filter(!deadPred)
-        recallGate(Similarity.bruteForceTopK(q, live, 3), servedLive, floor = 0.4)
-          .crossJoin(broadcast(live.agg(count(lit(1)).as("n_live"))))
-          .crossJoin(broadcast(visited.groupBy().agg(count(lit(1)).as("__n_scored"))))
+        Gate.withCounts(
+          Gate.recallGate(Similarity.bruteForceTopK(q, live, 3), servedLive, floor = 0.4),
+          "n_live" -> live, "__n_scored" -> visited)
           .select(
             col("n_queries"), col("n_live"), col("recall_ge_floor"),
             (col("__n_scored") <= col("n_queries") * lit(ServeBound))
@@ -958,14 +908,14 @@ object SimilarityQueries {
         val wp = waypointsShared(s, d)
         val seeds = hierarchicalSeeds(wp, q)
         val (routed, visited) = hierRoutedOver(s, d, emb, q, graph)
-        recallGate(Similarity.bruteForceTopK(q, emb, 3), routed, floor = 0.4)
-          .crossJoin(broadcast(visited.groupBy().agg(count(lit(1)).as("__n_scored"))))
-          .crossJoin(broadcast(wp.agg(count(lit(1)).as("__n_wp"))))
-          .crossJoin(broadcast(
-            wp.join(emb.select(col("vec_id").as("n_id")), Seq("n_id"), "left_anti")
-              .agg(count(lit(1)).as("__n_wp_orphan"))))
-          .crossJoin(broadcast(seeds.agg(count(lit(1)).as("__n_seeds"))))
-          .crossJoin(broadcast(emb.agg(count(lit(1)).as("__n_corpus"))))
+        Gate.withCounts(
+          Gate.recallGate(Similarity.bruteForceTopK(q, emb, 3), routed, floor = 0.4),
+          "__n_scored" -> visited,
+          "__n_wp" -> wp,
+          "__n_wp_orphan" ->
+            wp.join(emb.select(col("vec_id").as("n_id")), Seq("n_id"), "left_anti"),
+          "__n_seeds" -> seeds,
+          "__n_corpus" -> emb)
           .select(
             col("n_queries"),
             col("recall_ge_floor"),
@@ -1030,11 +980,13 @@ object SimilarityQueries {
         // what that geometry pays for). Bound = 8 + 6·12·12 = 872.
         val (_, visited) = hierRoutedOver(s, d, corpus, q, graph, wp, hops = 6)
         val served = Similarity.topByScore(visited.filter(!(col("n_id") % 7 === 3)), "cos", 3)
-        recallGate(Similarity.bruteForceTopK(q, live, 3), served, floor = 0.4)
-          .crossJoin(broadcast(live.agg(count(lit(1)).as("n_live"))))
-          .crossJoin(broadcast(
-            emb.agg(sum(when(deadPred, 1L).otherwise(0L)).as("n_dead"))))
-          .crossJoin(broadcast(visited.groupBy().agg(count(lit(1)).as("__n_scored"))))
+        val withLive = Gate.withCounts(
+          Gate.recallGate(Similarity.bruteForceTopK(q, live, 3), served, floor = 0.4),
+          "n_live" -> live)
+        Gate.withCounts(
+          withLive.crossJoin(broadcast(
+            emb.agg(sum(when(deadPred, 1L).otherwise(0L)).as("n_dead")))),
+          "__n_scored" -> visited)
           .select(
             col("n_queries"), col("n_live"), col("n_dead"),
             (col("n_dead") * 8 >= col("n_live") + col("n_dead")).as("fired_at_eighth"),
@@ -1087,10 +1039,7 @@ object SimilarityQueries {
           .filter(col("cos") >= 0.3)
           .select(col("a_id"), col("b_id"))
           .distinct()
-        DedupQueries.pairRecallGate(
-          truth, found,
-          emb.agg(count(lit(1)).as("n_docs")),
-          floor = 0.5)
+        DedupQueries.pairRecallGate(truth, found, emb, floor = 0.5)
       },
       Some(
         "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings) " +
@@ -1132,8 +1081,7 @@ object SimilarityQueries {
             count(lit(1)).as("n_joined"),
             coalesce(
               sum((col("bucket") === col("i_bucket")).cast("long")), lit(0L)).as("n_same"))
-        base.agg(count(lit(1)).as("n_base"))
-          .crossJoin(broadcast(delta.agg(count(lit(1)).as("n_delta"))))
+        Gate.withCounts(base.agg(count(lit(1)).as("n_base")), "n_delta" -> delta)
           .crossJoin(broadcast(matches))
           .crossJoin(broadcast(Ivf.globalDriftCos(emb, col("vec_id") % 10 === 0)))
           .select(
@@ -1391,17 +1339,14 @@ object SimilarityQueries {
           .select(col("q_id"), col("n_id"))
         val served = hardNegChain(emb, col("vec_id") < 20, Some(pairs))
         val exact = hardNegChain(emb, col("vec_id") < 20, None)
-        recallGate(exact, served.select(col("q_id"), col("n_id")), 0.5)
+        val recall = Gate.recallGate(exact, served.select(col("q_id"), col("n_id")), 0.5)
           .withColumnRenamed("n_queries", "n_anchors")
           .withColumnRenamed("recall_ge_floor", "mined_recall_ge_floor")
-          .crossJoin(broadcast(emb.agg(count(lit(1)).as("n_corpus"))))
-          .crossJoin(broadcast(pairs.agg(count(lit(1)).as("n_pairs"))))
-          .crossJoin(broadcast(served.agg(count(lit(1)).as("n_mined"))))
+        Gate.withCounts(recall, "n_corpus" -> emb, "n_pairs" -> pairs, "n_mined" -> served)
           .select(
             col("n_anchors"),
             col("mined_recall_ge_floor"),
-            (col("n_pairs").cast("double") <=
-              lit(frac) * col("n_anchors").cast("double") * col("n_corpus").cast("double"))
+            Gate.ceiling(col("n_pairs"), frac, col("n_anchors"), col("n_corpus"))
               .as("cand_sub_quadratic"),
             (col("n_mined") === col("n_anchors") * 3).as("full_mining"))
       },
@@ -1551,16 +1496,13 @@ object SimilarityQueries {
           coarse = Some(coarse))
         val exactSel = mmrSelect(emb, col("vec_id") < 5)
         val exact20 = Similarity.bruteForceTopK(emb.filter(col("vec_id") < 5), emb, 20)
-        recallGate(exact20, pairs.select(col("q_id"), col("n_id")), 0.5)
-          .crossJoin(broadcast(emb.agg(count(lit(1)).as("n_corpus"))))
-          .crossJoin(broadcast(pairs.agg(count(lit(1)).as("n_pairs"))))
-          .crossJoin(broadcast(exactSel.agg(count(lit(1)).as("n_exact"))))
-          .crossJoin(broadcast(ivfSel.agg(count(lit(1)).as("n_ivf"))))
+        Gate.withCounts(
+          Gate.recallGate(exact20, pairs.select(col("q_id"), col("n_id")), 0.5),
+          "n_corpus" -> emb, "n_pairs" -> pairs, "n_exact" -> exactSel, "n_ivf" -> ivfSel)
           .select(
             col("n_queries"),
             col("recall_ge_floor").as("pool_recall_ge_floor"),
-            (col("n_pairs").cast("double") <=
-              lit(frac) * col("n_queries").cast("double") * col("n_corpus").cast("double"))
+            Gate.ceiling(col("n_pairs"), frac, col("n_queries"), col("n_corpus"))
               .as("cand_sub_quadratic"),
             (col("n_ivf") === col("n_exact")).as("full_selection"))
       },

@@ -185,9 +185,8 @@ object SketchQueries {
         val found = tok.stat.freqItems(Seq("token"), support = 0.01)
           .select(explode(col("token_freqItems")).as("token"))
           .withColumn("found", lit(true))
-        val total = tok.agg(count(lit(1)).as("n_tok"))
-        val heavy = tok.groupBy(col("token")).agg(count(lit(1)).as("c"))
-          .crossJoin(broadcast(total))
+        val counts = tok.groupBy(col("token")).agg(count(lit(1)).as("c"))
+        val heavy = Gate.withCounts(counts, "n_tok" -> tok)
           .filter(col("c").cast("double") > col("n_tok").cast("double") * 0.02)
         heavy
           .join(found, Seq("token"), "left")

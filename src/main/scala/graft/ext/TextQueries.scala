@@ -151,12 +151,11 @@ object TextQueries {
       // so the oracle-checked output stops at the deterministic ratio).
       (s, d) => {
         val docs = Tables(s, d, "documents")
-        val n = docs.agg(count(lit(1)).as("n"))
-        docs
+        val df = docs
           .select(explode(array_distinct(split(col("text"), " "))).as("token"))
           .groupBy(col("token"))
           .agg(count(lit(1)).as("df"))
-          .crossJoin(broadcast(n))
+        Gate.withCounts(df, "n" -> docs)
           .select(
             col("token"), col("df"), col("n"),
             (col("n").cast("double") / col("df").cast("double")).as("inv_df"))
@@ -384,14 +383,15 @@ object TextQueries {
       // TopKPerKey operator (verified in the physical plan).
       (s, d) => {
         val docs = Tables(s, d, "documents")
-        val n = docs.agg(count(lit(1)).as("n"))
         val tf = docs
           .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
           .groupBy(col("doc_id"), col("token"))
           .agg(count(lit(1)).as("tf"))
         val w = Window.partitionBy(col("doc_id")).orderBy(col("score_fp").desc, col("token"))
-        tf.withColumn("df", count(lit(1)).over(Window.partitionBy(col("token"))))
-          .crossJoin(broadcast(n))
+        Gate
+          .withCounts(
+            tf.withColumn("df", count(lit(1)).over(Window.partitionBy(col("token")))),
+            "n" -> docs)
           .select(
             col("doc_id"), col("token"),
             (col("tf") * expr("(n * 1000000) div df")).as("score_fp"))

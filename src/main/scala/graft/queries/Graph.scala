@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Q
 import graft.core.{Agg, ArtifactStore, Ckpt, Tables}
+import graft.ext.Gate
 import graft.core.Ckpt.TruncateOps
 
 /** Graph analytics beyond near-dup connected components
@@ -81,14 +82,12 @@ object Graph {
               .as("e"))
           .select(col("e.s").as("src"), col("e.t").as("dst"))
         val tri = closedTriangles(o, edgeCentric = true)
-        val edges = e.agg(count(lit(1)).as("n_edges"))
         // wedges straight from the degree table — deg(deg-1) is even, so
         // integer halving is exact in both engines
         val nodes = deg.agg(
           count(lit(1)).as("n_nodes"),
           expr("sum(deg * (deg - 1)) div 2").as("n_wedges"))
-        nodes
-          .crossJoin(broadcast(edges))
+        Gate.withCounts(nodes, "n_edges" -> e)
           .crossJoin(broadcast(tri))
           .select(
             col("n_nodes"), col("n_edges"), col("n_wedges"), col("n_triangles"),

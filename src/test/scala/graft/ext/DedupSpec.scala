@@ -161,13 +161,13 @@ class DedupSpec extends SparkSpec {
     val ids = (1L to 30L)
     val truth = Seq((1L, 2L), (3L, 4L)).toDF("a_id", "b_id")
     val allPairs = (for (a <- ids; b <- ids if a < b) yield (a, b)).toDF("a_id", "b_id")
-    val nDocs = Seq(30L).toDF("n_docs")
-    val degenerate = DedupQueries.pairRecallGate(truth, allPairs, nDocs, 0.5).collect().head
+    val docs = ids.toDF("doc_id")
+    val degenerate = DedupQueries.pairRecallGate(truth, allPairs, docs, 0.5).collect().head
     assert(degenerate.getAs[Boolean]("recall_ge_floor"))
     assert(!degenerate.getAs[Boolean]("candidates_subquadratic"),
       "all-pairs candidates were not flagged")
     // a healthy banded generator (the truth itself) passes both flags
-    val healthy = DedupQueries.pairRecallGate(truth, truth, nDocs, 0.5).collect().head
+    val healthy = DedupQueries.pairRecallGate(truth, truth, docs, 0.5).collect().head
     assert(healthy.getAs[Boolean]("recall_ge_floor") &&
       healthy.getAs[Boolean]("candidates_subquadratic"))
   }

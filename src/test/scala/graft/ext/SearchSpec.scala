@@ -76,6 +76,22 @@ class SearchSpec extends SparkSpec {
     assert(out.forall(r => fullIdx(r.getAs[String]("term")) == r.getAs[String]("postings_md5")))
   }
 
+  test("sparse index: range-ranked term ids equal the single-partition row_number form") {
+    val docs = graft.core.Tables(spark, sf(), "documents")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("term"), col("df"), col("tid")).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    val built = rows(SearchQueries.sparseIndexBuild(docs, SearchQueries.ChampionC).dfRel)
+    val windowed = rows(
+      docs.select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
+        .distinct()
+        .groupBy(col("term")).agg(count(lit(1)).as("df"))
+        .withColumn("tid", row_number().over(Window.orderBy(col("term"))).cast("long")))
+    assert(built.nonEmpty)
+    assert(built == windowed, "term ids diverged from the row_number() form")
+    assert(built.map(_._3) == (1L to built.size.toLong).toSet, "term ids are not dense from 1")
+  }
+
   test("inverted index: digest matches a driver-side recompute and tf totals conserve") {
     val dir = sf()
     val out = Registry.byName("q_inverted_index").run(spark, dir).collect()

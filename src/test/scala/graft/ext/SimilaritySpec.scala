@@ -1,5 +1,6 @@
 package graft.ext
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -171,10 +172,61 @@ class SimilaritySpec extends SparkSpec {
       .toDF("q_id", "rank", "n_id")
     val degraded = Seq((1L, 1, 9L), (1L, 2, 8L), (2L, 1, 7L), (2L, 2, 6L))
       .toDF("q_id", "rank", "n_id")
-    val good = SimilarityQueries.recallGate(exact, exact, 0.5).collect().head
+    val good = Gate.recallGate(exact, exact, 0.5).collect().head
     assert(good.getAs[Long]("n_queries") == 2L && good.getAs[Boolean]("recall_ge_floor"))
-    val bad = SimilarityQueries.recallGate(exact, degraded, 0.5).collect().head
+    val bad = Gate.recallGate(exact, degraded, 0.5).collect().head
     assert(!bad.getAs[Boolean]("recall_ge_floor"), "gate failed to flip on zero recall")
+
+    // count attaches: one row even over an empty relation, columns in
+    // argument order after the base's
+    val counted = Gate.withCounts(
+      Seq(7L).toDF("base"), "n_empty" -> exact.filter(lit(false)), "n_exact" -> exact)
+    assert(counted.columns.toSeq == Seq("base", "n_empty", "n_exact"))
+    assert(counted.collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))) ==
+      Seq((7L, 0L, 4L)))
+
+    // the candidate ceiling multiplies in doubles: 4e9·4e9 > Long.MaxValue
+    // would wrap negative (and fail every ceiling) as a long product
+    val big = spark.range(1).select(
+      Gate.ceiling(lit(1L), 0.5, lit(4000000000L), lit(4000000000L)).as("under"),
+      Gate.ceiling(lit(Long.MaxValue), 1.0, lit(4000000000L), lit(1L)).as("over"))
+      .collect().head
+    assert(big.getBoolean(0) && !big.getBoolean(1))
+
+    // the PQ gates' former inline fold and their Gate form agree on a
+    // planted input, with the exact side both unprojected (q_pq_adc_ivf)
+    // and projected (q_pq_adc_ivf_res), at recall 1, exactly the floor,
+    // and below it
+    def inline(exact: DataFrame, approx: DataFrame) =
+      exact
+        .select(col("q_id"), col("n_id"))
+        .join(
+          approx.select(col("q_id"), col("vec_id").as("n_id")).withColumn("__hit", lit(true)),
+          Seq("q_id", "n_id"), "left")
+        .agg(
+          countDistinct(col("q_id")).as("n_queries"),
+          count(lit(1)).as("__n_truth"),
+          coalesce(sum(col("__hit").cast("long")), lit(0L)).as("__n_hit"))
+        .select(
+          col("n_queries"),
+          (col("__n_hit").cast("double") >= col("__n_truth").cast("double") * 0.5)
+            .as("recall_ge_floor"))
+    def gated(exact: DataFrame, approx: DataFrame) =
+      Gate.recallGate(exact, approx.select(col("q_id"), col("vec_id").as("n_id")), floor = 0.5)
+    val exactL2 = Seq((1L, 2L, 0.1, 1), (1L, 3L, 0.2, 2), (2L, 4L, 0.1, 1), (2L, 5L, 0.3, 2))
+      .toDF("q_id", "n_id", "d2", "rank")
+    val planted = Seq(
+      Seq((1L, 2L), (1L, 3L), (2L, 4L), (2L, 5L)),
+      Seq((1L, 2L), (1L, 9L), (2L, 4L), (2L, 8L)),
+      Seq((1L, 2L), (1L, 9L), (2L, 7L), (2L, 8L)))
+    val seen = for (hits <- planted; ex <- Seq(exactL2, exactL2.select("q_id", "n_id"))) yield {
+      val approx = hits.toDF("q_id", "vec_id")
+      val a = inline(ex, approx).collect().head
+      val b = gated(ex, approx).collect().head
+      assert((a.getLong(0), a.getBoolean(1)) == (b.getLong(0), b.getBoolean(1)))
+      b.getBoolean(1)
+    }
+    assert(seen == Seq(true, true, true, true, false, false))
   }
 
   test("incremental IVF: delta assignment equals full recompute under fixed centroids") {
