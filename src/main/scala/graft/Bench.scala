@@ -244,13 +244,11 @@ object Bench {
     def drifted(t: Tier): Boolean = BenchGate.drift(minPasses(t), quietNow)
     // ONE timing body for every tier and the rescue passes, so the
     // protocol cannot drift between them.
-    def timeOne(q: Q, dir: String, into: Tier, errKey: String): Unit = {
-      val t0 = System.nanoTime()
+    def timeOne(q: Q, dir: String, into: Tier, errKey: String): Unit =
       try {
-        q.run(spark, dir).write.format("noop").mode("overwrite").save()
-        into(q.name) = into.getOrElse(q.name, Nil) :+ ((System.nanoTime() - t0) / 1e9, curPass)
+        val secs = Timing.timeQuery(spark, q.name, dir)
+        into(q.name) = into.getOrElse(q.name, Nil) :+ ((secs, curPass))
       } catch { case e: Throwable => errors(errKey) = errMsg(e) }
-    }
     /** `passes` probed passes of `qs`, then up to `maxRetry` more while
       * `retryWhile` holds; returns the retries run. A query is skipped
       * once `errors` holds its name or its tier key, keeping any valid

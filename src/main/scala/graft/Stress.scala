@@ -28,8 +28,6 @@ import graft.core.Tables
   */
 object Stress {
 
-  private def time(f: => Unit): Double = Timing.timeOf(f)
-
   /** Replicate with disjoint key ranges per replica; repartition so the
     * written parquet has many files → multi-task scans.
     */
@@ -93,24 +91,24 @@ object Stress {
     val src = b1.agg(min(col("pk"))).head().getLong(0)
     def bfs(edges: org.apache.spark.sql.DataFrame): (Double, Long) = {
       var n = 0L
-      val t = time { n = queries.Graph.bfsFrom(spark, edges, src, hops = 4).count() }
+      val t = Timing.timeOf { n = queries.Graph.bfsFrom(spark, edges, src, hops = 4).count() }
       (t, n)
     }
     def lpFull(edges: org.apache.spark.sql.DataFrame): (Double, Long) = {
       var n = 0L
-      val t = time { n = queries.Graph.labelPropFull(edges, rounds = 3).count() }
+      val t = Timing.timeOf { n = queries.Graph.labelPropFull(edges, rounds = 3).count() }
       (t, n)
     }
     def lpDelta(edges: org.apache.spark.sql.DataFrame): (Double, Long) = {
       var n = 0L
-      val t = time { n = queries.Graph.labelProp(edges, rounds = 3).count() }
+      val t = Timing.timeOf { n = queries.Graph.labelProp(edges, rounds = 3).count() }
       (t, n)
     }
     def sssp(edges: org.apache.spark.sql.DataFrame): (Double, Long) = {
       val we = edges.withColumn("w", lit(1L) + pmod(col("src") + col("dst"), lit(5L)))
         .localCheckpoint(true)
       var n = 0L
-      val t = time { n = queries.Graph.ssspFrom(spark, we, src, rounds = 4).count() }
+      val t = Timing.timeOf { n = queries.Graph.ssspFrom(spark, we, src, rounds = 4).count() }
       (t, n)
     }
     // convergence-depth measurement (round-17 verdict #4's stress half):
@@ -125,7 +123,7 @@ object Stress {
         : (Double, Int, Seq[Long]) = {
       var r = 0
       var w: Seq[Long] = Nil
-      val t = time {
+      val t = Timing.timeOf {
         val (labels, rounds, waves, _) = queries.Graph.ccConverged(nodes, edges)
         labels.write.format("noop").mode("overwrite").save()
         r = rounds; w = waves
@@ -158,7 +156,7 @@ object Stress {
         .localCheckpoint(true)
       val merged = edges.unionByName(delta).localCheckpoint(true)
       val seed = delta.select(col("src").as("pk")).distinct()
-      time {
+      Timing.timeOf {
         val (l, _, _, done) =
           queries.Graph.ccConvergedFrom(labels0, merged, seed = Some(seed))
         require(done)
@@ -182,7 +180,7 @@ object Stress {
       .repartition(32).localCheckpoint(true)
     val chainNodes = spark.range(chainN).select(col("id").as("pk"))
     var rStar = 0
-    val tStar = time {
+    val tStar = Timing.timeOf {
       val (l, rr, _) = queries.Graph.ccStar(chainNodes, chainEdges)
       l.write.format("noop").mode("overwrite").save()
       rStar = rr
@@ -415,7 +413,7 @@ object Stress {
       .reduce(_ unionByName _)
       .repartition(32).write.mode("overwrite").parquet(s"$out/documents.parquet")
     val nDocs = Tables(spark, out, "documents").count()
-    def mh(): Double = time {
+    def mh(): Double = Timing.timeOf {
       ext.Dedup.minhashPairs(
         Tables(spark, out, "documents"), "doc_id", "text")
         .write.format("noop").mode("overwrite").save()
@@ -455,7 +453,7 @@ object Stress {
     val cells = ext.Ivf
       .indexMulti(embBig, ext.Ivf.trainK(spark, embBig, k = k), r = 2)
       .localCheckpoint(true)
-    def knn(): Double = time {
+    def knn(): Double = Timing.timeOf {
       ext.Ivf.knnTopK(ext.Ivf.knnCandidates(cells), 3)
         .write.format("noop").mode("overwrite").save()
     }
@@ -487,7 +485,7 @@ object Stress {
         .count()
       val exact = ext.Similarity.bruteForceTopK(q, corpus, 3)
         .select(col("q_id"), col("n_id")).localCheckpoint(true)
-      def serve(): Double = time {
+      def serve(): Double = Timing.timeOf {
         ext.Ivf.topK(q, indexed, cents, k = 3, nprobe = nprobe)
           .write.format("noop").mode("overwrite").save()
       }
@@ -524,7 +522,7 @@ object Stress {
         (col("l_partkey") + col("rep") * 100000000L).as("l_partkey"))
       .repartition(32).write.mode("overwrite").parquet(s"$out/lineitem.parquet")
     val nLi = Tables(spark, out, "lineitem").count()
-    def tri(): Double = time {
+    def tri(): Double = Timing.timeOf {
       Registry.byName("q_triangle_count").run(spark, out)
         .write.format("noop").mode("overwrite").save()
     }

@@ -4,9 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Shared measurement harness: one definition of "run a registered
   * query end-to-end" (noop sink — materializes every column without
-  * collecting) for QTime's plain and `--ab` modes, so the two can never
-  * measure differently, the compile and job counters QTime and the
-  * specs read, plus locale-safe number formatting.
+  * collecting) for Bench's tiers and QTime's plain and `--ab` modes, so
+  * none of them can measure differently, the compile and job counters
+  * QTime and the specs read, plus locale-safe number formatting.
   */
 object Timing {
 

@@ -29,6 +29,14 @@ import org.apache.spark.sql.functions.{count, lit, when}
   * sets `graft.checkpoint.dir` (e.g. `hdfs:///jobs/x/ckpt`) and every
   * kernel round becomes re-playable. GraphSpec pins the two paths
   * label-equal on the planted chain.
+  *
+  * WHICH CHECKPOINT: state carried across kernel rounds (labels,
+  * frontiers, survivor sets) goes through [[Ckpt.truncate]]. A relation
+  * materialised inside ONE query, because that query reads it several
+  * times, keeps a raw `localCheckpoint(true)`: it keeps its origin
+  * stats, which the joins reading it ride for their broadcast decisions
+  * (`truncate` drops them), it never nests round after round, and an
+  * executor loss retries the whole query either way.
   */
 object Ckpt {
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Q
 import graft.core.Tables
+import graft.plans.TopKPerKey
 
 /** Corpus-preparation operators a large-scale training-data pipeline runs
   * between raw ingest and tokenization — round-4 widening:
@@ -145,16 +146,10 @@ object CorpusQueries {
         // pipeline of exchanges (doc,token → token → doc) — a join
         // formulation re-runs the explode on the df branch because the
         // pruned aggregate no longer canonicalizes with tf's exchange.
-        val ranked = tf
-          .withColumn("df", count(lit(1)).over(Window.partitionBy(col("token"))))
-          .withColumn(
-            "rnk",
-            row_number().over(
-              Window.partitionBy(col("doc_id"))
-                .orderBy(col("tf").desc, col("df").asc, col("token").asc)).cast("long"))
-        ranked
-          .filter(col("rnk") <= 3)
-          .select(col("doc_id"), col("rnk"), col("token"), col("tf"), col("df"))
+        TopKPerKey.topK(
+          tf.withColumn("df", count(lit(1)).over(Window.partitionBy(col("token")))),
+          Seq(col("doc_id")), Seq(col("tf").desc, col("df").asc, col("token").asc), 3, "rnk")
+          .select(col("doc_id"), col("rnk").cast("long").as("rnk"), col("token"), col("tf"), col("df"))
           .orderBy("doc_id", "rnk")
       },
       Some(
@@ -310,11 +305,9 @@ object CorpusQueries {
             col("o_orderkey"),
             lit("U").as("o_orderstatus"),
             (col("o_totalprice") + 10).as("o_totalprice"))
-        val w = Window.partitionBy(col("o_orderkey")).orderBy(col("is_src").desc)
-        source.withColumn("is_src", lit(1))
-          .unionByName(target.withColumn("is_src", lit(0)))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
+        TopKPerKey.topK(
+          source.withColumn("is_src", lit(1)).unionByName(target.withColumn("is_src", lit(0))),
+          Seq(col("o_orderkey")), Seq(col("is_src").desc), 1, "rn")
           .select(
             col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
             col("is_src").cast("long").as("from_source"))
@@ -706,10 +699,7 @@ object CorpusQueries {
               "(n_chars * 1000000) div " +
                 "(CAST(conv(substring(md5(cast(doc_id as string)), 1, 15), 16, 10) AS BIGINT) % 1000000 + 1)")
               .as("priority_fp"))
-        val w = Window.partitionBy(col("source")).orderBy(col("priority_fp").desc, col("doc_id"))
-        pri
-          .withColumn("rnk", row_number().over(w))
-          .filter(col("rnk") <= 40)
+        TopKPerKey.topK(pri, Seq(col("source")), Seq(col("priority_fp").desc, col("doc_id")), 40, "rnk")
           .select(col("source"), col("rnk"), col("doc_id"), col("priority_fp"))
           .orderBy("source", "rnk")
       },

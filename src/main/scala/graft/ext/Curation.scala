@@ -1,8 +1,9 @@
 package graft.ext
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.plans.TopKPerKey
 
 /** Curation v3: exact-dedup-BEFORE-near-dup as an ENFORCED pipeline
   * invariant, not a doc note.
@@ -35,13 +36,8 @@ object Curation {
     * fingerprint-keyed shuffle, the deterministic keep rule shared with
     * q_curation / q_dedup_rep.
     */
-  def exactSurvivors(docs: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("fp")).orderBy(col("doc_id"))
-    withFingerprint(docs)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn")
-  }
+  def exactSurvivors(docs: DataFrame): DataFrame =
+    TopKPerKey.topK(withFingerprint(docs), Seq(col("fp")), Seq(col("doc_id")), 1, "rn").drop("rn")
 
   /** Near-dup stage + invariant gate over a CLAIMED LSH-stage input
     * (which must carry doc_id, text, fp). The keep-one policy here is the

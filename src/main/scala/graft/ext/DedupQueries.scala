@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Q
 import graft.core.Tables
+import graft.plans.TopKPerKey
 
 /** Registered dedup queries — exact dedup (oracle: DISTINCT/GROUP BY),
   * blocked near-dup candidates with exact n-gram Jaccard (oracle: DuckDB
@@ -737,16 +738,13 @@ object DedupQueries {
           .withColumn("blk", element_at(split(col("name"), " "), -1))
         val a = n.select(col("name").as("a_name"), col("blk"))
         val b = n.select(col("name").as("b_name"), col("blk"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("a_name")).orderBy(col("dist"), col("b_name"))
-        a.join(b, Seq("blk"))
+        val near = a.join(b, Seq("blk"))
           .filter(col("a_name") =!= col("b_name"))
           .select(
             col("a_name"), col("b_name"),
             levenshtein(col("a_name"), col("b_name")).as("dist"))
           .filter(col("dist").between(1, 3))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 1)
+        TopKPerKey.topK(near, Seq(col("a_name")), Seq(col("dist"), col("b_name")), 1, "rn")
           .select(col("a_name"), col("b_name"), col("dist"))
           .orderBy("a_name")
       },

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Q
 import graft.core.{ArtifactStore, Tables}
+import graft.plans.TopKPerKey
 
 /** Embedding-compression and semantic-dedup operators (round-6 widening):
   *
@@ -65,9 +66,7 @@ object EmbedQueries {
       .select(
         col("q_id"), col("n_id"), col("qv"), col("cv"),
         expr("CAST(bit_count(qw0 ^ cw0) + bit_count(qw1 ^ cw1) AS BIGINT)").as("hamming"))
-    val wHam = Window.partitionBy(col("q_id")).orderBy(col("hamming"), col("n_id"))
-    val reranked = ham
-      .withColumn("hrk", row_number().over(wHam)).filter(col("hrk") <= keep)
+    val reranked = TopKPerKey.topK(ham, Seq(col("q_id")), Seq(col("hamming"), col("n_id")), keep, "hrk")
       .select(
         col("q_id"), col("n_id"),
         (Similarity.dot(col("qv"), col("cv")) /
@@ -157,9 +156,7 @@ object EmbedQueries {
           .select(
             col("q_id"), col("n_id"), col("qv"), col("cv"),
             expr("CAST(bit_count(qw0 ^ cw0) + bit_count(qw1 ^ cw1) AS BIGINT)").as("hamming"))
-        val w = Window.partitionBy(col("q_id")).orderBy(col("hamming"), col("n_id"))
-        scored
-          .withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
+        TopKPerKey.topK(scored, Seq(col("q_id")), Seq(col("hamming"), col("n_id")), 5, "rank")
           .select(
             col("q_id"), col("rank"), col("n_id"), col("hamming"),
             (Similarity.dot(col("qv"), col("cv")) /
@@ -325,13 +322,11 @@ object EmbedQueries {
         val d2 =
           Similarity.dot(col("qv"), col("qv")) + Similarity.dot(col("cv"), col("cv")) -
             lit(2.0) * Similarity.dot(col("qv"), col("cv"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("q_id")).orderBy(col("d2").asc, col("n_id").asc)
-        val exact = broadcast(q).crossJoin(c)
-          .filter(col("q_id") =!= col("n_id"))
-          .select(col("q_id"), col("n_id"), d2.as("d2"))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 10)
+        val exact = TopKPerKey.topK(
+          broadcast(q).crossJoin(c)
+            .filter(col("q_id") =!= col("n_id"))
+            .select(col("q_id"), col("n_id"), d2.as("d2")),
+          Seq(col("q_id")), Seq(col("d2").asc, col("n_id").asc), 10, "rank")
         Gate.recallGate(
           exact,
           approx.select(col("q_id"), col("vec_id").as("n_id")),
@@ -381,13 +376,11 @@ object EmbedQueries {
         val d2 =
           Similarity.dot(col("qv"), col("qv")) + Similarity.dot(col("cv"), col("cv")) -
             lit(2.0) * Similarity.dot(col("qv"), col("cv"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("q_id")).orderBy(col("d2").asc, col("n_id").asc)
-        val exact = broadcast(q).crossJoin(c)
-          .filter(col("q_id") =!= col("n_id"))
-          .select(col("q_id"), col("n_id"), d2.as("d2"))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 10)
+        val exact = TopKPerKey.topK(
+          broadcast(q).crossJoin(c)
+            .filter(col("q_id") =!= col("n_id"))
+            .select(col("q_id"), col("n_id"), d2.as("d2")),
+          Seq(col("q_id")), Seq(col("d2").asc, col("n_id").asc), 10, "rank")
         val recall = Gate.recallGate(
           exact, approx.select(col("q_id"), col("vec_id").as("n_id")), floor = 0.5)
         Gate.withCounts(recall, "__n_cand" -> cand, "__n_docs" -> emb)
@@ -445,13 +438,11 @@ object EmbedQueries {
         val d2 =
           Similarity.dot(col("qv"), col("qv")) + Similarity.dot(col("cv"), col("cv")) -
             lit(2.0) * Similarity.dot(col("qv"), col("cv"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("q_id")).orderBy(col("d2").asc, col("n_id").asc)
-        val exact = broadcast(q).crossJoin(c)
-          .filter(col("q_id") =!= col("n_id"))
-          .select(col("q_id"), col("n_id"), d2.as("d2"))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 10)
+        val exact = TopKPerKey.topK(
+          broadcast(q).crossJoin(c)
+            .filter(col("q_id") =!= col("n_id"))
+            .select(col("q_id"), col("n_id"), d2.as("d2")),
+          Seq(col("q_id")), Seq(col("d2").asc, col("n_id").asc), 10, "rank")
         val recall = Gate.recallGate(
           exact, topRes.select(col("q_id"), col("vec_id").as("n_id")), floor = 0.5)
         Gate.withCounts(recall, "__n_cand" -> candRes, "__n_docs" -> emb)

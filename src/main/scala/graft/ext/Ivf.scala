@@ -1,10 +1,10 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.ArtifactStore
+import graft.plans.TopKPerKey
 
 /** IVF (inverted-file) approximate nearest neighbor — the coarse-quantizer
   * scale path alongside sign-LSH ([[Similarity.lshTopK]]):
@@ -403,11 +403,9 @@ object Ivf {
       corpus: DataFrame, centroids: Seq[Seq[Double]], r: Int): DataFrame = {
     val v = corpus.select(col("vec_id").as("n_id"), col("embedding").cast("array<double>").as("cv"))
     val dists = dists2All(col("cv"), centroids)
-    v.select(col("n_id"), col("cv"), posexplode(dists).as(Seq("bucket", "d2")))
-      .withColumn(
-        "pr",
-        row_number().over(Window.partitionBy(col("n_id")).orderBy(col("d2"), col("bucket"))))
-      .filter(col("pr") <= r)
+    TopKPerKey.topK(
+      v.select(col("n_id"), col("cv"), posexplode(dists).as(Seq("bucket", "d2"))),
+      Seq(col("n_id")), Seq(col("d2"), col("bucket")), r, "pr")
       .select(col("bucket"), col("n_id"), col("cv"))
   }
 
@@ -416,11 +414,7 @@ object Ivf {
     */
   private[ext] def indexMultiJoin(
       corpus: DataFrame, centroids: Seq[Seq[Double]], r: Int): DataFrame =
-    pairD2(corpus, centroids)
-      .withColumn(
-        "pr",
-        row_number().over(Window.partitionBy(col("n_id")).orderBy(col("d2"), col("cid"))))
-      .filter(col("pr") <= r)
+    TopKPerKey.topK(pairD2(corpus, centroids), Seq(col("n_id")), Seq(col("d2"), col("cid")), r, "pr")
       .select(col("cid").cast("int").as("bucket"), col("n_id"), col("cv"))
 
   /** Cell-blocked kNN-graph candidates over a multi-probe inverted index
@@ -458,10 +452,7 @@ object Ivf {
     * the exact q_knn_graph's selection side.
     */
   def knnTopK(candidates: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("src")).orderBy(col("cos").desc, col("dst"))
-    candidates
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    TopKPerKey.topK(candidates, Seq(col("src")), Seq(col("cos").desc, col("dst")), k, "rank")
       .select(col("src"), col("rank"), col("dst"), col("cos"))
   }
 
@@ -503,9 +494,9 @@ object Ivf {
       queries: DataFrame, centroids: Seq[Seq[Double]], nprobe: Int): DataFrame = {
     val q = queries.select(col("vec_id").as("q_id"), col("embedding").cast("array<double>").as("qv"))
     val dists = dists2All(col("qv"), centroids)
-    q.select(col("q_id"), col("qv"), posexplode(dists).as(Seq("bucket", "d2")))
-      .withColumn("probe_rank", row_number().over(Window.partitionBy(col("q_id")).orderBy(col("d2"), col("bucket"))))
-      .filter(col("probe_rank") <= nprobe)
+    TopKPerKey.topK(
+      q.select(col("q_id"), col("qv"), posexplode(dists).as(Seq("bucket", "d2"))),
+      Seq(col("q_id")), Seq(col("d2"), col("bucket")), nprobe, "probe_rank")
       .select(
         col("q_id"), col("qv"),
         sqrt(Similarity.dot(col("qv"), col("qv"))).as("qn"), col("bucket"))
@@ -513,11 +504,8 @@ object Ivf {
 
   private[ext] def probeCellsJoin(
       queries: DataFrame, centroids: Seq[Seq[Double]], nprobe: Int): DataFrame =
-    pairD2(queries, centroids)
-      .withColumn(
-        "probe_rank",
-        row_number().over(Window.partitionBy(col("n_id")).orderBy(col("d2"), col("cid"))))
-      .filter(col("probe_rank") <= nprobe)
+    TopKPerKey.topK(
+      pairD2(queries, centroids), Seq(col("n_id")), Seq(col("d2"), col("cid")), nprobe, "probe_rank")
       .select(
         col("n_id").as("q_id"), col("cv").as("qv"),
         sqrt(Similarity.dot(col("cv"), col("cv"))).as("qn"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.ArtifactStore
+import graft.plans.TopKPerKey
 
 /** Product quantization (PQ, Jégou et al. 2011 "Product Quantization for
   * Nearest Neighbor Search" shape): split each embedding into M contiguous
@@ -152,17 +153,14 @@ object Pq {
       .select(col("vec_id").as("q_id"), v.as("qv"))
       .withColumn("tables", tables)
       .select(col("q_id"), col("tables"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("adist2").asc, col("vec_id").asc)
-    broadcast(q)
+    val adist = broadcast(q)
       .join(encoded, col("q_id") =!= col("vec_id"))
       .select(
         col("q_id"), col("vec_id"),
         element_at(element_at(col("tables"), col("m") + 1), col("code") + 1).as("term"))
       .groupBy(col("q_id"), col("vec_id"))
       .agg(sum(col("term")).as("adist2"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    TopKPerKey.topK(adist, Seq(col("q_id")), Seq(col("adist2").asc, col("vec_id").asc), k, "rank")
       .select(col("q_id"), col("rank"), col("vec_id"), col("adist2"))
   }
 
@@ -184,15 +182,12 @@ object Pq {
     val d2 =
       Similarity.dot(col("qv"), col("qv")) + Similarity.dot(col("cv"), col("cv")) -
         lit(2.0) * Similarity.dot(col("qv"), col("cv"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("d2").asc, col("vec_id").asc)
-    cand
+    val scored = cand
       .select(col("q_id"), col("vec_id"))
       .join(c, Seq("vec_id"))
       .join(broadcast(q), Seq("q_id"))
       .select(col("q_id"), col("vec_id"), d2.as("d2"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    TopKPerKey.topK(scored, Seq(col("q_id")), Seq(col("d2").asc, col("vec_id").asc), k, "rank")
       .select(col("q_id"), col("rank"), col("vec_id"), col("d2"))
   }
 
@@ -319,15 +314,11 @@ object Pq {
     val tables = array(books.zipWithIndex.map { case (cb, j) =>
       Ivf.dists2All(slice(col("qrv"), j * sub + 1, sub), cb)
     }: _*)
-    val probes = queries
-      .select(col("vec_id").as("q_id"), v.as("qv"))
-      .select(col("q_id"), col("qv"), posexplode(coarseDists).as(Seq("bucket", "cd2")))
-      .withColumn(
-        "probe_rank",
-        row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("q_id")).orderBy(col("cd2"), col("bucket"))))
-      .filter(col("probe_rank") <= nprobe)
+    val probes = TopKPerKey.topK(
+      queries
+        .select(col("vec_id").as("q_id"), v.as("qv"))
+        .select(col("q_id"), col("qv"), posexplode(coarseDists).as(Seq("bucket", "cd2"))),
+      Seq(col("q_id")), Seq(col("cd2"), col("bucket")), nprobe, "probe_rank")
       .withColumn(
         "qrv",
         zip_with(col("qv"), element_at(centLit, col("bucket") + 1), (a, b) => a - b))
@@ -368,16 +359,12 @@ object Pq {
       Ivf.dists2All(slice(col("qv"), j * sub + 1, sub), cb)
     }: _*)
     val coarseDists = Ivf.dists2All(col("qv"), coarse)
-    val probes = queries
-      .select(col("vec_id").as("q_id"), v.as("qv"))
-      .withColumn("tables", tables)
-      .select(col("q_id"), col("tables"), posexplode(coarseDists).as(Seq("bucket", "cd2")))
-      .withColumn(
-        "probe_rank",
-        row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("q_id")).orderBy(col("cd2"), col("bucket"))))
-      .filter(col("probe_rank") <= nprobe)
+    val probes = TopKPerKey.topK(
+      queries
+        .select(col("vec_id").as("q_id"), v.as("qv"))
+        .withColumn("tables", tables)
+        .select(col("q_id"), col("tables"), posexplode(coarseDists).as(Seq("bucket", "cd2"))),
+      Seq(col("q_id")), Seq(col("cd2"), col("bucket")), nprobe, "probe_rank")
       .select(col("q_id"), col("tables"), col("bucket"))
     broadcast(probes)
       .join(encodedCells, Seq("bucket"))
@@ -409,14 +396,9 @@ object Pq {
       queries, corpus, k)
 
   /** Per-query best-`shortlist` selection over scored ADC candidates. */
-  def shortlistTopK(cand: DataFrame, shortlist: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("adist2").asc, col("vec_id").asc)
-    cand
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= shortlist)
+  def shortlistTopK(cand: DataFrame, shortlist: Int): DataFrame =
+    TopKPerKey.topK(cand, Seq(col("q_id")), Seq(col("adist2").asc, col("vec_id").asc), shortlist, "rank")
       .select(col("q_id"), col("vec_id"))
-  }
 
   /** De-quantize an encoded (vec_id, m, code) table back to approximate
     * vectors: each code row looks its sub-vector up in the codebook

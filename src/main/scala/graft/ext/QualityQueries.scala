@@ -1,10 +1,10 @@
 package graft.ext
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Q
 import graft.core.{Agg, Tables}
+import graft.plans.TopKPerKey
 
 /** Document-quality and corpus-composition operators — the filter/score
   * family a pre-training pipeline runs between ingest and tokenization
@@ -61,12 +61,8 @@ object QualityQueries {
               (a, b) => concat(a, lit(" "), b))).as("bigram"))
           .groupBy(col("doc_id"), col("bigram"))
           .agg(count(lit(1)).as("cnt"))
-        val top = bigrams
-          .withColumn(
-            "rn",
-            row_number().over(
-              Window.partitionBy(col("doc_id")).orderBy(col("cnt").desc, col("bigram").asc)))
-          .filter(col("rn") === 1)
+        val top = TopKPerKey
+          .topK(bigrams, Seq(col("doc_id")), Seq(col("cnt").desc, col("bigram").asc), 1, "rn")
           .select(col("doc_id"), col("bigram").as("top_bigram"), col("cnt").as("top_bigram_cnt"))
         perDoc
           .join(top, Seq("doc_id"), "left")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.Q
 import graft.core.{ArtifactStore, Tables}
+import graft.plans.TopKPerKey
 
 /** Postings-based text retrieval — the search half of the training-data
   * toolkit. The engine already covers DENSE retrieval (the ANN family:
@@ -295,14 +296,12 @@ object SearchQueries {
       tf: org.apache.spark.sql.DataFrame,
       dfRel: org.apache.spark.sql.DataFrame,
       nDocs: Long): org.apache.spark.sql.DataFrame = {
-    val sigW = Window.partitionBy(col("doc_id")).orderBy(col("w").desc, col("term"))
-    tf
+    val weighted = tf
       .join(dfRel, Seq("term"))
       .select(
         col("doc_id"), col("term"), col("tid"),
         expr(s"tf * ((${nDocs}L * 1000000) div df)").as("w"))
-      .withColumn("rnk", row_number().over(sigW))
-      .filter(col("rnk") <= 5)
+    TopKPerKey.topK(weighted, Seq(col("doc_id")), Seq(col("w").desc, col("term")), 5, "rnk")
       .select(col("doc_id"), col("term"), col("tid"), col("w"))
   }
 
@@ -362,10 +361,7 @@ object SearchQueries {
     // 5n thin rows once (the PageRank loop-invariant lesson; measured
     // 11.5 s → 4.9 s at sf0.1)
     val sig = sigThinFromTf(tf, dfRel, nDocs).localCheckpoint(true)
-    val champW = Window.partitionBy(col("tid")).orderBy(col("w").desc, col("doc_id"))
-    val champ = sig
-      .withColumn("crnk", row_number().over(champW))
-      .filter(col("crnk") <= c)
+    val champ = TopKPerKey.topK(sig, Seq(col("tid")), Seq(col("w").desc, col("doc_id")), c, "crnk")
       .select(col("doc_id").as("b_id"), col("tid"))
     // The champion index is collapsed to ONE array row per term (≤ c
     // elements), so the serving probe join emits 5 rows per doc — each
@@ -440,10 +436,7 @@ object SearchQueries {
         col("a_id"), col("b_id"),
         (expr("graft_sorted_dot(tsa, wsa, tsb, wsb)").cast("double") /
           (col("na") * col("nb"))).as("cos"))
-    val topW = Window.partitionBy(col("a_id")).orderBy(col("cos").desc, col("b_id"))
-    pairs
-      .withColumn("rnk", row_number().over(topW))
-      .filter(col("rnk") <= 3)
+    TopKPerKey.topK(pairs, Seq(col("a_id")), Seq(col("cos").desc, col("b_id")), 3, "rnk")
       .orderBy("a_id", "rnk")
   }
 
@@ -533,10 +526,8 @@ object SearchQueries {
 
   /** Sparse BM25 top-`k` list per query: (query_id, doc_id, srnk). */
   private def sparseTop(s: org.apache.spark.sql.SparkSession, docs: org.apache.spark.sql.DataFrame, k: Int) = {
-    val sw = Window.partitionBy(col("query_id")).orderBy(col("score_fp").desc, col("doc_id"))
-    bm25Scores(s, docs)
-      .withColumn("srnk", row_number().over(sw))
-      .filter(col("srnk") <= k)
+    TopKPerKey.topK(
+      bm25Scores(s, docs), Seq(col("query_id")), Seq(col("score_fp").desc, col("doc_id")), k, "srnk")
       .select(col("query_id"), col("doc_id"), col("srnk"))
   }
 
@@ -549,8 +540,7 @@ object SearchQueries {
   // package-private: SimilaritySpec's MoG hybrid curve drives the SAME
   // registered fusion stage, not a reimplementation
   private[graft] def rrfFuse(sparse: org.apache.spark.sql.DataFrame, dense: org.apache.spark.sql.DataFrame) = {
-    val fw = Window.partitionBy(col("query_id")).orderBy(col("rrf_fp").desc, col("doc_id"))
-    sparse
+    val fused = sparse
       .join(dense, Seq("query_id", "doc_id"), "full")
       .select(
         col("query_id"), col("doc_id"),
@@ -558,8 +548,7 @@ object SearchQueries {
           coalesce(expr("1000000 div (60 + drnk)"), lit(0L))).as("rrf_fp"),
         coalesce(col("srnk"), lit(0)).as("sparse_rank"),
         coalesce(col("drnk"), lit(0)).as("dense_rank"))
-      .withColumn("rnk", row_number().over(fw))
-      .filter(col("rnk") <= 10)
+    TopKPerKey.topK(fused, Seq(col("query_id")), Seq(col("rrf_fp").desc, col("doc_id")), 10, "rnk")
   }
 
   /** The SERVED IVF hybrid composition (round-10 verdict #2): the dense
@@ -614,10 +603,8 @@ object SearchQueries {
 
   /** [[sparseTop]] on the served scoring path. */
   private def sparseTopServed(s: org.apache.spark.sql.SparkSession, d: String, k: Int) = {
-    val sw = Window.partitionBy(col("query_id")).orderBy(col("score_fp").desc, col("doc_id"))
-    bm25ServedScores(s, d)
-      .withColumn("srnk", row_number().over(sw))
-      .filter(col("srnk") <= k)
+    TopKPerKey.topK(
+      bm25ServedScores(s, d), Seq(col("query_id")), Seq(col("score_fp").desc, col("doc_id")), k, "srnk")
       .select(col("query_id"), col("doc_id"), col("srnk"))
   }
 
@@ -846,12 +833,9 @@ object SearchQueries {
       // the token-vector relation feeds the cell table, doc-cell map,
       // query legs, and both exact-scoring stages — materialize it once
       // (round 21; the same multiply-consumed-relation rule the bound
-      // pipeline below already applies). DELIBERATELY a raw
-      // localCheckpoint, not the Ckpt seam (round-21 ADVICE weighed in
-      // round 22): this relation feeds equi-JOINS whose broadcast
-      // decisions ride the origin stats the seam would drop, and it is
-      // a within-query materialization, not cross-round kernel state —
-      // an executor loss fails and retries the whole query either way.
+      // pipeline below already applies). A within-query materialization,
+      // so a raw localCheckpoint, not Ckpt.truncate: the checkpoint rule
+      // in graft.core.Ckpt's scaladoc.
       val vecs = vecsIn.localCheckpoint(true)
       val cellOf = expr(
         "CAST(element_at(tv, 2) > 0 AS INT) + 2 * CAST(element_at(tv, 3) > 0 AS INT) + " +
@@ -1062,10 +1046,7 @@ object SearchQueries {
       // TopKPerKey operator — k·queries rows cross the final exchange.
       (s, d) => {
         val scored = bm25Scores(s, Tables(s, d, "documents"))
-        val w = Window.partitionBy(col("query_id")).orderBy(col("score_fp").desc, col("doc_id"))
-        scored
-          .withColumn("rnk", row_number().over(w))
-          .filter(col("rnk") <= 5)
+        TopKPerKey.topK(scored, Seq(col("query_id")), Seq(col("score_fp").desc, col("doc_id")), 5, "rnk")
           .orderBy("query_id", "rnk")
       },
       Some(bm25Top5Sql)
@@ -1085,10 +1066,8 @@ object SearchQueries {
       // inverted-index serving bound; at 100 TB the postings artifact
       // is term-sharded storage and this plan never touches documents.
       (s, d) => {
-        val w = Window.partitionBy(col("query_id")).orderBy(col("score_fp").desc, col("doc_id"))
-        bm25ServedScores(s, d)
-          .withColumn("rnk", row_number().over(w))
-          .filter(col("rnk") <= 5)
+        TopKPerKey.topK(
+          bm25ServedScores(s, d), Seq(col("query_id")), Seq(col("score_fp").desc, col("doc_id")), 5, "rnk")
           .orderBy("query_id", "rnk")
       },
       Some(bm25Top5Sql)
@@ -1338,10 +1317,8 @@ object SearchQueries {
       // ≈ 1.33, never the corpus row count.
       (s, d) => {
         val chunks = CorpusQueries.chunkCorpus(Tables(s, d, "documents"))
-        val w = Window.partitionBy(col("query_id")).orderBy(col("score_fp").desc, col("doc_id"))
-        bm25Scores(s, chunks)
-          .withColumn("rnk", row_number().over(w))
-          .filter(col("rnk") <= 5)
+        TopKPerKey.topK(
+          bm25Scores(s, chunks), Seq(col("query_id")), Seq(col("score_fp").desc, col("doc_id")), 5, "rnk")
           .select(
             col("query_id"),
             expr(s"doc_id div ${CorpusQueries.ChunkIdStride}").as("doc_id"),

@@ -1,8 +1,9 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.plans.TopKPerKey
 
 /** Similarity search over an embedding column (`array<float>`): exact
   * brute-force cosine top-k as the correctness baseline, and a
@@ -60,14 +61,11 @@ object Similarity {
   }
 
   /** The top `k` rows per q_id by `score` desc, ties by n_id, ranked 1..k
-    * in `rankCol`: exactly `row_number() over (partition by q_id order by
-    * score desc, n_id) <= k`, the shape [[graft.plans.TopKRewrite]] turns
-    * into a bounded per-key heap.
+    * in `rankCol`: the q_id/n_id specialisation of the per-key top-k
+    * builder [[graft.plans.TopKPerKey.topK]].
     */
   def topByScore(df: DataFrame, score: String, k: Int, rankCol: String = "rank"): DataFrame =
-    df.withColumn(rankCol, row_number().over(
-      Window.partitionBy(col("q_id")).orderBy(col(score).desc, col("n_id"))))
-      .filter(col(rankCol) <= k)
+    TopKPerKey.topK(df, Seq(col("q_id")), Seq(col(score).desc, col("n_id")), k, rankCol)
 
   /** Exact brute-force cosine top-k: for each row of `queries`, the k
     * nearest rows of `corpus` (self excluded) by cosine.

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Q
 import graft.core.{Agg, Tables}
+import graft.plans.TopKPerKey
 
 /** Text-analysis operators over `documents` — the training-data-pipeline
   * extension family (north star §X): token counting (whitespace + regex
@@ -178,15 +179,13 @@ object TextQueries {
       // cluster) → per-(lang, source) survivor stats. Single pass +
       // one fingerprint shuffle + one group shuffle at any scale.
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val alphaRatio =
           length(regexp_replace(col("text"), "[^A-Za-z0-9]", "")).cast("double") /
             length(col("text")).cast("double")
         val fp = md5(regexp_replace(lower(col("text")), "\\s+", " ").cast("binary"))
-        Tables(s, d, "documents")
-          .filter(nTokens >= 20 && alphaRatio >= 0.5)
-          .withColumn("rn", row_number().over(Window.partitionBy(fp).orderBy(col("doc_id"))))
-          .filter(col("rn") === 1)
+        TopKPerKey.topK(
+          Tables(s, d, "documents").filter(nTokens >= 20 && alphaRatio >= 0.5),
+          Seq(fp), Seq(col("doc_id")), 1, "rn")
           .filter(substring(md5(col("doc_id").cast("string")), 1, 2) < lit("80"))
           .groupBy(col("lang"), col("source"))
           .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"))
@@ -387,16 +386,14 @@ object TextQueries {
           .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
           .groupBy(col("doc_id"), col("token"))
           .agg(count(lit(1)).as("tf"))
-        val w = Window.partitionBy(col("doc_id")).orderBy(col("score_fp").desc, col("token"))
-        Gate
+        val scored = Gate
           .withCounts(
             tf.withColumn("df", count(lit(1)).over(Window.partitionBy(col("token")))),
             "n" -> docs)
           .select(
             col("doc_id"), col("token"),
             (col("tf") * expr("(n * 1000000) div df")).as("score_fp"))
-          .withColumn("rnk", row_number().over(w))
-          .filter(col("rnk") <= 3)
+        TopKPerKey.topK(scored, Seq(col("doc_id")), Seq(col("score_fp").desc, col("token")), 3, "rnk")
           .select(col("doc_id"), col("token"), col("score_fp"), col("rnk"))
           .orderBy(col("doc_id"), col("rnk"))
       },

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{GraftShim, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{
   Alias, Attribute, AttributeReference, Expression, LessThan, LessThanOrEqual,
   Literal, RowNumber, SortOrder, WindowExpression, XxHash64}
@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.HyperLogLogPlusPlus
 import org.apache.spark.sql.catalyst.plans.logical.{
   Aggregate, Filter, LogicalPlan, UnaryNode, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.functions.{col, row_number}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.IntegerType
 
@@ -60,6 +61,21 @@ object TopKPerKey {
   /** Fresh rank attribute for direct (non-rewrite) construction. */
   def rankAttribute(name: String = "rn"): Attribute =
     AttributeReference(name, IntegerType, nullable = false)()
+
+  /** The one per-key top-k builder: the first `k` rows of each `keys`
+    * group in `order`, ranked 1..k in the Int column `rankCol`. It emits
+    * exactly `Filter(rankCol <= k, Window(rankCol := row_number() OVER
+    * (PARTITION BY keys ORDER BY order)))` with an Int literal bound: the
+    * shape [[TopKRewrite]] turns into this bounded-heap operator when its
+    * cardinality guard admits the k·keys working set, and a Window plan
+    * otherwise. `k = 1` is the keep-one-row-per-key form (latest wins,
+    * lowest id survives). A filter chained straight after the result
+    * merges into the same `Filter`, and the rewrite then declines.
+    */
+  def topK(df: DataFrame, keys: Seq[Column], order: Seq[Column], k: Int, rankCol: String): DataFrame =
+    df.withColumn(rankCol, row_number().over(
+      org.apache.spark.sql.expressions.Window.partitionBy(keys: _*).orderBy(order: _*)))
+      .filter(col(rankCol) <= k)
 }
 
 /** Logical rewrite (`graft.topk.rewrite`, DEFAULT ON since round 8):

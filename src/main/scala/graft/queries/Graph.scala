@@ -940,6 +940,18 @@ object Graph {
     */
   private[graft] val MaxBasketKey = "graft.copairs.maxBasket"
 
+  /** The basket array under the [[MaxBasketKey]] guard (default 1024,
+    * read from `li`'s session): over-bound baskets raise instead of
+    * expanding O(b²) pairs in one row.
+    */
+  private def guardedBasket(li: org.apache.spark.sql.DataFrame): String = {
+    val maxBasket = li.sparkSession.conf.get(MaxBasketKey, "1024").toInt
+    s"CASE WHEN size(ps) > $maxBasket THEN " +
+      s"raise_error(concat('$MaxBasketKey exceeded: ', CAST(size(ps) AS STRING), " +
+      s"' parts in basket ', CAST(ok AS STRING), ' (bound $maxBasket)')) " +
+      "ELSE ps END"
+  }
+
   /** [[coPairs]] WITHOUT the final (src, dst) dedup — for callers that
     * fold the dedup into their own downstream exchange
     * ([[coPurchaseEdges]] partitionBySrc). Null order keys are dropped
@@ -948,28 +960,16 @@ object Graph {
     * round-21 ADVICE), and baskets over [[MaxBasketKey]] raise rather
     * than expand (see the key's scaladoc).
     */
-  /** The basket array under the [[MaxBasketKey]] guard: over-bound
-    * baskets raise instead of expanding O(b²) pairs in one row.
-    */
-  private def guardedBasket(maxBasket: Int): String =
-    s"CASE WHEN size(ps) > $maxBasket THEN " +
-      s"raise_error(concat('$MaxBasketKey exceeded: ', CAST(size(ps) AS STRING), " +
-      s"' parts in basket ', CAST(ok AS STRING), ' (bound $maxBasket)')) " +
-      "ELSE ps END"
-
   private[graft] def coPairsRaw(
-      li: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val maxBasket =
-      li.sparkSession.conf.get(MaxBasketKey, "1024").toInt
+      li: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     li.filter(col("ok").isNotNull)
       .groupBy(col("ok"))
       .agg(sort_array(collect_set(col("pk"))).as("ps"))
       .select(explode(expr(
-        s"flatten(transform(${guardedBasket(maxBasket)}, (x, i) -> " +
+        s"flatten(transform(${guardedBasket(li)}, (x, i) -> " +
           "transform(slice(ps, i + 2, size(ps) - i - 1), " +
           "y -> named_struct('src', x, 'dst', y))))")).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-  }
 
   /** Undirected co-purchase edges (both directions) from an (ok, pk)
     * basket relation (distinct or not — see [[coPairs]]) — the shared
@@ -1008,12 +1008,11 @@ object Graph {
       // 2 aggregate passes → 2 exchanges + 1 pass. Same edge set (the
       // basket array is distinct, so ordered x ≠ y pairs ≡ the
       // symmetric closure of the x < y pairs).
-      val maxBasket = li.sparkSession.conf.get(MaxBasketKey, "1024").toInt
       li.filter(col("ok").isNotNull)
         .groupBy(col("ok"))
         .agg(sort_array(collect_set(col("pk"))).as("ps"))
         .select(explode(expr(
-          s"flatten(transform(${guardedBasket(maxBasket)}, x -> " +
+          s"flatten(transform(${guardedBasket(li)}, x -> " +
             "transform(filter(ps, y -> y != x), " +
             "y -> named_struct('src', x, 'dst', y))))")).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Q
 import graft.core.{Agg, Tables}
+import graft.plans.TopKPerKey
 
 /** Incremental-maintenance operators: the two primitives a warehouse uses
   * to avoid full recomputation when new data lands.
@@ -225,13 +226,8 @@ object Incremental {
       // this replaces the reference's WRITE_TRUNCATE full reload with
       // work proportional to the delta, not the table.
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val target = mergeTarget(s, d)
-        val latest = mergeLog(s, d)
-          .withColumn("rn",
-            row_number().over(Window.partitionBy(col("k")).orderBy(col("seq").desc)))
-          .filter(col("rn") === 1)
-          .drop("rn")
+        val latest = TopKPerKey.topK(mergeLog(s, d), Seq(col("k")), Seq(col("seq").desc), 1, "rn").drop("rn")
         target
           .join(latest, Seq("k"), "full_outer")
           .filter(col("op").isNull || col("op") =!= "D")
@@ -349,14 +345,8 @@ object Incremental {
     */
   private def scd2History(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    val perDay = Tables(s, d, "orders")
-      .withColumn(
-        "rn",
-        row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("o_custkey"), col("o_orderdate"))
-            .orderBy(col("o_orderkey").desc)))
-      .filter(col("rn") === 1)
+    val perDay = TopKPerKey.topK(
+      Tables(s, d, "orders"), Seq(col("o_custkey"), col("o_orderdate")), Seq(col("o_orderkey").desc), 1, "rn")
       .select(
         col("o_custkey").as("custkey"),
         col("o_orderdate").as("valid_from"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.Q
 import graft.core.Tables
+import graft.plans.TopKPerKey
 
 /** Nested types, deterministic sampling, and exact statistical moments —
   * round-3 widening of the relational surface (SURVEY §2.2/§2.4/§2.7).
@@ -287,12 +288,9 @@ object Structured {
       // column. Use when the downstream consumer needs fixed class sizes
       // (eval sets, per-language calibration samples).
       (s, d) => {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("c_mktsegment"))
-          .orderBy(md5(concat(lit("strat:"), col("c_custkey").cast("string"))), col("c_custkey"))
-        t(s, d, "customer")
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 50)
+        TopKPerKey.topK(
+          t(s, d, "customer"), Seq(col("c_mktsegment")),
+          Seq(md5(concat(lit("strat:"), col("c_custkey").cast("string"))), col("c_custkey")), 50, "rn")
           .select(col("c_mktsegment"), col("rn").cast("long").as("rn"), col("c_custkey"))
           .orderBy("c_mktsegment", "rn")
       },

@@ -628,16 +628,17 @@ class PlanAuditSpec extends SparkSpec {
       "anti-degeneracy full-outer fold missing")
   }
 
-  test("merge apply: one shuffle per side, latest-wins window pushed to a group limit") {
+  test("merge apply: one shuffle per side, latest-wins top-1 on the bounded-heap top-k") {
     val p = planString(Registry.byName("q_merge_apply").run(spark, sf()))
-    // the latest-wins window and the merge join key on the same column:
-    // the change side's window exchange must feed the join directly (2
+    // the latest-wins top-1 and the merge join key on the same column:
+    // the change side's top-k exchange must feed the join directly (2
     // hash exchanges total — one per side — plus the output range sort)
     val hashEx = "hashpartitioning".r.findAllIn(p).size
     assert(hashEx <= 2, s"expected one hash exchange per side, plan has $hashEx:\n${p.take(1500)}")
-    // rn = 1 over (k ORDER BY seq DESC) must compile to the rank-limit
-    // pushdown, not a full per-key sort-and-filter
-    assert(p.contains("WindowGroupLimit"), "latest-wins top-1 lost its group-limit pushdown")
+    // the k = 1 top-k over (k ORDER BY seq DESC) must compile to the
+    // bounded-heap operator, not a full per-key sort-and-filter
+    assert(p.contains("TopKPerKeyFinal") && !p.contains("Window ["),
+      s"latest-wins top-1 lost the bounded-heap operator:\n${p.take(1500)}")
     assert(p.contains("FullOuter"), "merge apply must full-outer join target and latest")
   }
 

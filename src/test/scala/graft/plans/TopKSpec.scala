@@ -45,11 +45,27 @@ class TopKSpec extends SparkSpec {
       TopKPerKey(Seq(key), order, k, TopKPerKey.rankAttribute(), child))
   }
 
+  private def builderForm(k: Int) =
+    TopKPerKey.topK(
+      graft.core.Tables(spark, sf(), "customer")
+        .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal")),
+      Seq(col("c_nationkey")), Seq(col("c_acctbal").desc, col("c_custkey")), k, "rn")
+
   test("direct TopKPerKey node matches the window row_number form, ranks included") {
-    val expected = collectSet(windowForm(3))
-    val got = collectSet(directForm(3))
-    assert(got == expected, s"diff: ${(got diff expected) ++ (expected diff got)}")
-    assert(got.nonEmpty)
+    for (k <- Seq(1, 3)) {
+      // the reference rows come from the Window plan itself, rewrite off
+      val expected =
+        try {
+          spark.conf.set(TopKRewrite.Flag, "false")
+          collectSet(windowForm(k))
+        } finally spark.conf.unset(TopKRewrite.Flag)
+      val built = builderForm(k)
+      val p = built.queryExecution.executedPlan.toString
+      assert(p.contains("TopKPerKeyFinal"), s"k=$k: the builder's shape was not rewritten:\n$p")
+      for ((form, got) <- Seq("direct" -> collectSet(directForm(k)), "builder" -> collectSet(built)))
+        assert(got == expected, s"$form k=$k diff: ${(got diff expected) ++ (expected diff got)}")
+      assert(expected.nonEmpty)
+    }
   }
 
   test("physical plan is partial -> exchange on keys -> final, no Window, no sort") {
