@@ -12,8 +12,10 @@ package graft
   * back to back, so JIT/GC drift hits both arms equally, and one line
   * per arm is printed. Every line ends with `compiles=`, the number of
   * classes each rep compiled through Janino (a rep that reuses Spark's
-  * codegen cache reads 0), and `jobs=`, the Spark jobs each rep started
-  * ([[Timing.jobsOf]]; under AQE it varies run to run, so read its min).
+  * codegen cache reads 0), `jobs=`, the Spark jobs each rep started
+  * ([[Timing.jobsOf]]; under AQE it varies run to run, so read its min),
+  * and `execs=`, the SQL executions behind them ([[Timing.executions]],
+  * exact run to run).
   *
   * Usage: runMain graft.QTime <sfDir> <reps> [--ab <confKey>] <name...>
   */
@@ -27,23 +29,24 @@ object QTime {
     }
     val spark = Sessions.build("graft-qtime")
     Timing.warm(spark, sfDir)
-    def line(tag: String, reps: Seq[(Double, Long, Int)]): String = {
+    def line(tag: String, reps: Seq[(Double, Long, Int, Int)]): String = {
       val ts = reps.map(_._1)
       s"$tag ${ts.map(Timing.fmt).mkString(" ")}  min=${Timing.fmt(ts.min)}" +
-        s" compiles=${reps.map(_._2).mkString(",")} jobs=${reps.map(_._3).mkString(",")}"
+        s" compiles=${reps.map(_._2).mkString(",")} jobs=${reps.map(_._3).mkString(",")}" +
+        s" execs=${reps.map(_._4).mkString(",")}"
     }
     if (abKey.isEmpty) names.distinct.foreach(Timing.timeQuery(spark, _, sfDir))
     names.foreach { n =>
-      def time(): (Double, Long, Int) = {
+      def time(): (Double, Long, Int, Int) = {
         val c0 = Timing.compiles
         val (s, jobs) = Timing.jobsOf(spark)(Timing.timeQuery(spark, n, sfDir))
-        (s, Timing.compiles - c0, jobs.size)
+        (s, Timing.compiles - c0, jobs.size, Timing.executions(jobs))
       }
       abKey match {
         case None =>
           println(line(s"QTIME ${n.padTo(24, ' ')}", (1 to reps).map(_ => time())))
         case Some(key) =>
-          def arm(v: String): (Double, Long, Int) = { spark.conf.set(key, v); time() }
+          def arm(v: String): (Double, Long, Int, Int) = { spark.conf.set(key, v); time() }
           arm("true"); arm("false") // warm both arms
           val ab = (1 to reps).map(_ => (arm("true"), arm("false")))
           println(line(s"AB ${n.padTo(24, ' ')} $key=true ", ab.map(_._1)))

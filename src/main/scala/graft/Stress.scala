@@ -40,6 +40,15 @@ object Stress {
 
   private def rate(n: Long, s: Double): Double = n / s / 1e6
 
+  /** A tier's replicated-corpus dir, per user (the artifact-root
+    * convention): a fixed shared path would let concurrent runs by
+    * different users on one box clobber each other's corpus mid-measure.
+    */
+  private def outDir(tier: String): String = {
+    val user = sys.props.getOrElse("user.name", "anon").replaceAll("[^A-Za-z0-9._-]", "_")
+    s"${System.getProperty("java.io.tmpdir")}/graft-stress-$tier-$user"
+  }
+
   def main(args: Array[String]): Unit = {
     val (sfDir, mult, tier) = args match {
       case Array(d, m, t @ ("graph" | "simfamily" | "powerlaw")) if m.toIntOption.exists(_ > 0) =>
@@ -64,16 +73,12 @@ object Stress {
     * the A/B isolates the two cost regimes of iterative dataflow:
     * frontier BFS (per-round work = frontier ⋈ edges — broadcast-able
     * frontier, edge scan dominated) should grow far SLOWER than ×mult,
-    * while synchronous label propagation (per-round work = ALL labels ⋈
-    * edges) is the honest O(E)-per-round baseline that tracks the
-    * corpus. Emits one JSON line with both curves and the edge counts.
+    * while label propagation, whose first round puts every node of every
+    * copy on the wave, tracks the corpus. Emits one JSON line with both
+    * curves and the edge counts.
     */
   private def runGraph(spark: SparkSession, sfDir: String, mult: Int): Unit = {
-    // per-user output dir (the artifact-root convention): a fixed
-    // shared path would let concurrent runs by different users on one
-    // box clobber each other's replicated corpus mid-measure
-    val user = sys.props.getOrElse("user.name", "anon").replaceAll("[^A-Za-z0-9._-]", "_")
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft-stress-graph-$user"
+    val out = outDir("graph")
     val li0 = Tables(spark, sfDir, "lineitem")
       .select(col("l_orderkey"), col("l_partkey"))
     replicate(spark, li0, "l_orderkey", mult)
@@ -85,18 +90,14 @@ object Stress {
       df.select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
     val b1 = basket(li0)
     val bm = basket(spark.read.parquet(s"$out/li"))
-    val e1 = queries.Graph.coPurchaseEdges(b1)
-    val em = queries.Graph.coPurchaseEdges(bm)
+    // partitioned by src, as the registered rows build them
+    val e1 = queries.Graph.coPurchaseEdges(b1, partitionBySrc = true)
+    val em = queries.Graph.coPurchaseEdges(bm, partitionBySrc = true)
     val (ne1, nem) = (e1.count(), em.count())
     val src = b1.agg(min(col("pk"))).head().getLong(0)
     def bfs(edges: org.apache.spark.sql.DataFrame): (Double, Long) = {
       var n = 0L
-      val t = Timing.timeOf { n = queries.Graph.bfsFrom(spark, edges, src, hops = 4).count() }
-      (t, n)
-    }
-    def lpFull(edges: org.apache.spark.sql.DataFrame): (Double, Long) = {
-      var n = 0L
-      val t = Timing.timeOf { n = queries.Graph.labelPropFull(edges, rounds = 3).count() }
+      val t = Timing.timeOf { n = queries.Graph.bfsFrom(edges, src, hops = 4)._1.count() }
       (t, n)
     }
     def lpDelta(edges: org.apache.spark.sql.DataFrame): (Double, Long) = {
@@ -105,10 +106,11 @@ object Stress {
       (t, n)
     }
     def sssp(edges: org.apache.spark.sql.DataFrame): (Double, Long) = {
+      // a narrow expression over the checkpointed edges, as q_sssp_weighted
+      // builds it: a re-checkpoint would drop their hash(src) partitioning
       val we = edges.withColumn("w", lit(1L) + pmod(col("src") + col("dst"), lit(5L)))
-        .localCheckpoint(true)
       var n = 0L
-      val t = Timing.timeOf { n = queries.Graph.ssspFrom(spark, we, src, rounds = 4).count() }
+      val t = Timing.timeOf { n = queries.Graph.ssspFrom(we, src, rounds = 4)._1.count() }
       (t, n)
     }
     // convergence-depth measurement (round-17 verdict #4's stress half):
@@ -130,10 +132,9 @@ object Stress {
       }
       (t, r, w)
     }
-    bfs(e1); lpFull(e1); lpDelta(e1); sssp(e1) // warm the shapes
+    bfs(e1); lpDelta(e1); sssp(e1) // warm the shapes
     val (tb1, nb1) = bfs(e1); val (tbm, nbm) = bfs(em)
-    val (tl1, nl1) = lpFull(e1); val (tlm, nlm) = lpFull(em)
-    val (td1, _) = lpDelta(e1); val (tdm, _) = lpDelta(em)
+    val (td1, nl1) = lpDelta(e1); val (tdm, nlm) = lpDelta(em)
     val (ts1, ns1) = sssp(e1); val (tsm, nsm) = sssp(em)
     val n1 = b1.select(col("pk")).distinct()
     val nm = bm.select(col("pk")).distinct()
@@ -193,8 +194,7 @@ object Stress {
       s"""{"tier":"graph","mult":$mult,"edges_1x":$ne1,"edges_mx":$nem,""" +
         s""""bfs_sec_1x":${num(tb1)},"bfs_sec_mx":${num(tbm)},"bfs_reached_1x":$nb1,"bfs_reached_mx":$nbm,""" +
         s""""bfs_growth":${num(tbm / tb1)},""" +
-        s""""lp_full_sec_1x":${num(tl1)},"lp_full_sec_mx":${num(tlm)},"lp_nodes_1x":$nl1,"lp_nodes_mx":$nlm,""" +
-        s""""lp_full_growth":${num(tlm / tl1)},""" +
+        s""""lp_nodes_1x":$nl1,"lp_nodes_mx":$nlm,""" +
         s""""lp_delta_sec_1x":${num(td1)},"lp_delta_sec_mx":${num(tdm)},""" +
         s""""lp_delta_growth":${num(tdm / td1)},""" +
         s""""sssp_sec_1x":${num(ts1)},"sssp_sec_mx":${num(tsm)},""" +
@@ -388,7 +388,7 @@ object Stress {
     *    for the degree-oriented edge-centric plan.
     */
   private def runSimFamily(spark: SparkSession, sfDir: String, mult: Int): Unit = {
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft-stress-simfam"
+    val out = outDir("simfam")
     val num = (v: Double) => Timing.fmt3(v)
 
     // ---- minhash serving path on a genuinely larger corpus ----

@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** Shared measurement harness: one definition of "run a registered
   * query end-to-end" (noop sink — materializes every column without
   * collecting) for Bench's tiers and QTime's plain and `--ab` modes, so
-  * none of them can measure differently, the compile and job counters
-  * QTime and the specs read, plus locale-safe number formatting.
+  * none of them can measure differently, the compile, job and execution
+  * counters QTime and the specs read, plus locale-safe number formatting.
   */
 object Timing {
 
@@ -56,6 +56,13 @@ object Timing {
       }
     (out, props.toArray(Array.empty[java.util.Properties]).toSeq)
   }
+
+  /** The SQL executions (one per action) behind [[jobsOf]]'s jobs, by
+    * `spark.sql.execution.id`: exact run to run, where the job total
+    * varies under AQE.
+    */
+  def executions(jobs: Seq[java.util.Properties]): Int =
+    jobs.map(p => Option(p.getProperty("spark.sql.execution.id"))).distinct.size
 
   def fmt(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
 

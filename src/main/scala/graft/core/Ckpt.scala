@@ -172,7 +172,11 @@ object Ckpt {
     */
   final case class Fixpoint(state: DataFrame, rounds: Int, counts: Seq[Long], converged: Boolean)
 
-  /** The round loop every iterative kernel runs. Each round, `step` maps
+  /** The round loop every iterative kernel runs: `Graph.kCore`,
+    * `Graph.coreness` (one peel per phase), `Graph.ccStar`, q_pagerank's
+    * 3 rounds (a stop rule that never fires) and `Graph.ccConvergedFrom`,
+    * the delta min-propagation kernel behind `ccConverged`, `labelProp`,
+    * `bfsFrom`, `ssspFrom` and the CC repairs. Each round, `step` maps
     * the current state to the next relation, un-truncated, plus the
     * predicate whose matching rows the round counts; the driver
     * truncates and counts in ONE job ([[Round.of]]), so a round is one

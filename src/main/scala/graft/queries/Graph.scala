@@ -8,14 +8,16 @@ import graft.ext.Gate
 import graft.core.Ckpt.TruncateOps
 
 /** Graph analytics beyond near-dup connected components
-  * (`graft.ext.Dedup.connectedComponents`): deterministic fixed-iteration
-  * PageRank over the supplier→part shipment graph derived from lineitem.
+  * (`graft.ext.Dedup.connectedComponents`). Every round loop here runs on
+  * [[graft.core.Ckpt.fixpoint]]; BFS, SSSP, label propagation and
+  * hash-min CC share one delta min-propagation kernel,
+  * [[Graph.ccConvergedFrom]].
   *
-  * Iterative dataflow shape: each round is one join (edges × ranks, keyed
-  * on src) plus one hash-agg (contributions keyed on dst) — the classic
-  * Pregel-as-joins plan. Rounds are FIXED (3), so the whole computation is
-  * one linear Catalyst plan with no driver-side convergence loop; ranks
-  * never leave the cluster. Cross-engine determinism: the per-target
+  * PageRank, deterministic and fixed-iteration, over the supplier→part
+  * shipment graph derived from lineitem: each round is one join (edges ×
+  * ranks, keyed on src) plus one hash-agg (contributions keyed on dst) —
+  * the classic Pregel-as-joins plan. Rounds are FIXED (3); ranks never
+  * leave the cluster. Cross-engine determinism: the per-target
   * contribution sum is the only float reduction, and it goes through the
   * fixed-point dsum recipe each round, so both engines see identical
   * doubles every iteration (simplified PageRank: dangling-node mass is
@@ -137,12 +139,17 @@ object Graph {
             .distinct())
         val outdeg = graft.core.Ckpt.truncate(
           li.groupBy(col("src")).agg(count(lit(1)).as("deg")))
-        // one driver scalar (node count) — a control decision, not data
-        val n = nodes.count().toDouble
-        var ranks = nodes.withColumn("r", lit(1.0 / n))
-        for (_ <- 1 to Iters) {
+        // one driver scalar (node count) — a control decision, not data,
+        // and the init round's count
+        val nNodes = nodes.count()
+        val n = nNodes.toDouble
+        // Iters rounds, the stop rule never fires; each round checkpoints
+        // the (tiny) rank vector, or a lazily-chained loop re-executes
+        // every earlier iteration inside the next one (O(iters²) work)
+        val init = Ckpt.Round(nodes.withColumn("r", lit(1.0 / n)), nNodes)
+        val ranks = Ckpt.fixpoint(init, Iters) { prev =>
           val contrib = li
-            .join(ranks, li("src") === ranks("id"))
+            .join(prev, li("src") === prev("id"))
             .join(outdeg, "src")
             .select(col("dst").as("id"), (col("r") / col("deg").cast("double")).as("c"))
             .groupBy(col("id"))
@@ -156,12 +163,8 @@ object Graph {
               // literal arithmetic — the one-ulp difference would leak
               // into every rank
               (lit(0.15 / n) + lit(Damping) * coalesce(col("csum"), lit(0.0))).as("r"))
-          // checkpoint the (tiny) rank vector each round: a lazily-chained
-          // loop re-executes every earlier iteration inside the next one
-          // (O(iters²) total work) — materializing loop state is the
-          // iterative-dataflow half of making this linear in iters
-          ranks = graft.core.Ckpt.truncate(next)
-        }
+          (next, lit(true))
+        }((_, _) => false).state
         ranks.orderBy(col("r").desc, col("id")).limit(20)
       },
       Some {
@@ -194,7 +197,7 @@ object Graph {
       // graph; each round's state is eagerly checkpointed (the PageRank
       // loop-invariant lesson: a lazily-chained round re-executes every
       // earlier one). Source = MIN part id (deterministic), hops
-      // bounded at 4 (a fixed linear plan, no driver convergence loop).
+      // bounded at 4 (the min-propagation kernel capped at 4 rounds).
       // Output is the full (pk, dist) reachability relation — integer
       // hop distances, so the differential is exact; DuckDB re-derives
       // it with a recursive CTE bounded at the same depth.
@@ -206,7 +209,7 @@ object Graph {
           .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         val edges = coPurchaseEdges(li, partitionBySrc = true)
         val src = li.agg(min(col("pk"))).head().getLong(0)
-        bfsFrom(s, edges, src, hops = 4).orderBy("pk")
+        bfsFrom(edges, src, hops = 4)._1.orderBy("pk")
       },
       Some(
         "WITH RECURSIVE li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem), " +
@@ -278,7 +281,7 @@ object Graph {
         val edges = coPurchaseEdges(li, partitionBySrc = true)
           .withColumn("w", lit(1L) + pmod(col("src") + col("dst"), lit(5L)))
         val src = li.agg(min(col("pk"))).head().getLong(0)
-        ssspFrom(s, edges, src, rounds = 4).orderBy("pk")
+        ssspFrom(edges, src, rounds = 4)._1.orderBy("pk")
       },
       Some(
         "WITH RECURSIVE li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem), " +
@@ -766,8 +769,11 @@ object Graph {
       : (org.apache.spark.sql.DataFrame, Int, Seq[Long], Boolean) =
     ccConvergedFrom(nodes.select(col("pk"), col("pk").as("label")), edges, maxRounds)
 
-  /** [[ccConverged]] from an ARBITRARY initial labeling — the warm-start
-    * entry the incremental form uses. Correctness requirement on `init`:
+  /** The one delta min-propagation kernel: [[ccConverged]] from an
+    * ARBITRARY initial labeling, the warm-start entry the incremental
+    * form uses. A changed label crosses an edge as `carry`, over `label`
+    * and the edge's columns: `label` for CC, `label + 1` for [[bfsFrom]],
+    * `label + w` for [[ssspFrom]]. For CC, the requirement on `init`:
     * every label value must itself be a node of the component it labels
     * (self-labels and previously-converged component minima both
     * qualify) — then min-label propagation still converges to each
@@ -792,7 +798,8 @@ object Graph {
       init: org.apache.spark.sql.DataFrame,
       edges: org.apache.spark.sql.DataFrame,
       maxRounds: Int = CcMaxRounds,
-      seed: Option[org.apache.spark.sql.DataFrame] = None)
+      seed: Option[org.apache.spark.sql.DataFrame] = None,
+      carry: org.apache.spark.sql.Column = col("label"))
       : (org.apache.spark.sql.DataFrame, Int, Seq[Long], Boolean) = {
     val labels0 = init.select(col("pk"), col("label"))
     val state0 = seed match {
@@ -811,7 +818,7 @@ object Graph {
         else labels
       val fromNbr = edges
         .join(delta, col("src") === col("pk"))
-        .select(col("dst").as("pk"), col("label"))
+        .select(col("dst").as("pk"), carry.as("label"))
         .groupBy(col("pk")).agg(min(col("label")).as("__new"))
       val merged = labels
         .join(fromNbr, Seq("pk"), "left")
@@ -1025,27 +1032,38 @@ object Graph {
         .truncateLineage()
     }
 
-  /** Frontier BFS: `hops` rounds, each joining ONLY the previous
-    * frontier against `edges`; per-round state eagerly checkpointed.
+  /** Single-source min-propagation on [[ccConvergedFrom]]: the source
+    * starts at 0 and every node an edge reaches at `Long.MaxValue`, which
+    * no delta row holds (only a lowered label does), so `carry` cannot
+    * overflow. The wave is seeded at the source; the result is `out` over
+    * the reached nodes, the source included even when it has no edge.
     */
-  private[graft] def bfsFrom(
-      s: org.apache.spark.sql.SparkSession,
+  private def fromSource(
       edges: org.apache.spark.sql.DataFrame,
       src: Long,
-      hops: Int): org.apache.spark.sql.DataFrame = {
-    var dist = s.range(1)
-      .select(lit(src).as("pk"), lit(0).cast("int").as("dist"))
-      .truncateLineage()
-    for (h <- 1 to hops) {
-      val next = dist.filter(col("dist") === h - 1)
-        .join(edges, col("pk") === col("src"))
-        .select(col("dst").as("pk"), lit(h).cast("int").as("dist"))
-      dist = dist.unionByName(next)
-        .groupBy(col("pk")).agg(min(col("dist")).as("dist"))
-        .truncateLineage()
-    }
-    dist
+      rounds: Int,
+      carry: org.apache.spark.sql.Column,
+      out: org.apache.spark.sql.Column)
+      : (org.apache.spark.sql.DataFrame, Int, Seq[Long], Boolean) = {
+    val source = edges.sparkSession.range(1).select(lit(src).as("pk"))
+    val init = edges.select(col("dst").as("pk")).distinct()
+      .filter(col("pk") =!= src)
+      .select(col("pk"), lit(Long.MaxValue).as("label"))
+      .unionByName(source.select(col("pk"), lit(0L).as("label")))
+    val (labels, r, counts, done) =
+      ccConvergedFrom(init, edges, maxRounds = rounds, seed = Some(source), carry = carry)
+    (labels.filter(col("label") < Long.MaxValue).select(col("pk"), out), r, counts, done)
   }
+
+  /** Frontier BFS: hop distances (pk, dist) within `hops` of `src`. A
+    * label falls only in the round its node is first reached, so each
+    * round's delta is exactly the previous frontier.
+    */
+  private[graft] def bfsFrom(
+      edges: org.apache.spark.sql.DataFrame,
+      src: Long,
+      hops: Int): (org.apache.spark.sql.DataFrame, Int, Seq[Long], Boolean) =
+    fromSource(edges, src, hops, col("label") + 1, col("label").cast("int").as("dist"))
 
   /** Synchronous min-label propagation for `rounds` rounds (the Pregel
     * hash-min kernel); labels init to node ids. This is [[ccConverged]]
@@ -1059,57 +1077,15 @@ object Graph {
     ccConverged(edges.select(col("src").as("pk")).distinct(), edges, maxRounds = rounds)._1
 
   /** Delta-optimized bounded Bellman-Ford (SPFA shape) over a weighted
-    * edge relation (src, dst, w): each round relaxes only last round's
-    * improved nodes; after R rounds the cost is exactly min over
-    * ≤R-edge paths.
+    * edge relation (src, dst, w): costs (pk, cost) from `src`. Each round
+    * relaxes only last round's improved nodes; after R rounds the cost is
+    * exactly min over ≤R-edge paths.
     */
   private[graft] def ssspFrom(
-      s: org.apache.spark.sql.SparkSession,
       edges: org.apache.spark.sql.DataFrame,
       src: Long,
-      rounds: Int): org.apache.spark.sql.DataFrame = {
-    var dist = s.range(1)
-      .select(lit(src).as("pk"), lit(0L).as("cost"))
-      .truncateLineage()
-    var delta = dist
-    for (_ <- 1 to rounds) {
-      val relaxed = delta
-        .join(edges, col("pk") === col("src"))
-        .select(col("dst").as("pk"), (col("cost") + col("w")).as("cost"))
-        .groupBy(col("pk")).agg(min(col("cost")).as("cost"))
-      val improved = relaxed
-        .join(dist.select(col("pk"), col("cost").as("__old")), Seq("pk"), "left")
-        .filter(col("__old").isNull || col("cost") < col("__old"))
-        .select(col("pk"), col("cost"))
-        .truncateLineage()
-      dist = dist.unionByName(improved)
-        .groupBy(col("pk")).agg(min(col("cost")).as("cost"))
-        .truncateLineage()
-      delta = improved
-    }
-    dist
-  }
-
-  /** The textbook FULL-relation propagation (every node re-propagates
-    * every round) — kept as the Stress graph tier's honest
-    * O(E)-per-round baseline against which the delta forms' wave
-    * tracking is measured; not registered.
-    */
-  private[graft] def labelPropFull(
-      edges: org.apache.spark.sql.DataFrame, rounds: Int): org.apache.spark.sql.DataFrame = {
-    var labels = edges.select(col("src").as("pk")).distinct()
-      .select(col("pk"), col("pk").as("label"))
-      .truncateLineage()
-    for (_ <- 1 to rounds) {
-      val fromNbr = edges
-        .join(labels, col("src") === col("pk"))
-        .select(col("dst").as("pk"), col("label"))
-      labels = labels.unionByName(fromNbr)
-        .groupBy(col("pk")).agg(min(col("label")).as("label"))
-        .truncateLineage()
-    }
-    labels
-  }
+      rounds: Int): (org.apache.spark.sql.DataFrame, Int, Seq[Long], Boolean) =
+    fromSource(edges, src, rounds, col("label") + col("w"), col("label").as("cost"))
 
   /** Count closed triangles over a degree-ORIENTED edge list (src, dst).
     * Orientation guarantees each triangle a<b<c appears as exactly the

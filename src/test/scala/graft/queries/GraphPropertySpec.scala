@@ -14,7 +14,9 @@ import graft.SparkSpec
   * exactly, labeled by component minimum. Random graphs sweep the
   * shapes the fixture co-purchase graph (one dense blob) and the
   * planted spec graphs (chains, stars) can't: mixed-size components,
-  * isolated nodes, dense cores with whiskers.
+  * isolated nodes, dense cores with whiskers. The single-source kernels
+  * on the same min-propagation kernel ([[Graph.bfsFrom]],
+  * [[Graph.ssspFrom]]) must reproduce a JVM bounded Bellman-Ford.
   */
 class GraphPropertySpec extends SparkSpec {
 
@@ -36,6 +38,19 @@ class GraphPropertySpec extends SparkSpec {
     }
     (0 until n).map(i => i.toLong -> find(i).toLong).toMap
   }
+
+  /** Reference: synchronous Bellman-Ford bounded at `rounds` rounds over
+    * directed weighted edges: after round r every reached node holds the
+    * minimum cost over walks of at most r edges.
+    */
+  private def boundedBellmanFord(
+      src: Long, edges: Seq[(Long, Long, Long)], rounds: Int): Map[Long, Long] =
+    (1 to rounds).foldLeft(Map(src -> 0L)) { (prev, _) =>
+      edges.foldLeft(prev) { case (next, (a, b, w)) =>
+        prev.get(a).filter(c => next.get(b).forall(c + w < _))
+          .fold(next)(c => next.updated(b, c + w))
+      }
+    }
 
   test("star contraction and hash-min fixpoint both equal union-find on random graphs") {
     import spark.implicits._
@@ -92,6 +107,34 @@ class GraphPropertySpec extends SparkSpec {
         val got = warm.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         assert(got == unionFind(n, all),
           s"trial $trial: warm repair != union-find on the merged graph")
+      }
+    }
+  }
+
+  test("BFS and bounded SSSP equal a JVM bounded Bellman-Ford on random weighted graphs") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(31337)
+    for (trial <- 0 until 4) {
+      val n = 20 + rnd.nextInt(40)
+      val pairs = Seq.fill(n / 2 + rnd.nextInt(2 * n)) {
+        (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)
+      }.filter { case (a, b) => a != b } :+ ((1000L, 1001L)) // a component no source reaches
+      val weighted = pairs.map { case (a, b) => (a, b, 1L + rnd.nextInt(9)) }
+      val sym = weighted ++ weighted.map { case (a, b, w) => (b, a, w) }
+      val edges = sym.toDF("src", "dst", "w").localCheckpoint(true)
+      // odd trials start at a node with no edge
+      val src = if (trial % 2 == 0) pairs.head._1 else n.toLong
+      for (rounds <- Seq(1, 2, 64)) {
+        val ctx = s"trial $trial (n=$n, src=$src, rounds=$rounds)"
+        val (bfs, _, _, bfsDone) = Graph.bfsFrom(edges, src, rounds)
+        val hops = bfs.collect().map(r => r.getLong(0) -> r.getInt(1).toLong).toMap
+        assert(hops == boundedBellmanFord(src, sym.map { case (a, b, _) => (a, b, 1L) }, rounds),
+          s"$ctx: BFS != bounded Bellman-Ford at unit weights")
+        val (sssp, _, _, ssspDone) = Graph.ssspFrom(edges, src, rounds)
+        val costs = sssp.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(costs == boundedBellmanFord(src, sym, rounds), s"$ctx: SSSP != bounded Bellman-Ford")
+        assert(!costs.contains(1000L))
+        if (rounds == 64) assert(bfsDone && ssspDone, s"$ctx: hit the round cap")
       }
     }
   }

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.{Registry, SparkSpec}
+import graft.{Registry, SparkSpec, Timing}
 
 /** Pinned-geometry checks for the graph family. The registered queries are
   * oracle-checked against DuckDB on the fixture; these specs pin the math
@@ -328,8 +328,10 @@ class GraphSpec extends SparkSpec {
 
   test("kernel job counts: ccConverged, kCore and ccStar on the planted graphs") {
     // Each round is ONE checkpoint action with its count observed inside
-    // it; ccStar adds its symmetric-difference probe on a count-equal
-    // round. The pin is on SQL executions (one per action), which are
+    // it, after one for the init; ccStar adds its symmetric-difference
+    // probe on a count-equal round. bfsFrom and ssspFrom run the
+    // ccConverged kernel from source 0: 1 and 2 are reached in rounds 1
+    // and 2, and round 3 is empty. The pin is on SQL executions (one per action), which are
     // exact: the Spark job total also counts every AQE shuffle/broadcast
     // stage, and AQE materializes independent stages concurrently, so the
     // total varies run to run (kCore 32-35, ccStar 22-24 jobs over 8
@@ -340,17 +342,22 @@ class GraphSpec extends SparkSpec {
     val nodes = Seq(0L, 1L, 2L, 10L, 11L, 99L).toDF("pk").localCheckpoint(true)
     val peel = undirected((0L until 9L).map(i => (i, i + 1)) ++
       Seq((100L, 101L), (101L, 102L), (100L, 102L)))
-    def actions(jobs: Seq[java.util.Properties]) =
-      jobs.map(p => Option(p.getProperty("spark.sql.execution.id"))).distinct.size
+    val weighted = twoComp.withColumn("w", lit(1L) + pmod(col("src") + col("dst"), lit(5L)))
     val ((_, ccRounds, _, _), ccJobs) = jobsOf(Graph.ccConverged(nodes, twoComp))
     val ((_, kRounds, _), kJobs) = jobsOf(Graph.kCore(peel, k = 2, maxRounds = 64))
     val ((_, starRounds, _), starJobs) = jobsOf(Graph.ccStar(nodes, twoComp))
-    info(s"jobs: ccConverged ${ccJobs.size}, kCore ${kJobs.size}, ccStar ${starJobs.size}")
+    val ((_, bfsRounds, _, _), bfsJobs) = jobsOf(Graph.bfsFrom(twoComp, 0L, hops = 64))
+    val ((_, ssspRounds, _, _), ssspJobs) = jobsOf(Graph.ssspFrom(weighted, 0L, rounds = 64))
+    info(s"jobs: ccConverged ${ccJobs.size}, kCore ${kJobs.size}, ccStar ${starJobs.size}, " +
+      s"bfsFrom ${bfsJobs.size}, ssspFrom ${ssspJobs.size}")
     val measured = Seq(
-      ("ccConverged", ccRounds, actions(ccJobs)),
-      ("kCore", kRounds, actions(kJobs)),
-      ("ccStar", starRounds, actions(starJobs)))
-    assert(measured == Seq(("ccConverged", 3, 4), ("kCore", 6, 7), ("ccStar", 2, 5)))
+      ("ccConverged", ccRounds, Timing.executions(ccJobs)),
+      ("kCore", kRounds, Timing.executions(kJobs)),
+      ("ccStar", starRounds, Timing.executions(starJobs)),
+      ("bfsFrom", bfsRounds, Timing.executions(bfsJobs)),
+      ("ssspFrom", ssspRounds, Timing.executions(ssspJobs)))
+    assert(measured == Seq(("ccConverged", 3, 4), ("kCore", 6, 7), ("ccStar", 2, 5),
+      ("bfsFrom", 3, 4), ("ssspFrom", 3, 4)))
   }
 
   test("Ckpt.truncateCounted: the observed in-job count equals a post-hoc count on both truncation paths") {
